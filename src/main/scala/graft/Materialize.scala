@@ -128,7 +128,13 @@ object Materialize {
     * for one 100k-row parse). Materializing first runs the projection
     * once; the sampler and the sort then read the narrow materialized
     * blocks. The sort itself — the declared presentation order — is
-    * unchanged, so results are byte-identical. */
+    * unchanged, so results are byte-identical.
+    *
+    * Contract: a final presentation sort only — never inside an iterative
+    * loop. Under [[DirKey]] it makes NO cut (see below), so a loop that
+    * leaned on it to truncate lineage would grow its plan every round.
+    * The loop tools are [[lazyCut]] and [[apply]] (`.materialize()`),
+    * which cut in both modes. */
   def sortedOnce(df: DataFrame,
       keys: org.apache.spark.sql.Column*): DataFrame =
     // lazyCut, not an eager cut (r19): the range sampler itself reads

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Engine configuration (SURVEY §2.1 C1) — the reference's ~25 env vars /
@@ -248,30 +248,43 @@ final case class TransformStats(
   * The reference runs two stages with a shared-filesystem staging layer in
   * between (append-only files + flocks, s3logs/src/utils.rs:455-1520)
   * because it has no shuffle. Under Spark the staging layer IS the
-  * shuffle: parse → bucket → dedup (one hash-agg shuffle keyed by the
-  * partition tuple) → partitioned parquet write. Locks, `.processing`
-  * renames, orphan merge-back and upload retry (R1–R3, K4) all collapse
-  * into Spark's task retry + output-committer protocol.
+  * shuffle: parse → bucket → dedup → partitioned parquet write. Locks,
+  * `.processing` renames, orphan merge-back and upload retry (R1–R3, K4)
+  * all collapse into Spark's task retry + output-committer protocol.
   *
-  * Scale design: the only wide dependency is the dedup exchange, keyed by
-  * (RequestID, agg window) — effectively uniform. The write is
-  * repartitioned by the output partition columns so each Hive partition is
-  * produced by its own tasks (no 1000-way small-file fan-out per task),
-  * while `maxRecordsPerFile` bounds file size the way ST4's rotation does.
+  * Scale design: a default run is a single pass — scan → parse → ONE
+  * exchange → dedup → sort → partitioned parquet write, with nothing
+  * cached. The exchange is the sink's: it hash-partitions by the output
+  * partition values of each row's aggregate WINDOW (`agg_ts` on the local
+  * clock) plus a bounded RequestID salt. Those key columns are functions
+  * of the D1 key (RequestID, agg_ts), so adding them to the dedup key
+  * leaves D1 unchanged, and the exchange already clusters the dedup —
+  * Spark plans no second one. When the window nests in the output
+  * partition (the default 900 s in hourly dirs) the key values equal the
+  * row's own partition values, so each Hive partition is written by its
+  * own ≤ sinkSaltBuckets tasks (no 1000-way small-file fan-out per task);
+  * a window that straddles partitions (7200 s) puts the few dirs it spans
+  * on one task. `maxRecordsPerFile` bounds file size the way ST4's
+  * rotation does. [[TransformStats]] come from two `Dataset.observe`
+  * counters in the write job's result stage, not from extra count jobs.
   */
 object Transform {
 
-  /** K3 partition-column derivation: event time shifted onto the
-    * configured local clock — zone RULES via `from_utc_timestamp` when
-    * `tzZone` is set (T3/r17: DST-correct wall time, codegen'd zone
-    * lookup), else the fixed-offset arithmetic (the reference's shipped
-    * default is a DST-less POSIX tz, so the pure-arithmetic path stays
-    * the fast default). */
-  private def tzShifted(cfg: EtlConfig) = cfg.tzZone match {
-    case Some(zone) => from_utc_timestamp(col("ts"), zone)
-    case None =>
-      timestamp_seconds(unix_timestamp(col("ts")) + cfg.tzOffsetSeconds)
+  /** K3 local wall clock of a timestamp column: zone RULES via
+    * `from_utc_timestamp` when `tzZone` is set (T3/r17: DST-correct wall
+    * time, codegen'd zone lookup), else the fixed-offset arithmetic (the
+    * reference's shipped default is a DST-less POSIX tz, so the
+    * pure-arithmetic path stays the fast default). */
+  private def localClock(cfg: EtlConfig, t: Column) = cfg.tzZone match {
+    case Some(zone) => from_utc_timestamp(t, zone)
+    case None => timestamp_seconds(unix_timestamp(t) + cfg.tzOffsetSeconds)
   }
+
+  /** K3 output partition columns and their `date_format` patterns. */
+  private def partitionFormats(cfg: EtlConfig): Seq[(String, String)] =
+    if (cfg.hourlyPartitions)
+      Seq("year" -> "yyyy", "month" -> "MM", "day" -> "dd", "hour" -> "HH")
+    else Seq("dt" -> "yyyyMMdd")
 
   /** T2: align-left tumbling bucket (`ts - ts % N`) on the local wall
     * clock, returned as epoch seconds (UTC) of the bucket start.
@@ -300,18 +313,25 @@ object Transform {
   def pipeline(lines: DataFrame, cfg: EtlConfig): DataFrame =
     bucketAndDedup(AccessLogParser.parse(lines, dropMalformed = true), cfg)
 
-  /** bucket + dedup over an already-parsed frame (lets the batch run
-    * share one cached parse with its stats/quarantine branches). */
-  def bucketAndDedup(parsed: DataFrame, cfg: EtlConfig): DataFrame = {
-    val bucketed = parsed
-      .withColumn("OrigBucket",
-        if (cfg.mergeOrigBuckets) lit("ALLBUCKETS") else col("Bucket"))
-      .withColumn("agg_ts", bucketTs(cfg, cfg.aggregateSeconds))
-    // D1: dedup key is (RequestID, window), NOT global RequestID — the
-    // reference resets its seen-set at aggregate_second bounds
-    // (s3logs/src/utils.rs:1034-1045).
-    if (cfg.dedup) bucketed.dropDuplicates("RequestID", "agg_ts") else bucketed
-  }
+  /** bucket + dedup over an already-parsed frame. */
+  def bucketAndDedup(parsed: DataFrame, cfg: EtlConfig): DataFrame =
+    dedup(bucket(parsed, cfg), cfg)
+
+  private def bucket(parsed: DataFrame, cfg: EtlConfig) = parsed
+    .withColumn("OrigBucket",
+      if (cfg.mergeOrigBuckets) lit("ALLBUCKETS") else col("Bucket"))
+    .withColumn("agg_ts", bucketTs(cfg, cfg.aggregateSeconds))
+
+  /** D1: the dedup key is (RequestID, window), NOT global RequestID — the
+    * reference resets its seen-set at aggregate_second bounds
+    * (s3logs/src/utils.rs:1034-1045). `refine` columns must be functions
+    * of that key: they add grouping columns (so a partitioning on them
+    * satisfies the dedup's distribution) without changing which rows are
+    * duplicates. */
+  private def dedup(df: DataFrame, cfg: EtlConfig,
+      refine: Seq[String] = Nil): DataFrame =
+    if (cfg.dedup) df.dropDuplicates(Seq("RequestID", "agg_ts") ++ refine)
+    else df
 
   /** Full batch run: read text logs, transform, write partitioned parquet.
     * Returns conservation stats (M2). */
@@ -335,86 +355,51 @@ object Transform {
             "yyyy-MM-dd'T'HH:mm:ss")))
     val lines = reader.textFile(in: _*).toDF("value")
 
-    // ONE scan+parse of the input, cached; every side branch (counts,
-    // archive, quarantine) and the main write read the cached frame —
-    // at 100 TB each avoided re-scan is a full-corpus read. `_raw` (the
-    // original line, ~half the cached bytes — it duplicates every parsed
-    // field) rides the cache ONLY when a branch will actually read it:
-    // with no archive and no quarantine configured, caching it is pure
-    // memory-envelope waste (measured: the 10M-line ScaleEtl cell OOMs
-    // an 8 GB local[32] JVM with _raw cached, fits without).
+    // Malformed rows stay in (ts null) so the counters below see them.
+    // Only the archive and quarantine branches re-read the parse, for
+    // the raw line: then — and only then — it is cached, `_raw` included.
+    // A default run caches nothing (a cached `_raw` once OOMed the
+    // 10M-line ScaleEtl cell in an 8 GB local[32] JVM; SCALE.md).
     val keepRaw = cfg.archiveDir.nonEmpty || cfg.quarantineDir.nonEmpty
-    val parsedAll = AccessLogParser
-      .parse(lines, dropMalformed = false, keepRaw = keepRaw).cache()
-    val inputLines = parsedAll.count() // parse is 1:1 with input lines
-    val malformed = parsedAll.filter(col("ts").isNull).count()
-
-    // S4: optional gzip archive of the raw lines (transform_cleanup,
-    // s3logs/src/utils.rs:1273-1294).
-    cfg.archiveDir.foreach { dir =>
-      parsedAll.select(col("_raw").as("value"))
-        .write.mode(SaveMode.Append).option("compression", "gzip").text(dir)
+    val parsed = {
+      val p = AccessLogParser.parse(lines, dropMalformed = false,
+        keepRaw = keepRaw)
+      if (keepRaw) p.cache() else p
     }
-    // F1 rejects are quarantined raw (the PERMISSIVE badRecords pattern),
-    // not silently dropped.
-    cfg.quarantineDir.foreach { dir =>
-      parsedAll.filter(col("ts").isNull).select(col("_raw"))
-        .write.mode(SaveMode.Append).text(dir)
-    }
-
-    // Cache the post-dedup frame: its count IS this run's outputRows (the
-    // sink appends exactly these rows), and the write below reuses the
-    // cached shuffle output. A run-sized cache (spills under
-    // MEMORY_AND_DISK) — never a read-back of the whole output lake,
-    // which at 100 TB would cost two full-lake scans per batch.
-    val deduped =
-      bucketAndDedup(parsedAll.filter(col("ts").isNotNull).drop("_raw"), cfg)
-        .cache()
-    val outputRows = deduped.count()
-    val partCols =
-      if (cfg.hourlyPartitions) Seq("year", "month", "day", "hour")
-      else Seq("dt")
-    val local = tzShifted(cfg)
-    val withParts =
-      if (cfg.hourlyPartitions)
-        deduped
-          .withColumn("year", date_format(local, "yyyy"))
-          .withColumn("month", date_format(local, "MM"))
-          .withColumn("day", date_format(local, "dd"))
-          .withColumn("hour", date_format(local, "HH"))
-      else deduped.withColumn("dt", date_format(local, "yyyyMMdd"))
-
-    // W1 at the sink: reference-shaped physical schema — real ExtraFieldN
-    // columns instead of the overflow array (s3logs/src/utils.rs:1217-1222)
-    // so Athena/Hive-style readers see the reference's widened contract.
-    // The max overflow width is one cheap agg over this run's cached rows.
-    val sinkShaped =
-      if (!cfg.widenedSink) withParts
-      else {
-        val derived = deduped
-          .agg(coalesce(max(size(col("ExtraFields"))), lit(0)))
-          .head.getInt(0)
-        // a pinned width narrower than the data would silently drop
-        // overflow fields at the sink — refuse loudly instead
-        if (cfg.widenedSinkCols > 0)
-          require(derived <= cfg.widenedSinkCols,
-            s"widenedSinkCols=${cfg.widenedSinkCols} but this batch has " +
-              s"rows with $derived overflow fields — raise the pinned width")
-        val extraCols = math.max(cfg.widenedSinkCols, derived)
-        AccessLogSchema.widened(withParts, extraCols)
+    try {
+      // S4: optional gzip archive of the raw lines (transform_cleanup,
+      // s3logs/src/utils.rs:1273-1294).
+      cfg.archiveDir.foreach { dir =>
+        parsed.select(col("_raw").as("value"))
+          .write.mode(SaveMode.Append).option("compression", "gzip").text(dir)
       }
+      // F1 rejects are quarantined raw (the PERMISSIVE badRecords
+      // pattern), not silently dropped.
+      cfg.quarantineDir.foreach { dir =>
+        parsed.filter(col("ts").isNull).select(col("_raw"))
+          .write.mode(SaveMode.Append).text(dir)
+      }
+      sink(parsed.drop("_raw"), out, cfg)
+    } finally if (keepRaw) parsed.unpersist()
+  }
 
-    // T1's sort exists in the reference to enable its streaming split +
-    // first-wins dedup; post-shuffle we sort within partitions only (no
-    // global exchange) so parquet row groups are time-clustered for
-    // downstream range pruning.
-    //
-    // The repartition key is (partition cols, bounded RequestID salt):
-    // partition cols alone would route a hot hour — guaranteed by
-    // diurnal log traffic — to ONE reducer task regardless of cluster
-    // size (maxRecordsPerFile bounds file size, not task size). The
-    // salt fans each output partition over ≤ sinkSaltBuckets tasks;
-    // RequestID is effectively uniform, so the fan-out is even.
+  /** bucket → sink exchange → dedup → sort → partitioned parquet, one
+    * job chain; the counters ride the write. */
+  private def sink(parsed: DataFrame, out: String,
+      cfg: EtlConfig): TransformStats = {
+    val parts = partitionFormats(cfg)
+    val partCols = parts.map(_._1)
+    def partValues(t: Column, prefix: String) = parts.map { case (name, fmt) =>
+      date_format(localClock(cfg, t), fmt).as(prefix + name)
+    }
+
+    // The sink key: the output partition values of the row's WINDOW, plus
+    // a bounded RequestID salt. Partition values alone would route a hot
+    // hour — guaranteed by diurnal log traffic — to ONE reducer task
+    // regardless of cluster size (maxRecordsPerFile bounds file size, not
+    // task size). The salt fans each output partition over
+    // ≤ sinkSaltBuckets tasks; RequestID is effectively uniform, so the
+    // fan-out is even. Both parts are functions of (RequestID, agg_ts).
     //
     // AQE interaction: coalescePartitions can merge salted sub-splits
     // back together when they are SMALL — at production sizes a hot
@@ -427,15 +412,61 @@ object Transform {
     // test). Cost side: salting multiplies files-per-partition by up
     // to sinkSaltBuckets (one file per reducer per partition dir),
     // bounded and compactable (graft.etl.Compact).
-    val sinkKey = partCols.map(col) ++
-      (if (cfg.sinkSaltBuckets > 1)
-         Seq(pmod(hash(col("RequestID")), lit(cfg.sinkSaltBuckets)))
-       else Nil)
-    sinkShaped
-      .repartition(sinkKey: _*)
-      .sortWithinPartitions(col("ts"))
-      .drop("ts", "agg_ts")
-      .write.mode(SaveMode.Append)
+    val salt =
+      if (cfg.sinkSaltBuckets > 1)
+        Seq(pmod(hash(col("RequestID")), lit(cfg.sinkSaltBuckets)).as("_salt"))
+      else Nil
+    val sinkKey = partCols.map("_k" + _) ++ salt.map(_ => "_salt")
+
+    // W1 at the sink: reference-shaped physical schema — real ExtraFieldN
+    // columns instead of the overflow array (s3logs/src/utils.rs:1217-1222)
+    // so Athena/Hive-style readers see the reference's widened contract.
+    // The width must be known before the write, so it is one cheap agg
+    // over this run's well-formed lines (a superset of the kept rows:
+    // it never narrows below the data).
+    val extraCols =
+      if (!cfg.widenedSink) 0
+      else {
+        val derived = parsed.filter(col("ts").isNotNull)
+          .agg(coalesce(max(size(col("ExtraFields"))), lit(0)))
+          .head.getInt(0)
+        // a pinned width narrower than the data would silently drop
+        // overflow fields at the sink — refuse loudly instead
+        if (cfg.widenedSinkCols > 0)
+          require(derived <= cfg.widenedSinkCols,
+            s"widenedSinkCols=${cfg.widenedSinkCols} but this batch has " +
+              s"rows with $derived overflow fields — raise the pinned width")
+        math.max(cfg.widenedSinkCols, derived)
+      }
+
+    // Both counters sit after the exchange, in the write job's result
+    // stage, where Spark applies each task's update exactly once.
+    val inObs = Observation("etl_in")
+    val outObs = Observation("etl_out")
+    val deduped = dedup(
+      bucket(parsed, cfg)
+        .select(col("*") +:
+          (partValues(timestamp_seconds(col("agg_ts")), "_k") ++ salt): _*)
+        .repartition(sinkKey.map(col): _*)
+        .observe(inObs, count(lit(1)).as("lines"),
+          count_if(col("ts").isNull).as("malformed"))
+        .filter(col("ts").isNotNull),
+      cfg, sinkKey)
+      .observe(outObs, count(lit(1)).as("rows"))
+
+    // T1's sort exists in the reference to enable its streaming split +
+    // first-wins dedup; post-shuffle we sort within partitions only (no
+    // global exchange). Sorting by the partition columns first satisfies
+    // the writer's required ordering, so Spark adds no sort of its own
+    // and the trailing `ts` survives: parquet row groups are
+    // time-clustered for downstream range pruning.
+    val rows = deduped
+      .select(col("*") +: partValues(col("ts"), ""): _*)
+      .sortWithinPartitions((partCols :+ "ts").map(col): _*)
+      .drop(Seq("ts", "agg_ts") ++ sinkKey: _*)
+    val sinkShaped =
+      if (cfg.widenedSink) AccessLogSchema.widened(rows, extraCols) else rows
+    sinkShaped.write.mode(SaveMode.Append)
       .option("compression", cfg.compression)
       .option("parquet.writer.version", cfg.parquetWriterVersion)
       .option("parquet.block.size", cfg.parquetBlockSize)
@@ -443,11 +474,13 @@ object Transform {
       .partitionBy(partCols: _*)
       .parquet(out)
 
-    deduped.unpersist()
-    parsedAll.unpersist()
+    val seen = inObs.get
+    val lines = seen("lines").asInstanceOf[Long]
+    val malformed = seen("malformed").asInstanceOf[Long]
+    val outputRows = outObs.get("rows").asInstanceOf[Long]
     TransformStats(
-      inputLines = inputLines, malformedLines = malformed,
-      dedupedLines = inputLines - malformed - outputRows,
+      inputLines = lines, malformedLines = malformed,
+      dedupedLines = lines - malformed - outputRows,
       outputRows = outputRows)
   }
 }

@@ -46,8 +46,9 @@ import org.apache.spark.sql.SparkSessionExtensions
   * representatives), insertion keeps the buffer ascending by id, and
   * merge replays one buffer into the other — any partial-aggregation
   * grouping yields the same members (spec-pinned vs the join-back
-  * reference). Null id/mh rows are skipped (the SQL aggregate
-  * convention; signature rows never carry them). `cap` must be a
+  * reference). Null-id rows are skipped (the SQL aggregate
+  * convention); a null-mh row counts into `bucket_n` but is not a
+  * member, so the count stays an exact occupancy either way. `cap` must be a
   * foldable positive literal: a per-row cap would make partial buffers
   * unmergeable. */
 case class BucketAgg(
@@ -89,10 +90,14 @@ case class BucketAgg(
     mhExpr match {
       case Some(me) =>
         val mh = me.eval(input)
-        if (id != null && mh != null)
+        if (id != null) {
+          // a null-mh row still occupies the bucket: count it, so
+          // bucket_n stays exact, but it has no signature to pair on
+          if (mh == null) b.total += 1
           // copy out of the (reused) input row before buffering
-          b.offer(id.asInstanceOf[Long],
+          else b.offer(id.asInstanceOf[Long],
             mh.asInstanceOf[ArrayData].toLongArray())
+        }
       case None =>
         if (id != null) b.offer(id.asInstanceOf[Long], null)
     }

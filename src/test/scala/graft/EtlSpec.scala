@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions._
 
 import graft.etl._
@@ -438,6 +439,141 @@ class EtlSpec extends SparkSpec {
       spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", advisory)
       spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", minPart)
     }
+  }
+
+  // ---- the fused single-pass sink ----------------------------------------
+
+  /** Every SQL action `body` runs, as (action name, executed plan). */
+  private def actionsOf(body: => Unit): Seq[(String, SparkPlan)] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.QueryExecution
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        seen.add(f -> qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      // the listener bus is async: wait for the write, then for stragglers
+      val deadline = System.currentTimeMillis + 30000
+      while (seen.isEmpty && System.currentTimeMillis < deadline)
+        Thread.sleep(50)
+      Thread.sleep(500)
+    } finally spark.listenerManager.unregister(listener)
+    seen.asScala.toSeq
+  }
+
+  /** All nodes of an executed plan, through AQE and its query stages. */
+  private def planNodes(p: SparkPlan): Seq[SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    p match {
+      case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+      case q: QueryStageExec => q +: planNodes(q.plan)
+      case n => n +: n.children.flatMap(planNodes)
+    }
+  }
+
+  test("default transform is one action with one exchange and no cache; " +
+    "row groups are time-clustered") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft-fused").toString
+    val in = s"$tmp/in"; val out = s"$tmp/out"
+    // four hours of shuffled lines with redeliveries and two malformed
+    val bad = Seq("not a log line", "a b [not-a-time] c")
+    (LogGen.entries(3000, rangeSec = 4 * 3600, seed = 81, dupFrac = 0.1)
+      .map(_.line) ++ bad).toDF("value").repartition(3).write.text(in)
+    var stats: TransformStats = null
+    val actions = actionsOf { stats = Transform.run(spark, Seq(in), out) }
+    assert(actions.size == 1,
+      s"expected the write alone, saw: ${actions.map(_._1).mkString(", ")}")
+    val nodes = planNodes(actions.head._2)
+    assert(SparkSpec.shuffleCount(actions.head._2) == 1,
+      s"expected one exchange:\n${actions.head._2}")
+    assert(!nodes.exists(
+      _.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryTableScanExec]),
+      s"a default run caches nothing:\n${actions.head._2}")
+    assert(stats.inputLines == 3000 + stats.dedupedLines + 2)
+    assert(stats.malformedLines == 2 && stats.outputRows == 3000)
+    assert(stats.dedupedLines > 0)
+    // T1: within every output file, Time is non-decreasing
+    def parquetFiles(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles.toSeq.flatMap(parquetFiles)
+      else if (f.getName.endsWith(".parquet")) Seq(f) else Nil
+    val files = parquetFiles(new java.io.File(out))
+    assert(files.size >= 4, s"${files.size} files for four hours")
+    files.foreach { f =>
+      val times = spark.read.parquet(f.getPath)
+        .select(to_timestamp($"Time", AccessLogSchema.timeFormat))
+        .collect().map(_.getTimestamp(0).getTime).toSeq
+      val inversions = times.zip(times.drop(1)).count { case (a, b) => a > b }
+      assert(inversions == 0, s"$inversions rows of $f are out of time order")
+    }
+  }
+
+  test("fused sink equals Transform.pipeline for a window straddling " +
+    "hour dirs and across a DST fall-back, with conservation") {
+    import spark.implicits._
+    def epoch(iso: String) = java.time.Instant.parse(iso).getEpochSecond
+    val cases = Seq(
+      // 7200 s windows: one window spans two hour dirs
+      ("straddle", EtlConfig(aggregateSeconds = 7200),
+        LogGen.entries(1500, rangeSec = 5 * 3600, seed = 82, dupFrac = 0.15)),
+      // America/New_York 2024-11-03: the local 01:xx hour repeats
+      ("dst", EtlConfig(tzZone = Some("America/New_York")),
+        LogGen.entries(1500, t0 = epoch("2024-11-03T04:30:00Z"),
+          rangeSec = 3 * 3600, seed = 83, dupFrac = 0.15)))
+    cases.foreach { case (name, cfg, entries) =>
+      val tmp = Files.createTempDirectory(s"graft-fused-$name").toString
+      val in = s"$tmp/in"; val out = s"$tmp/out"
+      val lines = entries.map(_.line).toDF("value")
+      lines.repartition(3).write.text(in)
+      val stats = Transform.run(spark, Seq(in), out, cfg)
+      val zone = cfg.tzZone.getOrElse("UTC")
+      val local = from_utc_timestamp($"ts", zone)
+      val expected = Transform.pipeline(lines, cfg)
+        .withColumn("year", date_format(local, "yyyy").cast("int"))
+        .withColumn("month", date_format(local, "MM").cast("int"))
+        .withColumn("day", date_format(local, "dd").cast("int"))
+        .withColumn("hour", date_format(local, "HH").cast("int"))
+        .drop("ts", "agg_ts")
+      val lake = spark.read.parquet(out)
+        .select(expected.columns.map(col).toSeq: _*)
+      // row multisets as JSON: exceptAll over the dedup's first()
+      // aggregate trips a Spark 4 attribute-binding error
+      def rowsOf(df: org.apache.spark.sql.DataFrame) = df.toJSON.collect().sorted.toSeq
+      assert(rowsOf(lake) == rowsOf(expected),
+        s"$name: lake differs from Transform.pipeline")
+      assert(stats.inputLines == entries.size && stats.malformedLines == 0)
+      assert(stats.outputRows == 1500 && lake.count() == 1500, s"$name: $stats")
+      assert(stats.inputLines ==
+        stats.malformedLines + stats.dedupedLines + stats.outputRows)
+    }
+  }
+
+  test("conservation holds on the cached path: archive and quarantine " +
+    "both on") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft-keepraw").toString
+    val in = s"$tmp/in"; val out = s"$tmp/out"
+    val arch = s"$tmp/archive"; val quar = s"$tmp/bad"
+    val bad = Seq("totally not a log line", "x y [not-a-time] z")
+    val good = LogGen.lines(400, seed = 84, dupFrac = 0.2)
+    (good ++ bad).toDF("value").repartition(2).write.text(in)
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
+    val stats = Transform.run(spark, Seq(in), out, EtlConfig(
+      archiveDir = Some(arch), quarantineDir = Some(quar)))
+    assert(stats.inputLines == good.size + 2 && stats.malformedLines == 2)
+    assert(stats.outputRows == 400 && spark.read.parquet(out).count() == 400)
+    assert(stats.inputLines ==
+      stats.malformedLines + stats.dedupedLines + stats.outputRows)
+    assert(spark.read.text(arch).count() == stats.inputLines)
+    assert(spark.read.text(quar).collect().map(_.getString(0)).toSet == bad.toSet)
+    assert(spark.sparkContext.getPersistentRDDs.size == cachedBefore,
+      "the run must release its parse cache")
   }
 
   test("merge-orig-buckets collapses the bucket key (A3)") {
