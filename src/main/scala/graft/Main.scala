@@ -1,9 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{avg, coalesce, col, count, count_distinct, expr, lit, max, sum, when}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.etl.{AccessLogParser, Compact, EtlConfig, StreamingTransform, Transform}
+import graft.queries.{DedupQueries, DocumentQueries, EmbeddingQueries, QueryConf}
 
 /** CLI entry point — the reference's `s3logs` binary surface
   * (s3logs/src/main.rs:7-48) re-expressed over the Spark engine:
@@ -87,6 +89,16 @@ import graft.etl.{AccessLogParser, Compact, EtlConfig, StreamingTransform, Trans
   * ingest → spandedup → curate → decontam → pack (pinned end-to-end by
   * MainSpec's composition test).
   *
+  * Every verb has one front end. Its flags are declared once in
+  * [[verbFlags]]; any other flag is a usage error, so a typo never runs
+  * at a default. Bounded numeric flags share one reader that refuses
+  * unparsable and out-of-range values. Every verb that writes an
+  * artifact refuses an output dir that equals, aliases (symlink, dot
+  * segments) or nests with any of its input dirs, before it reads or
+  * writes anything, because overwrite would delete the input; and it
+  * writes through one writer that applies overwrite, the configured
+  * compression and maxRecordsPerFile.
+  *
   * Config comes from the process environment via [[EtlConfig.fromEnv]] —
   * the reference's full env vocabulary, unknown S3LOGS_* keys rejected
   * loudly. The reference's `-t threads` knob maps to the session's core
@@ -97,7 +109,7 @@ import graft.etl.{AccessLogParser, Compact, EtlConfig, StreamingTransform, Trans
   */
 object Main {
 
-  private val usage =
+  private[graft] val usage =
     """usage:
       |  graft.Main aggregate s3 -r <region> -b <bucket> -k <key>
       |  graft.Main aggregate local <input>...
@@ -129,6 +141,46 @@ object Main {
       |      (writes a MANIFEST (doc_id, n_paras, n_dropped, salvaged), not a
       |       corpus — join it back on doc_id like a spandedup manifest)""".stripMargin
 
+  /** A verb's flag vocabulary: flags that take a value, and switches that
+    * take none. */
+  private[graft] final case class Flags(valued: Set[String] = Set.empty,
+      switches: Set[String] = Set.empty) {
+    def all: Set[String] = valued ++ switches
+  }
+
+  /** Every verb and its flags, declared once next to [[usage]] (MainSpec
+    * checks that the two agree). [[run]] dispatches only these verbs, and
+    * [[parse]] refuses any flag a verb does not declare. */
+  private[graft] val verbFlags: Map[String, Flags] = Map(
+    "aggregate" -> Flags(Set("-r", "-b", "-k")),
+    "transform" -> Flags(Set("-o", "--loop", "--iterations")),
+    "stream" -> Flags(Set("--queue-dir", "--objects"), Set("--once")),
+    "ingest" -> Flags(Set("--sigs", "--spansigs", "--span-sep",
+      "--winnowsigs", "--repsigs", "--decontam", "--decontam-n",
+      "--quality-min", "--rejects"), Set("--once")),
+    "compact" -> Flags(switches = Compact.sidecarKinds.keySet + "--flat"),
+    "dedup" -> Flags(switches = Set("--best")),
+    "spandedup" -> Flags(Set("--sep")),
+    "curate" -> Flags(Set("--quality-min"), Set("--best")),
+    "decontam" -> Flags(Set("--n")),
+    "bpetrain" -> Flags(Set("--merges", "--min-count")),
+    "tokenize" -> Flags(),
+    "pack" -> Flags(Set("--seq-len")),
+    "overlap" -> Flags(),
+    "select" -> Flags(Set("--frac")),
+    "semdedup" -> Flags(Set("--tau")),
+    "semdecontam" -> Flags(Set("--tau")),
+    "dsir" -> Flags(),
+    "cluster" -> Flags(),
+    "bm25index" -> Flags(),
+    "bm25" -> Flags(Set("--topk")),
+    "ivftrain" -> Flags(),
+    "ivfindex" -> Flags(),
+    "ann" -> Flags(Set("--topk", "--queries", "--nqueries", "--centroids",
+      "--index")),
+    "fuse" -> Flags(Set("--topk")),
+    "salvage" -> Flags(Set("--quality-min", "--sep")))
+
   /** Parse-and-count one input (file, directory, or URI): the reference
     * aggregator's observable effect minus its staging files — under this
     * engine the staging layer IS the transform's shuffle (SURVEY §3.1),
@@ -157,38 +209,48 @@ object Main {
       // previous invocation's (possibly deleted) directory
       case None => spark.conf.unset(Materialize.DirKey)
     }
-    args.toList match {
-      case "aggregate" :: "s3" :: rest =>
-        val opts = flags(rest)
-        val (bucket, key) = (req(opts, "-b"), req(opts, "-k"))
-        // the region flag is APPLIED, not just parsed for arg parity
-        // (main.rs:10-17): it rides the FS config, since an s3a:// path
-        // carries no region of its own
-        spark.sparkContext.hadoopConfiguration
-          .set("fs.s3a.endpoint.region", req(opts, "-r"))
-        val n = aggregateCount(spark, s"s3a://$bucket/$key")
-        Seq(s"$n of lines processed")
-      case "aggregate" :: "local" :: inputs if inputs.nonEmpty =>
-        // EVERY directory arg expands to its plain files (main.rs:60-90
-        // walks each input), preserving the per-FILE printed-count
-        // contract for multi-arg invocations; an unreadable directory
-        // (listFiles == null) reports the failure line, same as any
-        // other bad input
-        inputs.flatMap { in =>
-          def count(path: String): String =
-            try s"${aggregateCount(spark, path)} of lines processed for input $path"
-            catch { case scala.util.control.NonFatal(_) =>
-              s"process failed input $path" } // main.rs:73,86 parity
-          val f = new java.io.File(in)
-          if (f.isDirectory) Option(f.listFiles) match {
-            case Some(fs) =>
-              fs.toSeq.filter(_.isFile).map(_.toString).sorted.map(count)
-            case None => Seq(s"process failed input $in")
+    val (verb, opts) = args.toList match {
+      case v :: rest if verbFlags.contains(v) => (v, parse(v, rest))
+      case _ => fail(usage)
+    }
+    def corpusIn(dir: String) =
+      spark.read.parquet(dir).select(col("doc_id"), col("text"))
+    def vecTable(dir: String) = spark.read.parquet(dir)
+      .select(col("vec_id"),
+        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
+    verb match {
+      case "aggregate" => opts.positional match {
+        case "s3" +: _ =>
+          val (bucket, key) = (req(opts, "-b"), req(opts, "-k"))
+          // the region flag is APPLIED, not just parsed for arg parity
+          // (main.rs:10-17): it rides the FS config, since an s3a:// path
+          // carries no region of its own
+          spark.sparkContext.hadoopConfiguration
+            .set("fs.s3a.endpoint.region", req(opts, "-r"))
+          val n = aggregateCount(spark, s"s3a://$bucket/$key")
+          Seq(s"$n of lines processed")
+        case "local" +: inputs if inputs.nonEmpty =>
+          // EVERY directory arg expands to its plain files (main.rs:60-90
+          // walks each input), preserving the per-FILE printed-count
+          // contract for multi-arg invocations; an unreadable directory
+          // (listFiles == null) reports the failure line, same as any
+          // other bad input
+          inputs.flatMap { in =>
+            def count(path: String): String =
+              try s"${aggregateCount(spark, path)} of lines processed for input $path"
+              catch { case scala.util.control.NonFatal(_) =>
+                s"process failed input $path" } // main.rs:73,86 parity
+            val f = new java.io.File(in)
+            if (f.isDirectory) Option(f.listFiles) match {
+              case Some(fs) =>
+                fs.toSeq.filter(_.isFile).map(_.toString).sorted.map(count)
+              case None => Seq(s"process failed input $in")
+            }
+            else Seq(count(in))
           }
-          else Seq(count(in))
-        }
-      case "transform" :: rest =>
-        val opts = flags(rest)
+        case _ => fail(s"aggregate needs s3 -r/-b/-k or local <input>...\n$usage")
+      }
+      case "transform" =>
         val out = opts.getOrElse("-o",
           env.getOrElse("S3LOGS_TRANSFORM_PARQUET_ROOT_PATH",
             fail("transform needs -o <outDir> or " +
@@ -197,16 +259,15 @@ object Main {
           if (opts.positional.nonEmpty) opts.positional
           else Seq(env.getOrElse("S3LOGS_STAGGING_ROOT_PATH",
             fail("transform needs input paths or $S3LOGS_STAGGING_ROOT_PATH")))
-        opts.named.get("--loop") match {
+        numFlag(verb, opts, "--loop", "an integer", _.toLong, ">= 0")(_ >= 0) match {
           case None =>
             val stats = Transform.run(spark, inputs, out, cfg)
             Seq(s"transform task ended, ${stats.inputLines} lines processed")
           case Some(secs) =>
-            transformLoop(spark, inputs, out, cfg, secs.toLong,
-              opts.named.get("--iterations").map(_.toInt))
+            transformLoop(spark, inputs, out, cfg, secs,
+              intFlag(verb, opts, "--iterations", min = 0))
         }
-      case "ingest" :: rest
-          if flags(rest.filterNot(_ == "--once")).positional.size == 3 =>
+      case "ingest" =>
         // training-corpus ingestion: JSON-lines crawl drop → content-
         // fingerprint dedup within the watermark → lang-partitioned
         // parquet corpus (graft.streaming.DocumentIngest); --once drains
@@ -215,59 +276,44 @@ object Main {
         // micro-batch (the incremental-dedup producer); --spansigs <dir>
         // the d36 SPAN-signature sidecar (paragraphs on --span-sep,
         // default blank line — the incremental span-dedup producer).
-        val iOpts = flags(rest.filterNot(_ == "--once"))
-        val Seq(drop, corpus, checkpoint) = iOpts.positional
-        val ingestStream = graft.streaming.DocumentIngest.stream(spark, drop)
-        val sigDir = iOpts.named.get("--sigs")
-        val spanSigDir = iOpts.named.get("--spansigs")
+        val Seq(drop, corpus, checkpoint) =
+          positional(verb, opts, "<dropDir>", "<corpusDir>", "<checkpointDir>")
+        val sigDir = opts.named.get("--sigs")
+        val spanSigDir = opts.named.get("--spansigs")
         // --winnowsigs <dir>: the d53/d54 winnowed-fp index sidecar —
         // each micro-batch winnows itself once and appends its selected
         // (doc_id, fp, df) rows (df batch-local; global after compact's
         // fold); the standing table is what winnowMatches probes, so
         // the lake is never re-winnowed and never re-censused
-        val winnowDir = iOpts.named.get("--winnowsigs")
+        val winnowDir = opts.named.get("--winnowsigs")
         // --repsigs <dir>: the d16/d24 probe-ready rep-index sidecar —
         // each micro-batch signs itself once and appends rep-grain
         // (fp, rep, mh, bands, bucket_ns, split) rows (rep/occupancy
         // batch-local; global after compact's fold); the standing table
         // is what incrementalMatchesIndexed probes, so the corpus is
         // never re-collapsed or re-bucket-counted per ingest
-        val repSigDir = iOpts.named.get("--repsigs")
+        val repSigDir = opts.named.get("--repsigs")
         // --decontam <dir>: the d39 ingest gate — per micro-batch,
         // disposition the batch's train-side docs against the standing
         // eval n-gram artifact (<dir>/evalsigs) and fold the batch's
         // eval side into it; reports land at <dir>/report/batch=<id>
-        val decontamDir = iOpts.named.get("--decontam")
+        val decontamDir = opts.named.get("--decontam")
         // --decontam-n: the gate's n-gram width (default 8, the d30/d32
         // default); the artifact is self-describing, so a width change
         // against a standing artifact refuses loudly instead of
         // silently matching nothing
-        val decontamN = iOpts.named.get("--decontam-n").map { v =>
-          val dn = try v.toInt catch {
-            case _: NumberFormatException =>
-              fail(s"ingest: --decontam-n must be an integer, got '$v'")
-          }
-          if (dn < 1) fail(s"ingest: --decontam-n must be >= 1, got $v")
-          dn
-        }.getOrElse(8)
+        val decontamN = intFlag(verb, opts, "--decontam-n").getOrElse(8)
         // --quality-min <score>: the ingest-time d09 quality gate —
         // same shared formula curate thresholds, applied per micro-
         // batch BEFORE the corpus append and every sidecar; --rejects
         // <dir> additionally quarantines dropped (doc_id, quality)
         // rows per batch (replay-idempotent overwrite partitions)
-        val qualityMin = iOpts.named.get("--quality-min").map { v =>
-          val q = try v.toDouble catch {
-            case _: NumberFormatException =>
-              fail(s"ingest: --quality-min must be a number, got '$v'")
-          }
-          if (q <= 0.0 || q > 1.0)
-            fail(s"ingest: --quality-min must be in (0, 1], got $v")
-          q
-        }
-        val rejectsDir = iOpts.named.get("--rejects")
+        val qualityMin = fracFlag(verb, opts, "--quality-min")
+        val rejectsDir = opts.named.get("--rejects")
         if (rejectsDir.nonEmpty && qualityMin.isEmpty)
           fail("ingest: --rejects needs --quality-min — without a gate " +
             "nothing is ever rejected")
+        val ingestStream = graft.streaming.DocumentIngest.stream(spark, drop)
         val writer =
           if (sigDir.isEmpty && spanSigDir.isEmpty && decontamDir.isEmpty &&
               qualityMin.isEmpty && winnowDir.isEmpty && repSigDir.isEmpty)
@@ -275,95 +321,78 @@ object Main {
               .writer(ingestStream, corpus, checkpoint)
           else graft.streaming.DocumentIngest.writerWithArtifacts(
             ingestStream, corpus, sigDir, spanSigDir,
-            iOpts.getOrElse("--span-sep", "\n\n"), checkpoint, decontamDir,
+            opts.getOrElse("--span-sep", "\n\n"), checkpoint, decontamDir,
             decontamN, qualityMin, rejectsDir, winnowDir, repSigDir)
-        val query =
-          if (rest.contains("--once"))
-            writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
-          else writer.start()
-        query.awaitTermination()
+        awaitQuery(writer, opts.switches("--once"))
         Seq("ingest query terminated")
-      case "compact" :: lake :: cols
-          if cols.size == 1 && Compact.sidecarKinds.contains(cols.head) =>
-        // sidecar GENERATION compaction: fold every batch= generation of
-        // a signature artifact into one (the artifact's own read-side
-        // fold + conservation check, both defined next to the commit
-        // machinery — Compact.sidecarKinds). Stops read-side fold cost
-        // and small-file count growing with ingest-batch count forever.
-        val (foldFn, conserveFn) = Compact.sidecarKinds(cols.head)
-        val sst = Compact.sidecar(spark, lake, foldFn, conserveFn,
-          maxRecordsPerFile = cfg.maxRecordsPerFile,
-          compression = cfg.compression)
-        Seq(s"compact task ended, ${sst.rows} rows kept, " +
-          s"${sst.generations0} -> 1 generations, " +
-          s"${sst.files0} -> ${sst.files1} files")
-      case "compact" :: lake :: cols =>
-        // maintenance pass for the streaming lake's small files — the
-        // reference accepts per-rotation small files and leaves cleanup
-        // to operations (scripts/transform.sh runbook); here it is one
-        // engine command. Partition columns default to the lake's own
-        // hive layout, read from the directory names; `--flat` compacts
-        // an UNPARTITIONED dir (the per-micro-batch signature-table
-        // sidecar) — explicit, because silently treating a hive lake as
-        // flat would flatten its layout.
-        val partCols =
-          if (cols == Seq("--flat")) Seq.empty
-          else if (cols.exists(_.startsWith("--")))
-            // a flag mixed into (or typo'd among) the partition-column
-            // list must be a usage error, not a partitionBy("--flat")
-            // AnalysisException
-            fail(s"unexpected flag among partition columns: " +
-              s"${cols.filter(_.startsWith("--")).mkString(" ")}\n$usage")
-          else if (cols.nonEmpty) cols
-          else detectPartitionCols(spark, lake)
-        val st = Compact.run(spark, lake, partCols,
-          maxRecordsPerFile = cfg.maxRecordsPerFile,
-          compression = cfg.compression)
-        Seq(s"compact task ended, ${st.rows} rows kept, " +
-          s"${st.files0} -> ${st.files1} files")
-      case "dedup" :: rest =>
+      case "compact" =>
+        val (lake, cols) = opts.positional match {
+          case l +: cs => (l, cs)
+          case _ => fail(s"compact needs <lakeDir>\n$usage")
+        }
+        opts.switches.toSeq match {
+          case Seq(kind) if kind != "--flat" && cols.isEmpty =>
+            // sidecar GENERATION compaction: fold every batch= generation
+            // of a signature artifact into one (the artifact's own
+            // read-side fold + conservation check, both defined next to
+            // the commit machinery — Compact.sidecarKinds). Stops
+            // read-side fold cost and small-file count growing with
+            // ingest-batch count forever.
+            val (foldFn, conserveFn) = Compact.sidecarKinds(kind)
+            val sst = Compact.sidecar(spark, lake, foldFn, conserveFn,
+              maxRecordsPerFile = cfg.maxRecordsPerFile,
+              compression = cfg.compression)
+            Seq(s"compact task ended, ${sst.rows} rows kept, " +
+              s"${sst.generations0} -> 1 generations, " +
+              s"${sst.files0} -> ${sst.files1} files")
+          case kinds =>
+            // maintenance pass for the streaming lake's small files — the
+            // reference accepts per-rotation small files and leaves
+            // cleanup to operations (scripts/transform.sh runbook); here
+            // it is one engine command. Partition columns default to the
+            // lake's own hive layout, read from the directory names;
+            // `--flat` compacts an UNPARTITIONED dir (the per-micro-batch
+            // signature-table sidecar) — explicit, because silently
+            // treating a hive lake as flat would flatten its layout.
+            val partCols =
+              if (kinds == Seq("--flat") && cols.isEmpty) Seq.empty
+              else if (kinds.nonEmpty)
+                // a switch mixed into the partition-column list must be a
+                // usage error, not a partitionBy("--flat") AnalysisException
+                fail(s"unexpected flag among partition columns: " +
+                  s"${kinds.sorted.mkString(" ")}\n$usage")
+              else if (cols.nonEmpty) cols
+              else detectPartitionCols(spark, lake)
+            val st = Compact.run(spark, lake, partCols,
+              maxRecordsPerFile = cfg.maxRecordsPerFile,
+              compression = cfg.compression)
+            Seq(s"compact task ended, ${st.rows} rows kept, " +
+              s"${st.files0} -> ${st.files1} files")
+        }
+      case "dedup" =>
         // the d25 (or, with --best, d34) disposition as a pipeline
         // command: one artifact write, decision counts on stdout.
         // --best chooses each content cluster's canonical by d09
         // quality instead of min doc_id — the emission policy when the
-        // cleanest capture should win.
-        // overwrite guard: the disposition frame is checkpoint-backed,
-        // so Spark's own "cannot overwrite a path being read from"
-        // check never fires — an out == corpus typo would replace the
-        // documents with the disposition table.
-        val best = rest.contains("--best")
-        val (corpus, out) = flags(rest.filterNot(_ == "--best"))
-          .positional match {
-          case Seq(c, o) => (c, o)
-          case _ => fail(s"dedup needs <corpusDir> <outDir>\n$usage")
-        }
-        def qualified(p: String) = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(spark.sessionState.newHadoopConf())
-            .makeQualified(hp)
-        }
-        if (qualified(out) == qualified(corpus))
-          fail("dedup: the output dir must differ from the corpus dir " +
-            "— overwrite would destroy the corpus")
-        val docs = spark.read.parquet(corpus)
+        // cleanest capture should win. The disposition frame is
+        // checkpoint-backed, so Spark's own "cannot overwrite a path
+        // being read from" check never fires: the output guard is all
+        // that keeps a typo from replacing the documents.
+        val Seq(corpus, out) = positional(verb, opts, "<corpusDir>", "<outDir>")
+        guardOutputClash(spark, verb, out, "corpus" -> corpus)
+        val best = opts.switches("--best")
         // dedupApply/dedupBest refuse duplicate doc_ids (a replayed
         // corpus), null ids/text, and non-integral id types — before
         // the pipeline runs, so a refused corpus writes no artifact.
         val disp =
-          if (best) graft.queries.DedupQueries.dedupBest(
-            docs.select("doc_id", "text"))
-          else graft.queries.DedupQueries.dedupApply(
-            docs.select("doc_id", "text"))
+          if (best) DedupQueries.dedupBest(corpusIn(corpus))
+          else DedupQueries.dedupApply(corpusIn(corpus))
         // all reads below hit the checkpoint-backed disposition frame —
         // the dedup pipeline runs once, not once per consumer.
         val counts = disp.groupBy("status").count().collect()
           .map(r => r.getString(0) -> r.getLong(1)).toMap
         val total = counts.values.sum
-        disp.write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .option("maxRecordsPerFile", cfg.maxRecordsPerFile)
-          .parquet(out)
+        writeArtifact(disp, out, cfg)
         if (best)
           Seq(s"dedup task ended, ${counts.getOrElse("kept", 0L)} of " +
             s"$total docs kept (${counts.getOrElse("dup", 0L)} duplicates " +
@@ -372,35 +401,17 @@ object Main {
           Seq(s"dedup task ended, ${counts.getOrElse("kept", 0L)} of $total " +
             s"docs kept (${counts.getOrElse("exact_dup", 0L)} exact, " +
             s"${counts.getOrElse("near_dup", 0L)} near duplicates dropped)")
-      case "spandedup" :: rest =>
+      case "spandedup" =>
         // the d28 span disposition as a pipeline command: documents are
         // split on the LITERAL separator (default blank line — the
         // paragraph convention of crawled text), cross-doc repeated
         // spans collapse to their canonical occurrence, and each doc is
         // rewritten from its kept paragraphs (same separator). Output:
         // (doc_id, n_paras, n_dropped, chars_dropped, cleaned).
-        val opts = flags(rest)
-        val (corpus, out) = opts.positional match {
-          case Seq(c, o) => (c, o)
-          case _ => fail(s"spandedup needs <corpusDir> <outDir>\n$usage")
-        }
-        // same overwrite guard as dedup: an out == corpus typo would
-        // replace the documents with the summary table
-        def q2(p: String) = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(spark.sessionState.newHadoopConf())
-            .makeQualified(hp)
-        }
-        if (q2(out) == q2(corpus))
-          fail("spandedup: the output dir must differ from the corpus " +
-            "dir — overwrite would destroy the corpus")
-        val sep = opts.getOrElse("--sep", "\n\n")
-        val cleaned = graft.queries.DocumentQueries.spanDedupCorpus(
-          spark.read.parquet(corpus).select("doc_id", "text"), sep)
-        cleaned.write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .option("maxRecordsPerFile", cfg.maxRecordsPerFile)
-          .parquet(out)
+        val Seq(corpus, out) = positional(verb, opts, "<corpusDir>", "<outDir>")
+        guardOutputClash(spark, verb, out, "corpus" -> corpus)
+        writeArtifact(DocumentQueries.spanDedupCorpus(corpusIn(corpus),
+          opts.getOrElse("--sep", "\n\n")), out, cfg)
         // one aggregate over the (already computed) summary — bounded
         // driver fetch of four counters, not data. coalesce: sum over
         // an EMPTY summary (empty corpus) is NULL, and a primitive
@@ -413,44 +424,20 @@ object Main {
         Seq(s"spandedup task ended, ${st.getLong(0)} docs, " +
           s"${st.getLong(2)} of ${st.getLong(1)} paragraphs dropped " +
           s"(${st.getLong(3)} chars)")
-      case "salvage" :: rest =>
+      case "salvage" =>
         // the d50 disposition as a pipeline command: documents split on
         // the LITERAL separator, paragraphs below the d09 quality bar
         // dropped, each doc rewritten from its kept paragraphs in
         // position order. The segment-grain companion to `curate`'s
         // doc-grain quality gate: a page that would fail whole is
         // salvaged instead of discarded.
-        val opts = flags(rest)
-        val (corpus, out) = opts.positional match {
-          case Seq(c, o) => (c, o)
-          case _ => fail(s"salvage needs <corpusDir> <outDir>\n$usage")
-        }
-        def q12(p: String) = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(spark.sessionState.newHadoopConf())
-            .makeQualified(hp)
-        }
-        if (q12(out) == q12(corpus))
-          fail("salvage: the output dir must differ from the corpus " +
-            "dir — overwrite would destroy the corpus")
-        val qmin = opts.named.get("--quality-min").map { v =>
-          val d = try v.toDouble catch {
-            case _: NumberFormatException =>
-              fail(s"salvage: --quality-min must be a number, got '$v'")
-          }
-          if (d <= 0.0 || d > 1.0)
-            fail(s"salvage: --quality-min must be in (0, 1], got $v")
-          d
-        }.getOrElse(0.5)
-        val sep2 = opts.getOrElse("--sep", "\n\n")
-        val salvaged = graft.queries.DocumentQueries.paragraphSalvage(
-          graft.queries.DocumentQueries.corpusParas(
-            spark.read.parquet(corpus).select("doc_id", "text"), sep2),
-          qmin, sep2)
-        salvaged.write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .option("maxRecordsPerFile", cfg.maxRecordsPerFile)
-          .parquet(out)
+        val Seq(corpus, out) = positional(verb, opts, "<corpusDir>", "<outDir>")
+        guardOutputClash(spark, verb, out, "corpus" -> corpus)
+        val qmin = fracFlag(verb, opts, "--quality-min").getOrElse(0.5)
+        val sep = opts.getOrElse("--sep", "\n\n")
+        writeArtifact(DocumentQueries.paragraphSalvage(
+          DocumentQueries.corpusParas(corpusIn(corpus), sep), qmin, sep),
+          out, cfg)
         val sst = spark.read.parquet(out)
           .agg(count(lit(1)), coalesce(sum("n_paras"), lit(0L)),
             coalesce(sum("n_dropped"), lit(0L)))
@@ -458,7 +445,7 @@ object Main {
         Seq(s"salvage task ended, ${sst.getLong(0)} docs, " +
           s"${sst.getLong(2)} of ${sst.getLong(1)} paragraphs dropped " +
           s"at quality ${qmin}")
-      case "curate" :: rest =>
+      case "curate" =>
         // the end-to-end curation pipeline as ONE command: quality gate
         // → language gate → full d25 dedup (exact + near; --best = the
         // d34 quality-canonical policy) → d27 temperature rebalancing →
@@ -466,50 +453,26 @@ object Main {
         // <out>/dispositions and the kept corpus, hive-partitioned by
         // split, to <out>/corpus — the two artifacts a training run
         // consumes (the manifest of record and the data itself).
-        val curBest = rest.contains("--best")
-        val opts = flags(rest.filterNot(_ == "--best"))
-        val (corpus, out) = opts.positional match {
-          case Seq(c, o) => (c, o)
-          case _ => fail(s"curate needs <corpusDir> <outDir>\n$usage")
-        }
-        def q3(p: String) = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(spark.sessionState.newHadoopConf())
-            .makeQualified(hp)
-        }
-        if (q3(out) == q3(corpus))
-          fail("curate: the output dir must differ from the corpus dir " +
-            "— overwrite would destroy the corpus")
-        val qmin = opts.named.get("--quality-min").map { v =>
-          val d = try v.toDouble catch {
-            case _: NumberFormatException =>
-              fail(s"curate: --quality-min must be a number, got '$v'")
-          }
-          if (d < 0.0 || d > 1.0)
-            fail(s"curate: --quality-min must be in [0, 1], got $v")
-          d
-        }.getOrElse(0.5)
+        val Seq(corpus, out) = positional(verb, opts, "<corpusDir>", "<outDir>")
+        guardOutputClash(spark, verb, out, "corpus" -> corpus)
+        val curBest = opts.switches("--best")
+        val qmin = fracFlag(verb, opts, "--quality-min", zeroOk = true)
+          .getOrElse(0.5)
         val docs = spark.read.parquet(corpus)
           .select("doc_id", "lang", "text")
         // materialized once: three consumers below (artifact write,
         // counter aggregate, kept-corpus join) — the funnel + dedup
         // pipeline must run once, not three times. Materialize honors
         // $GRAFT_CHECKPOINT_DIR → reliable checkpoint on a real cluster.
-        val disp = graft.Materialize(graft.queries.DocumentQueries
+        val disp = graft.Materialize(DocumentQueries
           .curateDispositions(docs, qmin, bestCanonical = curBest))
-        disp.write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .option("maxRecordsPerFile", cfg.maxRecordsPerFile)
-          .parquet(s"$out/dispositions")
+        writeArtifact(disp, s"$out/dispositions", cfg)
         val kept = docs.join(
           disp.filter(col("disposition")
             .isin("train", "val", "test"))
             .selectExpr("doc_id", "disposition AS split"),
           Seq("doc_id"))
-        kept.write.mode("overwrite").partitionBy("split")
-          .option("compression", cfg.compression)
-          .option("maxRecordsPerFile", cfg.maxRecordsPerFile)
-          .parquet(s"$out/corpus")
+        writeArtifact(kept, s"$out/corpus", cfg, "split")
         val counts = disp.groupBy("disposition").count().collect()
           .map(r => r.getString(0) -> r.getLong(1)).toMap
         def n(k: String) = counts.getOrElse(k, 0L)
@@ -523,7 +486,7 @@ object Main {
           s"dropped: ${n("low_quality")} low quality, " +
           s"${n("unknown_lang")} unknown lang, " + dupCensus +
           s"${n("sampled_out")} sampled out)")
-      case "decontam" :: rest =>
+      case "decontam" =>
         // benchmark decontamination over a split corpus, both
         // directions in one command: <out>/eval_report = d30 (how
         // compromised each val/test doc's benchmark reading is) and
@@ -531,30 +494,11 @@ object Main {
         // makes the benchmark clean again). The split is the d13
         // content-hash assignment, recomputed — no split column needs
         // to exist in the corpus.
-        val opts = flags(rest)
-        val (corpus, out) = opts.positional match {
-          case Seq(c, o) => (c, o)
-          case _ => fail(s"decontam needs <corpusDir> <outDir>\n$usage")
-        }
-        def q4(p: String) = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(spark.sessionState.newHadoopConf())
-            .makeQualified(hp)
-        }
-        if (q4(out) == q4(corpus))
-          fail("decontam: the output dir must differ from the corpus " +
-            "dir — overwrite would destroy the corpus")
+        val Seq(corpus, out) = positional(verb, opts, "<corpusDir>", "<outDir>")
+        guardOutputClash(spark, verb, out, "corpus" -> corpus)
         // --n: the n-gram width (default 8; web-scale decontamination
         // writeups use 13 — the knob exists for corpora long enough)
-        val nGram = opts.named.get("--n").map { v =>
-          val n = try v.toInt catch {
-            case _: NumberFormatException =>
-              fail(s"decontam: --n must be an integer, got '$v'")
-          }
-          if (n < 1) fail(s"decontam: --n must be >= 1, got $v")
-          n
-        }.getOrElse(8)
-        val corpusDf = spark.read.parquet(corpus).select("doc_id", "text")
+        val nGram = intFlag(verb, opts, "--n").getOrElse(8)
         // ONE n-gram fingerprint pass feeds BOTH directions: d30 and d32
         // each need the full (doc_id, split, fp) table, and the corpus
         // scan + fingerprinting dominates each, so the one-command path
@@ -563,20 +507,12 @@ object Main {
         // Sharing the DEFINITION (splitNgramFps) keeps the directions
         // agreeing; sharing the PASS halves the command. Spec-pinned:
         // MainSpec asserts zero corpus re-scans in the write actions.
-        val grams = graft.Materialize(graft.queries.DocumentQueries
-          .splitNgramFps(corpusDf, nGram))
-        val report = graft.queries.DocumentQueries
-          .ngramDecontaminationFromFps(grams)
-        report.write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .option("maxRecordsPerFile", cfg.maxRecordsPerFile)
-          .parquet(s"$out/eval_report")
-        val remediation = graft.queries.DocumentQueries
-          .trainDecontaminationFromFps(grams)
-        remediation.write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .option("maxRecordsPerFile", cfg.maxRecordsPerFile)
-          .parquet(s"$out/train_dispositions")
+        val grams = graft.Materialize(
+          DocumentQueries.splitNgramFps(corpusIn(corpus), nGram))
+        writeArtifact(DocumentQueries.ngramDecontaminationFromFps(grams),
+          s"$out/eval_report", cfg)
+        writeArtifact(DocumentQueries.trainDecontaminationFromFps(grams),
+          s"$out/train_dispositions", cfg)
         // bounded driver fetches over the written artifacts: four
         // counters, not data. coalesce: a corpus with no eval (or no
         // train) docs yields an empty artifact, whose sum is NULL —
@@ -592,7 +528,7 @@ object Main {
         Seq(s"decontam task ended, ${ev.getLong(1)} of ${ev.getLong(0)} " +
           s"eval docs compromised; drop ${tr.getLong(1)} of " +
           s"${tr.getLong(0)} train docs to remediate")
-      case "bpetrain" :: rest =>
+      case "bpetrain" =>
         // d29 as a pipeline command, on the PRODUCTION path
         // (DocumentQueries.bpeMergesDriver): ONE distributed
         // word-frequency pass over the corpus, then the merge loop in
@@ -602,83 +538,42 @@ object Main {
         // would be hours; the driver loop trains a full table in
         // seconds). Writes the merge table parquet: the artifact d29b
         // tokenization and any BPE runtime consume.
-        val opts = flags(rest)
-        val (corpus, out) = opts.positional match {
-          case Seq(c, o) => (c, o)
-          case _ => fail(s"bpetrain needs <corpusDir> <outDir>\n$usage")
-        }
-        def q6(p: String) = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(spark.sessionState.newHadoopConf())
-            .makeQualified(hp)
-        }
-        if (q6(out) == q6(corpus))
-          fail("bpetrain: the output dir must differ from the corpus " +
-            "dir — overwrite would destroy the corpus")
-        val kMerges = opts.named.get("--merges").map { v =>
-          val k = try v.toInt catch {
-            case _: NumberFormatException =>
-              fail(s"bpetrain: --merges must be an integer, got '$v'")
-          }
-          if (k < 1) fail(s"bpetrain: --merges must be >= 1, got $v")
-          k
-        }.getOrElse(32000)
+        val Seq(corpus, out) = positional(verb, opts, "<corpusDir>", "<outDir>")
+        guardOutputClash(spark, verb, out, "corpus" -> corpus)
+        val kMerges = intFlag(verb, opts, "--merges").getOrElse(32000)
         // --min-count: the web-scale collect floor (see bpeMergesDriver
         // scaladoc) — prune words rarer than this BEFORE the driver
         // collect; 1 (the default) collects everything
-        val minCount = opts.named.get("--min-count").map { v =>
-          val m = try v.toLong catch {
-            case _: NumberFormatException =>
-              fail(s"bpetrain: --min-count must be an integer, got '$v'")
-          }
-          if (m < 1) fail(s"bpetrain: --min-count must be >= 1, got $v")
-          m
-        }.getOrElse(1L)
-        val table = graft.queries.DocumentQueries.bpeMergesDriver(
-          spark.read.parquet(corpus).select("doc_id", "text"), kMerges,
-          minCount)
+        val minCount = numFlag(verb, opts, "--min-count", "an integer",
+          _.toLong, ">= 1")(_ >= 1).getOrElse(1L)
+        val table = DocumentQueries.bpeMergesDriver(corpusIn(corpus),
+          kMerges, minCount)
         // the merge table is a driver-local relation: count it directly
         // (near-free) rather than re-reading the written parquet
         val trained = table.count()
-        table.write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .parquet(out)
+        writeArtifact(table, out, cfg)
         val exhausted =
           if (trained < kMerges) s" (pairs exhausted before $kMerges)"
           else ""
         Seq(s"bpetrain task ended, $trained merges trained$exhausted")
-      case "tokenize" :: rest =>
+      case "tokenize" =>
         // d29b off the saved bpetrain artifact: per-doc token counts
         // under an already-trained merge table — the apply side of the
         // tokenizer pipeline (bpetrain writes the table, tokenize
         // consumes it; no training runs here). One broadcast of the
         // k-row merge table + one tokenize pass over the Heaps-bounded
         // distinct-word table + one broadcast join over the term stream.
-        val opts = flags(rest)
-        val (corpus, mergesDir, out) = opts.positional match {
-          case Seq(c, m, o) => (c, m, o)
-          case _ => fail(s"tokenize needs <corpusDir> <mergesDir> <outDir>\n$usage")
-        }
-        def q7(p: String) = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(spark.sessionState.newHadoopConf())
-            .makeQualified(hp)
-        }
-        if (q7(out) == q7(corpus) || q7(out) == q7(mergesDir))
-          fail("tokenize: the output dir must differ from the corpus " +
-            "and merges dirs — overwrite would destroy an input")
-        val counts = graft.queries.DocumentQueries.bpeTokenCountsFromMerges(
-          spark.read.parquet(corpus).select("doc_id", "text"),
-          spark.read.parquet(mergesDir))
-        counts.write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .option("maxRecordsPerFile", cfg.maxRecordsPerFile)
-          .parquet(out)
+        val Seq(corpus, mergesDir, out) =
+          positional(verb, opts, "<corpusDir>", "<mergesDir>", "<outDir>")
+        guardOutputClash(spark, verb, out, "corpus" -> corpus,
+          "merges" -> mergesDir)
+        writeArtifact(DocumentQueries.bpeTokenCountsFromMerges(
+          corpusIn(corpus), spark.read.parquet(mergesDir)), out, cfg)
         val tc = spark.read.parquet(out)
           .agg(count(lit(1)), coalesce(sum("n_bpe_tokens"), lit(0L))).head
         Seq(s"tokenize task ended, ${tc.getLong(1)} bpe tokens over " +
           s"${tc.getLong(0)} docs")
-      case "pack" :: rest =>
+      case "pack" =>
         // the d26 sequence packing as a pipeline command: the curated
         // corpus laid end to end in doc_id order and cut into fixed
         // seqLen-token training sequences, written as the provenance
@@ -686,69 +581,32 @@ object Main {
         // doc_start, seq_start, n_toks). nBuckets follows the session's
         // parallelism — the packing result is provably bucket-count-
         // independent (spec-pinned), so this is a tuning knob only.
-        val opts = flags(rest)
-        val (corpus, out) = opts.positional match {
-          case Seq(c, o) => (c, o)
-          case _ => fail(s"pack needs <corpusDir> <outDir>\n$usage")
-        }
-        def q5(p: String) = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(spark.sessionState.newHadoopConf())
-            .makeQualified(hp)
-        }
-        if (q5(out) == q5(corpus))
-          fail("pack: the output dir must differ from the corpus dir " +
-            "— overwrite would destroy the corpus")
-        val seqLen = opts.named.get("--seq-len").map { v =>
-          val n = try v.toLong catch {
-            case _: NumberFormatException =>
-              fail(s"pack: --seq-len must be an integer, got '$v'")
-          }
-          if (n <= 0) fail(s"pack: --seq-len must be positive, got $v")
-          n
-        }.getOrElse(2048L)
-        val slices = graft.queries.DocumentQueries.packSequences(
-          spark.read.parquet(corpus).select("doc_id", "text"),
-          seqLen = seqLen,
-          nBuckets = spark.sparkContext.defaultParallelism)
-        slices.write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .option("maxRecordsPerFile", cfg.maxRecordsPerFile)
-          .parquet(out)
+        val Seq(corpus, out) = positional(verb, opts, "<corpusDir>", "<outDir>")
+        guardOutputClash(spark, verb, out, "corpus" -> corpus)
+        val seqLen = numFlag(verb, opts, "--seq-len", "an integer",
+          _.toLong, "positive")(_ > 0).getOrElse(2048L)
+        writeArtifact(DocumentQueries.packSequences(corpusIn(corpus),
+          seqLen = seqLen, nBuckets = spark.sparkContext.defaultParallelism),
+          out, cfg)
         // census off the written artifact (coalesce: empty corpus sums
         // NULL, the spandedup/decontam lesson)
         val pc = spark.read.parquet(out)
-          .agg(coalesce(org.apache.spark.sql.functions.countDistinct(
-            col("seq_id")), lit(0L)),
-            coalesce(org.apache.spark.sql.functions.countDistinct(
-              col("doc_id")), lit(0L)),
+          .agg(coalesce(count_distinct(col("seq_id")), lit(0L)),
+            coalesce(count_distinct(col("doc_id")), lit(0L)),
             coalesce(sum("n_toks"), lit(0L))).head
         Seq(s"pack task ended, ${pc.getLong(2)} tokens from " +
           s"${pc.getLong(1)} docs packed into ${pc.getLong(0)} " +
           s"sequences of $seqLen")
-      case "overlap" :: rest =>
+      case "overlap" =>
         // the d41 cross-source overlap census as a pipeline command:
         // the full source-pair matrix (distinct-fp sizes, shared count,
         // Jaccard) — the planning artifact a curation run reads before
         // deciding which dumps to drop. Prints the worst offender.
-        val opts = flags(rest)
-        val (corpus, out) = opts.positional match {
-          case Seq(c, o) => (c, o)
-          case _ => fail(s"overlap needs <corpusDir> <outDir>\n$usage")
-        }
-        def q6(p: String) = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(spark.sessionState.newHadoopConf())
-            .makeQualified(hp)
-        }
-        if (q6(out) == q6(corpus))
-          fail("overlap: the output dir must differ from the corpus dir " +
-            "— overwrite would destroy the corpus")
-        val matrix = graft.queries.DocumentQueries.sourceOverlap(
-          spark.read.parquet(corpus).select("doc_id", "text", "source"))
-        matrix.write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .parquet(out)
+        val Seq(corpus, out) = positional(verb, opts, "<corpusDir>", "<outDir>")
+        guardOutputClash(spark, verb, out, "corpus" -> corpus)
+        writeArtifact(DocumentQueries.sourceOverlap(
+          spark.read.parquet(corpus).select("doc_id", "text", "source")),
+          out, cfg)
         val written = spark.read.parquet(out)
         val nPairs = written.count()
         val top = written.orderBy(col("jaccard").desc, col("src_a"),
@@ -757,159 +615,76 @@ object Main {
           s"${r.getString(1)} jaccard ${r.getDouble(5)} " +
           s"(${r.getLong(4)} shared)").getOrElse("")
         Seq(s"overlap task ended, $nPairs source pairs$topLine")
-      case "select" :: rest =>
+      case "select" =>
         // the d42 token-budget selection as a pipeline command: keep the
         // best-quality documents until the cumulative token count
         // reaches --frac of the corpus total; writes the selected
         // corpus rows (original columns + quality + cum_tok) — the
         // "best data under a compute budget" emission step.
-        val opts = flags(rest)
-        val (corpus, out) = opts.positional match {
-          case Seq(c, o) => (c, o)
-          case _ => fail(s"select needs <corpusDir> <outDir>\n$usage")
-        }
-        def q7(p: String) = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(spark.sessionState.newHadoopConf())
-            .makeQualified(hp)
-        }
-        if (q7(out) == q7(corpus))
-          fail("select: the output dir must differ from the corpus dir " +
-            "— overwrite would destroy the corpus")
-        val frac = opts.named.get("--frac").map { v =>
-          val d = try v.toDouble catch {
-            case _: NumberFormatException =>
-              fail(s"select: --frac must be a number, got '$v'")
-          }
-          if (d <= 0.0 || d > 1.0)
-            fail(s"select: --frac must be in (0, 1], got $v")
-          d
-        }.getOrElse(0.25)
+        val Seq(corpus, out) = positional(verb, opts, "<corpusDir>", "<outDir>")
+        guardOutputClash(spark, verb, out, "corpus" -> corpus)
+        val frac = fracFlag(verb, opts, "--frac").getOrElse(0.25)
         val docs = spark.read.parquet(corpus)
-        val sel = graft.queries.DocumentQueries.budgetSelect(
+        val sel = DocumentQueries.budgetSelect(
           docs.select("doc_id", "text"), frac = frac,
           nBuckets = spark.sparkContext.defaultParallelism)
-        docs.join(sel.select("doc_id", "quality", "cum_tok"), Seq("doc_id"))
-          .write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .option("maxRecordsPerFile", cfg.maxRecordsPerFile)
-          .parquet(out)
+        writeArtifact(
+          docs.join(sel.select("doc_id", "quality", "cum_tok"), Seq("doc_id")),
+          out, cfg)
         val total = docs.count()
         val sc = spark.read.parquet(out)
           .agg(count(lit(1)), coalesce(max("cum_tok"), lit(0L))).head
         Seq(s"select task ended, ${sc.getLong(0)} of $total docs kept " +
           s"(${sc.getLong(1)} tokens, frac $frac of corpus)")
-      case "semdedup" :: rest =>
+      case "semdedup" =>
         // the s09 SemDeDup disposition as a pipeline command over an
         // embeddings table (vec_id, embedding): cluster with the trained
         // coarse quantizer, drop the redundant member of every
         // within-cell similar pair. Writes the full disposition (the
         // manifest a corpus join consumes via vec_id).
-        val opts = flags(rest)
-        val (emb, out) = opts.positional match {
-          case Seq(c, o) => (c, o)
-          case _ => fail(s"semdedup needs <embeddingsDir> <outDir>\n$usage")
-        }
-        def q8(p: String) = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(spark.sessionState.newHadoopConf())
-            .makeQualified(hp)
-        }
-        if (q8(out) == q8(emb))
-          fail("semdedup: the output dir must differ from the embeddings " +
-            "dir — overwrite would destroy the table")
-        val tau = opts.named.get("--tau").map { v =>
-          val d = try v.toDouble catch {
-            case _: NumberFormatException =>
-              fail(s"semdedup: --tau must be a number, got '$v'")
-          }
-          if (d <= 0.0 || d > 1.0)
-            fail(s"semdedup: --tau must be in (0, 1], got $v")
-          d
-        }.getOrElse(0.45)
-        val vecs = spark.read.parquet(emb)
-          .select(col("vec_id"),
-            expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-        val disp = graft.queries.EmbeddingQueries.semDedup(vecs, tau)
-        disp.write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .parquet(out)
+        val Seq(emb, out) = positional(verb, opts, "<embeddingsDir>", "<outDir>")
+        guardOutputClash(spark, verb, out, "embeddings" -> emb)
+        val tau = fracFlag(verb, opts, "--tau").getOrElse(0.45)
+        writeArtifact(EmbeddingQueries.semDedup(vecTable(emb), tau),
+          out, cfg)
         val dc = spark.read.parquet(out).groupBy("decision").count()
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
         val totalV = dc.values.sum
         Seq(s"semdedup task ended, ${dc.getOrElse("keep", 0L)} of $totalV " +
           s"vectors kept (${dc.getOrElse("drop", 0L)} semantic duplicates " +
           s"dropped at tau $tau)")
-      case "semdecontam" :: rest =>
+      case "semdecontam" =>
         // the s10 disposition as a pipeline command: train the coarse
         // quantizer on the train embeddings, probe the eval embeddings
         // into their nprobe nearest cells, and write the full train-side
         // disposition (decision/witness/n_hits — the manifest a corpus
         // join consumes via vec_id) plus a contamination census.
-        val opts = flags(rest)
-        val (trainDir, evalDir, out) = opts.positional match {
-          case Seq(t, e, o) => (t, e, o)
-          case _ =>
-            fail(s"semdecontam needs <trainEmbDir> <evalEmbDir> <outDir>\n$usage")
-        }
-        def q9(p: String) = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(spark.sessionState.newHadoopConf())
-            .makeQualified(hp)
-        }
-        if (q9(out) == q9(trainDir) || q9(out) == q9(evalDir))
-          fail("semdecontam: the output dir must differ from both " +
-            "embeddings dirs — overwrite would destroy a table")
-        val tau = opts.named.get("--tau").map { v =>
-          val d = try v.toDouble catch {
-            case _: NumberFormatException =>
-              fail(s"semdecontam: --tau must be a number, got '$v'")
-          }
-          if (d <= 0.0 || d > 1.0)
-            fail(s"semdecontam: --tau must be in (0, 1], got $v")
-          d
-        }.getOrElse(graft.queries.EmbeddingQueries.semDecTau)
-        def vecTable(dir: String) = spark.read.parquet(dir)
-          .select(col("vec_id"),
-            expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-        val disp = graft.queries.EmbeddingQueries
-          .semDecontam(vecTable(trainDir), vecTable(evalDir), tau)
-        disp.write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .parquet(out)
+        val Seq(trainDir, evalDir, out) =
+          positional(verb, opts, "<trainEmbDir>", "<evalEmbDir>", "<outDir>")
+        guardOutputClash(spark, verb, out, "train embeddings" -> trainDir,
+          "eval embeddings" -> evalDir)
+        val tau = fracFlag(verb, opts, "--tau")
+          .getOrElse(EmbeddingQueries.semDecTau)
+        writeArtifact(EmbeddingQueries.semDecontam(vecTable(trainDir),
+          vecTable(evalDir), tau), out, cfg)
         val dc = spark.read.parquet(out).groupBy("decision").count()
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
         val totalV = dc.values.sum
         Seq(s"semdecontam task ended, ${dc.getOrElse("drop", 0L)} of " +
           s"$totalV train vectors semantically contaminated at tau $tau " +
           s"(${dc.getOrElse("keep", 0L)} clean)")
-      case "dsir" :: rest =>
+      case "dsir" =>
         // d46 as a pipeline command: score every raw-corpus doc by the
         // DSIR log importance ratio against the target corpus and write
         // the (doc_id, log_ratio, n_feats) manifest — the ranking a
         // budget cut (`select`-style consumers) or weighted sampler
         // reads. Both inputs are documents-schema parquet dirs.
-        val opts = flags(rest)
-        val (rawDir, tgtDir, out) = opts.positional match {
-          case Seq(r, t, o) => (r, t, o)
-          case _ =>
-            fail(s"dsir needs <rawCorpusDir> <targetCorpusDir> <outDir>\n$usage")
-        }
-        def q10(p: String) = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(spark.sessionState.newHadoopConf())
-            .makeQualified(hp)
-        }
-        if (q10(out) == q10(rawDir) || q10(out) == q10(tgtDir))
-          fail("dsir: the output dir must differ from both corpus dirs " +
-            "— overwrite would destroy a table")
-        def corpus(dir: String) =
-          spark.read.parquet(dir).select(col("doc_id"), col("text"))
-        val weights = graft.queries.DocumentQueries
-          .dsirWeights(corpus(rawDir), corpus(tgtDir))
-        weights.write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .parquet(out)
+        val Seq(rawDir, tgtDir, out) = positional(verb, opts,
+          "<rawCorpusDir>", "<targetCorpusDir>", "<outDir>")
+        guardOutputClash(spark, verb, out, "raw corpus" -> rawDir,
+          "target corpus" -> tgtDir)
+        writeArtifact(DocumentQueries.dsirWeights(corpusIn(rawDir),
+          corpusIn(tgtDir)), out, cfg)
         val census = spark.read.parquet(out)
           .agg(count(lit(1)), avg(col("log_ratio")), max(col("log_ratio")))
           .head()
@@ -919,31 +694,17 @@ object Main {
         else Seq(f"dsir task ended, ${census.getLong(0)} raw docs scored " +
           f"(mean log-ratio ${census.getDouble(1)}%.4f, " +
           f"best ${census.getDouble(2)}%.4f)")
-      case "cluster" :: rest =>
+      case "cluster" =>
         // d48 as a pipeline command: assign every doc to its hashed-
         // feature domain cluster and write the assignment manifest; the
         // census line reads cluster sizes with each cluster's dominant
         // source when the corpus carries one (the domain-mixture
         // planning readout).
-        val opts = flags(rest)
-        val (corpusDir, out) = opts.positional match {
-          case Seq(c, o) => (c, o)
-          case _ => fail(s"cluster needs <corpusDir> <outDir>\n$usage")
-        }
-        def q11(p: String) = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(spark.sessionState.newHadoopConf())
-            .makeQualified(hp)
-        }
-        if (q11(out) == q11(corpusDir))
-          fail("cluster: the output dir must differ from the corpus dir " +
-            "— overwrite would destroy the table")
+        val Seq(corpusDir, out) = positional(verb, opts, "<corpusDir>", "<outDir>")
+        guardOutputClash(spark, verb, out, "corpus" -> corpusDir)
         val corpusDf = spark.read.parquet(corpusDir)
-        val assign = graft.queries.DocumentQueries
-          .domainClusters(corpusDf.select(col("doc_id"), col("text")))
-        assign.write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .parquet(out)
+        writeArtifact(DocumentQueries.domainClusters(
+          corpusDf.select(col("doc_id"), col("text"))), out, cfg)
         val saved = spark.read.parquet(out)
         val sizes = saved.groupBy("cluster").count()
           .orderBy(col("count").desc, col("cluster"))
@@ -964,111 +725,64 @@ object Main {
         }.mkString(", ")
         Seq(s"cluster task ended, ${sizes.map(_._2).sum} docs over " +
           s"${sizes.length} clusters (largest $head)")
-      case "bm25index" :: rest =>
+      case "bm25index" =>
         // d58 build half as a pipeline command: write the persistable
         // inverted-index artifact (postings + stored df + collection
         // scalars) the `bm25` probe verb reads — built once per corpus,
         // the d16/d54 artifact discipline at the retrieval axis.
-        val opts = flags(rest)
-        val (corpusDir, out) = opts.positional match {
-          case Seq(c, o) => (c, o)
-          case _ => fail(s"bm25index needs <corpusDir> <outDir>\n$usage")
-        }
-        def q12(p: String) = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(spark.sessionState.newHadoopConf())
-            .makeQualified(hp)
-        }
-        if (q12(out) == q12(corpusDir))
-          fail("bm25index: the output dir must differ from the corpus " +
-            "dir — overwrite would destroy the table")
-        graft.queries.DocumentQueries.bm25Index(
-            spark.read.parquet(corpusDir).select(col("doc_id"), col("text")))
-          .write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .parquet(out)
+        val Seq(corpusDir, out) = positional(verb, opts, "<corpusDir>", "<outDir>")
+        guardOutputClash(spark, verb, out, "corpus" -> corpusDir)
+        writeArtifact(DocumentQueries.bm25Index(corpusIn(corpusDir)), out, cfg)
         val idx = spark.read.parquet(out)
         val c0 = idx.agg(count(lit(1)),
           count_distinct(col("term")), max(col("n_docs"))).head
         if (c0.getLong(0) == 0L) Seq("bm25index task ended, empty corpus")
         else Seq(s"bm25index task ended, ${c0.getLong(0)} postings over " +
           s"${c0.getLong(1)} terms (${c0.getLong(2)} docs)")
-      case "bm25" :: rest =>
+      case "bm25" =>
         // d58 probe half: score a probe batch (parquet with query_id,
         // qtext) against a stored index; a postings table without the
         // stored df/stats refuses inside bm25Probe.
-        val opts = flags(rest)
-        val (idxDir, probesDir, out) = opts.positional match {
-          case Seq(i, p, o) => (i, p, o)
-          case _ => fail(s"bm25 needs <indexDir> <probesDir> <outDir>\n$usage")
-        }
-        def q13(p: String) = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(spark.sessionState.newHadoopConf())
-            .makeQualified(hp)
-        }
-        if (q13(out) == q13(idxDir) || q13(out) == q13(probesDir))
-          fail("bm25: the output dir must differ from the index and " +
-            "probes dirs — overwrite would destroy a table")
-        val topK = opts.named.get("--topk").map { v =>
-          val k = try v.toInt catch {
-            case _: NumberFormatException =>
-              fail(s"bm25: --topk must be an integer, got '$v'")
-          }
-          if (k < 1) fail(s"bm25: --topk must be >= 1, got $v")
-          k
-        }.getOrElse(graft.queries.QueryConf.bm25TopK(spark))
+        val Seq(idxDir, probesDir, out) =
+          positional(verb, opts, "<indexDir>", "<probesDir>", "<outDir>")
+        guardOutputClash(spark, verb, out, "index" -> idxDir,
+          "probes" -> probesDir)
+        val topK = intFlag(verb, opts, "--topk")
+          .getOrElse(QueryConf.bm25TopK(spark))
         val probes = spark.read.parquet(probesDir)
         if (!Seq("query_id", "qtext").forall(probes.columns.contains))
           fail("bm25: the probes table needs (query_id, qtext) columns")
-        graft.queries.DocumentQueries.bm25Probe(
-            spark.read.parquet(idxDir), probes.select(col("query_id"),
-              col("qtext")), k = topK)
-          .write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .parquet(out)
+        writeArtifact(DocumentQueries.bm25Probe(spark.read.parquet(idxDir),
+          probes.select(col("query_id"), col("qtext")), k = topK), out, cfg)
         val res = spark.read.parquet(out)
         val c1 = res.agg(count(lit(1)), count_distinct(col("query_id"))).head
         Seq(s"bm25 task ended, ${c1.getLong(0)} results over " +
           s"${c1.getLong(1)} queries (top-$topK)")
-      case "ivftrain" :: rest =>
+      case "ivftrain" =>
         // the stored coarse-quantizer artifact (r18): train the s04
         // quantizer on an embeddings lake artifact ONCE (cells/rounds
         // from the session conf) and write the (cell, cv_sum, cnorm)
         // table — `ann --centroids` then probes against the STORED
         // artifact, the d58/s12 build-once convention on the ANN axis.
-        val opts = flags(rest)
-        val (embDir, out) = opts.positional match {
-          case Seq(e, o) => (e, o)
-          case _ => fail(s"ivftrain needs <embeddingsDir> <outDir>\n$usage")
-        }
-        rejectUnknownFlags("ivftrain", opts, Set.empty)
-        guardOutputClash(spark, "ivftrain", out, Seq("embeddings" -> embDir))
-        graft.queries.EmbeddingQueries
-          .trainQuantizer(spark.read.parquet(embDir))
-          .write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .parquet(out)
+        val Seq(embDir, out) = positional(verb, opts, "<embeddingsDir>", "<outDir>")
+        guardOutputClash(spark, verb, out, "embeddings" -> embDir)
+        writeArtifact(EmbeddingQueries.trainQuantizer(spark.read.parquet(embDir)),
+          out, cfg)
         val ct = spark.read.parquet(out)
         Seq(s"ivftrain task ended, ${ct.count()} centroids " +
-          s"(cells=${graft.queries.QueryConf.ivfCells(spark)}, " +
-          s"rounds=${graft.queries.QueryConf.lloydRounds(spark)}; the " +
+          s"(cells=${QueryConf.ivfCells(spark)}, " +
+          s"rounds=${QueryConf.lloydRounds(spark)}; the " +
           "artifact is only comparable under these knobs)")
-      case "ivfindex" :: rest =>
+      case "ivfindex" =>
         // the corpus-side assignment artifact (r18): assign every
         // vector to its home cell under a STORED `ivftrain` quantizer
         // and write Hive-partitioned BY CELL — `ann --index` probes
         // then read only their probed cells' partitions. The ANN
         // mirror of `bm25index`'s postings artifact.
-        val opts = flags(rest)
-        val (embDir, centDir, out) = opts.positional match {
-          case Seq(e, c, o) => (e, c, o)
-          case _ =>
-            fail(s"ivfindex needs <embeddingsDir> <centroidsDir> <outDir>\n$usage")
-        }
-        rejectUnknownFlags("ivfindex", opts, Set.empty)
-        guardOutputClash(spark, "ivfindex", out,
-          Seq("embeddings" -> embDir, "centroids" -> centDir))
+        val Seq(embDir, centDir, out) =
+          positional(verb, opts, "<embeddingsDir>", "<centroidsDir>", "<outDir>")
+        guardOutputClash(spark, verb, out, "embeddings" -> embDir,
+          "centroids" -> centDir)
         // repartition ON the partition key before the partitioned write:
         // without it every shuffle partition writes a sliver into every
         // cell= dir (32 tasks x cells files of a few KB each — measured
@@ -1077,20 +791,16 @@ object Main {
         // cell's rows land in one task -> one well-sized file per cell,
         // and the probed-cell scan reads exactly nprobe-ish files
         // (SCALE.md "ann --index cell pruning"). At lake scale
-        // spark.sql.files.maxRecordsPerFile splits oversized cells.
-        graft.queries.EmbeddingQueries
+        // maxRecordsPerFile splits oversized cells.
+        writeArtifact(EmbeddingQueries
           .ivfIndex(spark.read.parquet(embDir), spark.read.parquet(centDir))
-          .repartition(col("cell"))
-          .write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .partitionBy("cell")
-          .parquet(out)
+          .repartition(col("cell")), out, cfg, "cell")
         val ix = spark.read.parquet(out)
         val cx = ix.agg(count(lit(1)), count_distinct(col("cell"))).head()
         Seq(s"ivfindex task ended, ${cx.getLong(0)} vectors over " +
           s"${cx.getLong(1)} cells (partitioned by cell; probe-able only " +
           "under the centroids it was assigned with)")
-      case "ann" :: rest =>
+      case "ann" =>
         // the semantic half of the hybrid stack (r18): rank query
         // vectors against an embeddings lake artifact through the s04
         // trained-IVF scan, writing the (query_id, rk, doc_id, cos_sim)
@@ -1104,13 +814,7 @@ object Main {
         // (with --centroids) probes a STORED `ivfindex` assignment —
         // the corpus is neither trained on nor re-assigned, and the
         // cell-partitioned layout prunes the scan to probed cells.
-        val opts = flags(rest)
-        val (embDir, out) = opts.positional match {
-          case Seq(e, o) => (e, o)
-          case _ => fail(s"ann needs <embeddingsDir> <outDir>\n$usage")
-        }
-        rejectUnknownFlags("ann", opts,
-          Set("--topk", "--queries", "--nqueries", "--centroids", "--index"))
+        val Seq(embDir, out) = positional(verb, opts, "<embeddingsDir>", "<outDir>")
         val qDir = opts.named.get("--queries")
         val cDir = opts.named.get("--centroids")
         val iDir = opts.named.get("--index")
@@ -1122,20 +826,12 @@ object Main {
         if (qDir.isDefined && opts.named.contains("--nqueries"))
           fail("ann: --queries and --nqueries are mutually exclusive — " +
             "an external query table carries its own row set")
-        guardOutputClash(spark, "ann", out,
+        guardOutputClash(spark, verb, out,
           Seq("embeddings" -> embDir) ++ qDir.map("queries" -> _) ++
-            cDir.map("centroids" -> _) ++ iDir.map("index" -> _))
-        def posIntFlag(flag: String, dflt: Int): Int =
-          opts.named.get(flag).map { v =>
-            val k = try v.toInt catch {
-              case _: NumberFormatException =>
-                fail(s"ann: $flag must be an integer, got '$v'")
-            }
-            if (k < 1) fail(s"ann: $flag must be >= 1, got $v")
-            k
-          }.getOrElse(dflt)
-        val topK = posIntFlag("--topk", graft.queries.QueryConf.bm25TopK(spark))
-        val nq = posIntFlag("--nqueries", 20)
+            cDir.map("centroids" -> _) ++ iDir.map("index" -> _): _*)
+        val topK = intFlag(verb, opts, "--topk")
+          .getOrElse(QueryConf.bm25TopK(spark))
+        val nq = intFlag(verb, opts, "--nqueries").getOrElse(20)
         val corpus = spark.read.parquet(embDir)
         val queries = qDir.map(spark.read.parquet(_))
           .getOrElse(corpus.filter(col("vec_id") < nq))
@@ -1150,63 +846,40 @@ object Main {
         }
         val ranksOut = iDir match {
           case Some(ix) =>
-            graft.queries.EmbeddingQueries.annRankTableIndexed(
-              spark.read.parquet(ix), queries,
-              spark.read.parquet(cDir.get), k = topK)
+            EmbeddingQueries.annRankTableIndexed(spark.read.parquet(ix),
+              queries, spark.read.parquet(cDir.get), k = topK)
           case None =>
-            graft.queries.EmbeddingQueries.annRankTable(corpus, queries,
+            EmbeddingQueries.annRankTable(corpus, queries,
               k = topK, centroids = cDir.map(spark.read.parquet(_)))
         }
-        ranksOut
-          .write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .parquet(out)
+        writeArtifact(ranksOut, out, cfg)
         val annRes = spark.read.parquet(out)
         val cA = annRes.agg(count(lit(1)), count_distinct(col("query_id"))).head
         Seq(s"ann task ended, ${cA.getLong(0)} results over " +
           s"${cA.getLong(1)} queries (top-$topK)")
-      case "fuse" :: rest =>
+      case "fuse" =>
         // d59: reciprocal-rank fusion over STORED rank tables — the
         // production hybrid-retrieval step: `bm25` writes the lexical
         // ranks, any ANN top-k (s01/s04-shaped, renamed to the rank
         // contract) the semantic ranks, and this fuses N of them. Rank
         // tables are (query_id, doc_id, rk); rrfFuse refuses anything
         // else loudly.
-        val opts = flags(rest)
         if (opts.positional.size < 3)
           fail(s"fuse needs <ranksDir> <ranksDir>... <outDir> — at least " +
             s"two rank tables (fusing one list is the identity)\n$usage")
         val rankDirs = opts.positional.init
         val out = opts.positional.last
-        // output-clash guard over CANONICAL paths (ADVICE r17; shared
-        // helper since the r18 self-review — see guardOutputClash)
-        guardOutputClash(spark, "fuse", out, rankDirs.map("rank" -> _))
-        val topK2 = opts.named.get("--topk").map { v =>
-          val k = try v.toInt catch {
-            case _: NumberFormatException =>
-              fail(s"fuse: --topk must be an integer, got '$v'")
-          }
-          if (k < 1) fail(s"fuse: --topk must be >= 1, got $v")
-          k
-        }.getOrElse(graft.queries.QueryConf.bm25TopK(spark))
-        graft.queries.DocumentQueries.rrfFuse(
-            rankDirs.map(spark.read.parquet(_)), k = topK2)
-          .write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .parquet(out)
+        guardOutputClash(spark, verb, out, rankDirs.map("rank" -> _): _*)
+        val topK = intFlag(verb, opts, "--topk")
+          .getOrElse(QueryConf.bm25TopK(spark))
+        writeArtifact(DocumentQueries.rrfFuse(
+          rankDirs.map(spark.read.parquet(_)), k = topK), out, cfg)
         val fres = spark.read.parquet(out)
         val c2 = fres.agg(count(lit(1)), count_distinct(col("query_id"))).head
         Seq(s"fuse task ended, ${c2.getLong(0)} fused results over " +
           s"${c2.getLong(1)} queries from ${rankDirs.size} rank tables " +
-          s"(top-$topK2)")
-      case "stream" :: rest if {
-          // the two modes take different positional arities; an arity
-          // that matches NEITHER mode (e.g. --queue-dir plus a landing
-          // dir) must fall through to the usage error, not destructure
-          val opts = flags(rest.filterNot(_ == "--once"))
-          if (opts.named.contains("--queue-dir")) opts.positional.size == 2
-          else opts.positional.size == 3
-        } =>
+          s"(top-$topK)")
+      case "stream" =>
         // --once = Trigger.AvailableNow: process the backlog, checkpoint,
         // exit — the reference's timer-driven lambda transformer shape
         // (s3log-lambda-transformer on an EventBridge schedule); without
@@ -1221,10 +894,10 @@ object Main {
         //     after the transform lands, redelivery on crash. --objects
         //     maps keys to a local dir; without it keys resolve to
         //     s3a://bucket/key.
-        val opts = flags(rest.filterNot(_ == "--once"))
         val writer = opts.named.get("--queue-dir") match {
           case Some(qdir) =>
-            val Seq(out, checkpoint) = opts.positional
+            val Seq(out, checkpoint) =
+              positional(verb, opts, "<outDir>", "<checkpointDir>")
             // fixed registry name: fine under the CLI's one-command-per-
             // JVM contract; a second `stream --queue-dir` in the SAME JVM
             // would re-register "cli" and silently swap the first
@@ -1239,19 +912,14 @@ object Main {
             StreamingTransform.queueNotificationPipeline(spark, "cli", out,
               checkpoint, resolve, cfg)
           case None =>
-            val Seq(landing, out, checkpoint) = opts.positional
+            val Seq(landing, out, checkpoint) = positional(verb, opts,
+              "<landingDir>", "<outDir>", "<checkpointDir>")
             StreamingTransform.writer(
               StreamingTransform.stream(spark, landing, cfg), out,
               checkpoint, cfg)
         }
-        val query =
-          if (rest.contains("--once"))
-            writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
-          else writer.start()
-        query.awaitTermination()
+        awaitQuery(writer, opts.switches("--once"))
         Seq("stream query terminated")
-      case _ => fail(usage)
     }
   }
 
@@ -1382,50 +1050,80 @@ object Main {
     cols
   }
 
-  private final case class Opts(named: Map[String, String], positional: Seq[String]) {
+
+  private[graft] final case class Opts(named: Map[String, String] = Map.empty,
+      switches: Set[String] = Set.empty,
+      positional: Vector[String] = Vector.empty) {
     def getOrElse(k: String, d: => String): String = named.getOrElse(k, d)
   }
 
-  /** `-x value` flag splitter; everything else is positional. */
-  private def flags(args: List[String]): Opts = {
+  /** The one flag reader: the verb's declared switches, its declared
+    * `-x value` flags, and everything else positional. Any other flag is
+    * refused loudly (self-review r18): a typo'd flag silently dropped
+    * would run at a default and produce a plausible-but-wrong artifact —
+    * the worst failure mode a CLI has. */
+  private[graft] def parse(verb: String, args: List[String]): Opts = {
+    val fl = verbFlags(verb)
     @annotation.tailrec
-    def loop(rest: List[String], named: Map[String, String],
-        pos: Vector[String]): Opts = rest match {
-      case f :: v :: tail if f.startsWith("-") => loop(tail, named + (f -> v), pos)
-      case f :: Nil if f.startsWith("-") => fail(s"flag $f needs a value")
-      case v :: tail => loop(tail, named, pos :+ v)
-      case Nil => Opts(named, pos)
+    def loop(rest: List[String], o: Opts): Opts = rest match {
+      case f :: tail if fl.switches(f) =>
+        loop(tail, o.copy(switches = o.switches + f))
+      case f :: v :: tail if fl.valued(f) =>
+        loop(tail, o.copy(named = o.named + (f -> v)))
+      case f :: _ if fl.valued(f) => fail(s"flag $f needs a value")
+      case f :: _ if f.startsWith("-") =>
+        fail(s"$verb: unknown flag $f" +
+          (if (fl.all.nonEmpty)
+             s" — accepted: ${fl.all.toSeq.sorted.mkString(", ")}"
+           else " — this verb takes no flags") + s"\n$usage")
+      case v :: tail => loop(tail, o.copy(positional = o.positional :+ v))
+      case Nil => o
     }
-    loop(args, Map.empty, Vector.empty)
+    loop(args, Opts())
   }
+
+  /** The verb's positional args, which must be exactly `names` (as
+    * printed in [[usage]]). */
+  private def positional(verb: String, opts: Opts, names: String*): Seq[String] =
+    if (opts.positional.size == names.size) opts.positional
+    else fail(s"$verb needs ${names.mkString(" ")}\n$usage")
 
   private def req(opts: Opts, k: String): String =
     opts.named.getOrElse(k, fail(s"missing required flag $k\n$usage"))
 
-  /** Loud refusal of unknown named flags (self-review r18): a typo'd
-    * flag (`--queris`) silently dropped by the generic splitter produces
-    * a plausible-but-wrong artifact — the worst failure mode a CLI has.
-    * Scoped per verb so each validates its own vocabulary. */
-  private def rejectUnknownFlags(verb: String, opts: Opts,
-      allowed: Set[String]): Unit = {
-    val unknown = opts.named.keySet -- allowed
-    if (unknown.nonEmpty)
-      fail(s"$verb: unknown flag(s) ${unknown.toSeq.sorted.mkString(", ")}" +
-        (if (allowed.nonEmpty)
-           s" — accepted: ${allowed.toSeq.sorted.mkString(", ")}"
-         else " — this verb takes no flags") + s"\n$usage")
-  }
+  /** The one numeric flag reader: `None` when the flag is absent; a value
+    * that does not parse as `kind`, or fails `ok` (the bound `range`
+    * states), is a usage error naming the verb and the flag. */
+  private def numFlag[T](verb: String, opts: Opts, flag: String, kind: String,
+      read: String => T, range: String)(ok: T => Boolean): Option[T] =
+    opts.named.get(flag).map { v =>
+      val x = try read(v) catch {
+        case _: NumberFormatException =>
+          fail(s"$verb: $flag must be $kind, got '$v'")
+      }
+      if (!ok(x)) fail(s"$verb: $flag must be $range, got $v")
+      x
+    }
 
-  /** CANONICAL path for the output-clash guards (ADVICE r17, extended to
-    * every artifact-writing retrieval verb by the r18 self-review):
-    * exact qualified-path equality misses aliases the filesystem
-    * resolves but makeQualified does not (symlinks, dot segments) and
-    * misses nesting — an output that is a PARENT of an input destroys
-    * the input through overwrite's delete, an output INSIDE an input
-    * corrupts it. Local paths go through File.getCanonicalPath (resolves
-    * symlinks); remote schemes through FileSystem.resolvePath where the
-    * path exists, falling back to the qualified form for a
-    * not-yet-created output. */
+  private def intFlag(verb: String, opts: Opts, flag: String,
+      min: Int = 1): Option[Int] =
+    numFlag(verb, opts, flag, "an integer", _.toInt, s">= $min")(_ >= min)
+
+  /** A fraction in (0, 1], or in [0, 1] where `zeroOk`. */
+  private def fracFlag(verb: String, opts: Opts, flag: String,
+      zeroOk: Boolean = false): Option[Double] =
+    numFlag(verb, opts, flag, "a number", _.toDouble,
+      if (zeroOk) "in [0, 1]" else "in (0, 1]"
+    )(q => q <= 1.0 && (q > 0.0 || zeroOk && q == 0.0))
+
+  /** CANONICAL path for the output-clash guard (ADVICE r17): exact
+    * qualified-path equality misses aliases the filesystem resolves but
+    * makeQualified does not (symlinks, dot segments) and misses nesting —
+    * an output that is a PARENT of an input destroys the input through
+    * overwrite's delete, an output INSIDE an input corrupts it. Local
+    * paths go through File.getCanonicalPath (resolves symlinks); remote
+    * schemes through FileSystem.resolvePath where the path exists,
+    * falling back to the qualified form for a not-yet-created output. */
   private def canonPath(spark: SparkSession, p: String): String = {
     val hp = new org.apache.hadoop.fs.Path(p)
     val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
@@ -1442,9 +1140,10 @@ object Main {
   private def pathsOverlap(a: String, b: String): Boolean =
     a == b || a.startsWith(b + "/") || b.startsWith(a + "/")
 
-  /** Refuse an output that equals, aliases, or nests with any input. */
+  /** Refuse an output that equals, aliases, or nests with any input:
+    * every artifact verb calls this before it reads or writes. */
   private def guardOutputClash(spark: SparkSession, verb: String,
-      out: String, inputs: Seq[(String, String)]): Unit = {
+      out: String, inputs: (String, String)*): Unit = {
     val outCanon = canonPath(spark, out)
     inputs.find { case (_, d) => pathsOverlap(canonPath(spark, d), outCanon) }
       .foreach { case (what, d) =>
@@ -1452,6 +1151,23 @@ object Main {
           s"nest with) the $what dir '$d' — overwrite would destroy a table")
       }
   }
+
+  /** The one artifact writer: overwrite, the configured compression and
+    * per-file row cap, Hive-partitioned by `partitionCols` if any. */
+  private def writeArtifact(df: DataFrame, out: String, cfg: EtlConfig,
+      partitionCols: String*): Unit = {
+    val w = df.write.mode("overwrite")
+      .option("compression", cfg.compression)
+      .option("maxRecordsPerFile", cfg.maxRecordsPerFile)
+    (if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*))
+      .parquet(out)
+  }
+
+  /** Start a streaming query — under `--once` it drains the backlog and
+    * exits (Trigger.AvailableNow) — and block until it terminates. */
+  private def awaitQuery(writer: DataStreamWriter[Row], once: Boolean): Unit =
+    (if (once) writer.trigger(Trigger.AvailableNow()) else writer)
+      .start().awaitTermination()
 
   private def fail(msg: String): Nothing =
     throw new IllegalArgumentException(msg)

@@ -79,10 +79,8 @@ object StreamingTransform {
     val lines = spark.readStream
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .text(landingDir)
-    val parsed = AccessLogParser.parse(lines, dropMalformed = true)
-      .withColumn("OrigBucket",
-        if (cfg.mergeOrigBuckets) lit("ALLBUCKETS") else col("Bucket"))
-      .withColumn("agg_ts", Transform.bucketTs(cfg, cfg.aggregateSeconds))
+    val parsed = Transform
+      .bucket(AccessLogParser.parse(lines, dropMalformed = true), cfg)
       .withWatermark("ts", watermarkDelay)
     // D1 under redelivery: state is evicted once the watermark passes —
     // the streaming analog of the reference's seen-set reset (ST6 + D1).
@@ -259,10 +257,12 @@ object StreamingTransform {
       df: DataFrame, outDir: String, checkpointDir: String,
       cfg: EtlConfig = EtlConfig(hourlyPartitions = false),
       triggerMs: Long = 60000L): DataStreamWriter[Row] = {
-    val local = timestamp_seconds(unix_timestamp(col("ts")) + cfg.tzOffsetSeconds)
+    // dt on the same local clock (zone rules or fixed offset) as the
+    // batch sink's K3 partition values
     val withDt =
       if (df.columns.contains("dt")) df // passthrough already routed it (ST3)
-      else df.withColumn("dt", date_format(local, "yyyyMMdd"))
+      else df.withColumn("dt",
+        date_format(Transform.localClock(cfg, col("ts")), "yyyyMMdd"))
     withDt
       .drop("ts", "agg_ts")
       .writeStream

@@ -275,7 +275,7 @@ object Transform {
     * time, codegen'd zone lookup), else the fixed-offset arithmetic (the
     * reference's shipped default is a DST-less POSIX tz, so the
     * pure-arithmetic path stays the fast default). */
-  private def localClock(cfg: EtlConfig, t: Column) = cfg.tzZone match {
+  private[etl] def localClock(cfg: EtlConfig, t: Column) = cfg.tzZone match {
     case Some(zone) => from_utc_timestamp(t, zone)
     case None => timestamp_seconds(unix_timestamp(t) + cfg.tzOffsetSeconds)
   }
@@ -317,7 +317,9 @@ object Transform {
   def bucketAndDedup(parsed: DataFrame, cfg: EtlConfig): DataFrame =
     dedup(bucket(parsed, cfg), cfg)
 
-  private def bucket(parsed: DataFrame, cfg: EtlConfig) = parsed
+  /** T2 + A3: the aggregate window `agg_ts` and the `OrigBucket` key,
+    * shared by the batch and streaming pipelines. */
+  private[etl] def bucket(parsed: DataFrame, cfg: EtlConfig) = parsed
     .withColumn("OrigBucket",
       if (cfg.mergeOrigBuckets) lit("ALLBUCKETS") else col("Bucket"))
     .withColumn("agg_ts", bucketTs(cfg, cfg.aggregateSeconds))

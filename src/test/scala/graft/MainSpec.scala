@@ -1364,22 +1364,6 @@ class MainSpec extends SparkSpec {
     assert(intercept[IllegalArgumentException](Main.run(spark,
       Seq("fuse", s"$tmp/lex", s"$tmp/sem", s"$tmp/sem"), Map.empty))
       .getMessage.contains("must differ"))
-    // alias and nesting clashes refuse too (ADVICE r17): a symlink to a
-    // rank dir, an output nested inside one, and a rank dir nested
-    // inside the output are all the same destroy-a-rank-table mistake
-    // the exact-path guard used to miss
-    val semLink = java.nio.file.Files.createSymbolicLink(
-      java.nio.file.Paths.get(s"$tmp/semlink"),
-      java.nio.file.Paths.get(s"$tmp/sem")).toString
-    assert(intercept[IllegalArgumentException](Main.run(spark,
-      Seq("fuse", s"$tmp/lex", s"$tmp/sem", semLink), Map.empty))
-      .getMessage.contains("must differ"))
-    assert(intercept[IllegalArgumentException](Main.run(spark,
-      Seq("fuse", s"$tmp/lex", s"$tmp/sem", s"$tmp/sem/nested"), Map.empty))
-      .getMessage.contains("must differ"))
-    assert(intercept[IllegalArgumentException](Main.run(spark,
-      Seq("fuse", s"$tmp/lex", s"$tmp/sem", tmp), Map.empty))
-      .getMessage.contains("must differ"))
     lex.drop("rk").write.parquet(s"$tmp/norank")
     assert(intercept[IllegalArgumentException](Main.run(spark,
       Seq("fuse", s"$tmp/norank", s"$tmp/sem", s"$tmp/fused3"), Map.empty))
@@ -1453,5 +1437,89 @@ class MainSpec extends SparkSpec {
     // mode takes 3) is a usage error, not a MatchError
     intercept[IllegalArgumentException](Main.run(spark,
       Seq("stream", "--queue-dir", "/q", "landing", "out", "ckpt"), Map.empty))
+  }
+
+  test("output guard on every artifact verb: the input dir, a dir nested " +
+    "in it, its parent and a symlink to it all refuse; the input survives") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft-cli-guard").toString
+    // (verb, input dirs, argv from (inputs, output))
+    def plain(ins: Seq[String], out: String) = ins :+ out
+    val verbs: Seq[(String, Int, (Seq[String], String) => Seq[String])] =
+      Seq("dedup", "spandedup", "salvage", "curate", "decontam", "bpetrain",
+        "pack", "overlap", "select", "semdedup", "cluster", "bm25index",
+        "ivftrain").map(v => (v, 1, plain _)) ++
+      Seq("tokenize", "semdecontam", "dsir", "bm25", "ivfindex", "fuse")
+        .map(v => (v, 2, plain _)) :+
+      (("ann", 4, (ins: Seq[String], out: String) => Seq(ins(0), out,
+        "--queries", ins(1), "--centroids", ins(2), "--index", ins(3))))
+    val rows = Seq((1L, "a b c"), (2L, "d e f"), (3L, "g h i"))
+      .toDF("doc_id", "text")
+    verbs.foreach { case (verb, n, argv) =>
+      val parent = s"$tmp/$verb"
+      val ins = (0 until n).map(i => s"$parent/in$i")
+      ins.foreach(rows.write.parquet(_))
+      ins.zipWithIndex.foreach { case (in, i) =>
+        val link = Files.createSymbolicLink(
+          java.nio.file.Paths.get(s"$parent/link$i"),
+          java.nio.file.Paths.get(in)).toString
+        Seq(in, s"$in/nested", parent, link).foreach { out =>
+          val e = intercept[IllegalArgumentException](
+            Main.run(spark, verb +: argv(ins, out), Map.empty))
+          assert(e.getMessage.contains("must differ"),
+            s"$verb -> $out: ${e.getMessage}")
+        }
+      }
+      ins.foreach { in =>
+        assert(spark.read.parquet(in).count() == 3, s"$verb lost rows of $in")
+      }
+    }
+  }
+
+  test("every verb refuses an unknown flag and names the flags it accepts") {
+    Main.verbFlags.foreach { case (verb, flags) =>
+      val e = intercept[IllegalArgumentException](Main.run(spark,
+        Seq(verb, "a", "b", "--no-such-flag", "1"), Map.empty))
+      // the first line is the refusal; the usage text follows it
+      val refusal = e.getMessage.linesIterator.next()
+      assert(refusal.startsWith(s"$verb: unknown flag --no-such-flag"), refusal)
+      if (flags.all.isEmpty) assert(refusal.contains("takes no flags"), refusal)
+      flags.all.foreach(f => assert(refusal.contains(f), s"$f: $refusal"))
+    }
+    // the typo that used to run curate at the default quality bar
+    val typo = intercept[IllegalArgumentException](Main.run(spark,
+      Seq("curate", "in", "out", "--quality-mn", "0.9"), Map.empty))
+    assert(typo.getMessage.contains("unknown flag --quality-mn") &&
+      typo.getMessage.contains("--quality-min"), typo.getMessage)
+    // switches take no value, wherever they stand
+    assert(Main.parse("dedup", List("c", "--best", "o")) ==
+      Main.Opts(switches = Set("--best"), positional = Vector("c", "o")))
+    assert(Main.parse("stream", List("--once", "l", "o", "k")) ==
+      Main.Opts(switches = Set("--once"), positional = Vector("l", "o", "k")))
+    assert(Main.parse("curate", List("c", "o", "--best", "--quality-min",
+      "0.7")) == Main.Opts(Map("--quality-min" -> "0.7"), Set("--best"),
+      Vector("c", "o")))
+    // compact's kinds are switches; ingest's --sigs takes a dir
+    (graft.etl.Compact.sidecarKinds.keySet + "--flat").foreach { k =>
+      assert(Main.parse("compact", List("lake", k)) ==
+        Main.Opts(switches = Set(k), positional = Vector("lake")))
+    }
+    assert(Main.parse("ingest", List("--sigs", "s", "d", "c", "k")) ==
+      Main.Opts(Map("--sigs" -> "s"), positional = Vector("d", "c", "k")))
+  }
+
+  test("usage names every dispatched verb and exactly its declared flags") {
+    val forms = Main.usage.linesIterator.map(_.trim)
+      .filter(_.startsWith("graft.Main ")).toSeq
+    assert(forms.map(_.split(" ")(1)).toSet == Main.verbFlags.keySet)
+    Main.verbFlags.foreach { case (verb, flags) =>
+      val inUsage = forms.filter(_.startsWith(s"graft.Main $verb "))
+        .flatMap(_.split("[\\s\\[\\]|]+")).filter(_.startsWith("-")).toSet
+      assert(inUsage == flags.all, s"$verb: usage $inUsage, declared ${flags.all}")
+      // with no args the verb's own arm answers, so it is dispatched
+      val e = intercept[IllegalArgumentException](
+        Main.run(spark, Seq(verb), Map.empty))
+      assert(e.getMessage.startsWith(s"$verb "), e.getMessage)
+    }
   }
 }

@@ -383,4 +383,26 @@ class StreamingSpec extends SparkSpec {
     val result = spark.read.parquet(out)
     assert(result.count() == 150) // late rows appended, none lost
   }
+
+  test("stream dt follows the configured zone, into the same dir as batch (T3)") {
+    val tmp = Files.createTempDirectory("graft-stream-tz").toString
+    val landing = s"$tmp/landing"
+    Files.createDirectories(Paths.get(landing))
+    // 03:00-03:10 UTC on June 15 is 23:00-23:10 EDT on June 14
+    val t0 = java.time.Instant.parse("2024-06-15T03:00:00Z").getEpochSecond
+    writeBatch(landing, "b1.log",
+      LogGen.entries(40, t0 = t0, seed = 26).map(_.line))
+    val cfg = EtlConfig(tzZone = Some("America/New_York"),
+      hourlyPartitions = false)
+    StreamingTransform.writer(
+      StreamingTransform.stream(spark, landing, cfg, watermarkDelay = "1 hour"),
+      s"$tmp/stream", s"$tmp/ckpt", cfg)
+      .trigger(Trigger.AvailableNow()).start().awaitTermination(120000)
+    Transform.run(spark, Seq(landing), s"$tmp/batch", cfg)
+    def dts(dir: String) = new java.io.File(dir).listFiles.map(_.getName)
+      .filter(_.startsWith("dt=")).toSet
+    assert(dts(s"$tmp/batch") == Set("dt=20240614"))
+    assert(dts(s"$tmp/stream") == Set("dt=20240614"))
+    assert(spark.read.parquet(s"$tmp/stream").count() == 40)
+  }
 }
