@@ -23,43 +23,33 @@ package graft
   * s04/s11/d52/d53/d54/d03 rows.
   */
 object ConfReplay {
+  import graft.queries.{DocumentQueries, EmbeddingQueries, QueryConf}
+
+  /** (arg key, session conf key, gate default), in print order. */
+  private val Table = Seq(
+    ("cells", QueryConf.IvfCellsKey, QueryConf.DefaultIvfCells),
+    ("probes", QueryConf.IvfProbesKey, QueryConf.DefaultIvfProbes),
+    ("rounds", QueryConf.LloydRoundsKey, QueryConf.DefaultLloydRounds),
+    ("percell", QueryConf.CoresetPerCellKey, QueryConf.DefaultCoresetPerCell),
+    ("rarecap", QueryConf.ContainRareCapKey, QueryConf.DefaultContainRareCap),
+    ("winnow", QueryConf.WinnowWindowKey, QueryConf.DefaultWinnowWindow),
+    ("maxdf", QueryConf.WinnowMaxDfKey, QueryConf.DefaultWinnowMaxDf),
+    ("maxbucket", QueryConf.DedupMaxBucketKey, QueryConf.DefaultDedupMaxBucket),
+    ("bm25k", QueryConf.Bm25TopKKey, QueryConf.DefaultBm25TopK),
+    ("knnk", QueryConf.KnnKKey, QueryConf.DefaultKnnK),
+    ("knnnprobe", QueryConf.KnnNprobeKey, QueryConf.DefaultKnnNprobe))
+
+  val knobs = DevKit.Knobs(keys = Table.map(_._1).toSet)
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    val kv = args.drop(2).map { a =>
-      a.split("=", 2) match {
-        case Array(k, v) => k -> v.toInt
-        case _ => throw new IllegalArgumentException(
-          s"expected key=value, got '$a'")
-      }
-    }.toMap
-    val unknown = kv.keySet --
-      Set("cells", "probes", "rounds", "percell", "rarecap", "winnow",
-        "maxdf", "maxbucket", "bm25k", "knnk", "knnnprobe")
-    require(unknown.isEmpty, s"unknown knobs: $unknown")
-    import graft.queries.{DocumentQueries, EmbeddingQueries, QueryConf}
-    val cells = kv.getOrElse("cells", QueryConf.DefaultIvfCells)
-    val probes = kv.getOrElse("probes", QueryConf.DefaultIvfProbes)
-    val rounds = kv.getOrElse("rounds", QueryConf.DefaultLloydRounds)
-    val perCell = kv.getOrElse("percell", QueryConf.DefaultCoresetPerCell)
-    val rareCap = kv.getOrElse("rarecap", QueryConf.DefaultContainRareCap)
-    val winnowW = kv.getOrElse("winnow", QueryConf.DefaultWinnowWindow)
-    val maxDf = kv.getOrElse("maxdf", QueryConf.DefaultWinnowMaxDf)
-    val maxBucket = kv.getOrElse("maxbucket", QueryConf.DefaultDedupMaxBucket)
-    val bm25K = kv.getOrElse("bm25k", QueryConf.DefaultBm25TopK)
-    val knnK = kv.getOrElse("knnk", QueryConf.DefaultKnnK)
-    val knnNprobe = kv.getOrElse("knnnprobe", QueryConf.DefaultKnnNprobe)
-    val spark = GraftSession.local(appName = "graft-conf-replay")
-    spark.conf.set(QueryConf.IvfCellsKey, cells.toString)
-    spark.conf.set(QueryConf.IvfProbesKey, probes.toString)
-    spark.conf.set(QueryConf.LloydRoundsKey, rounds.toString)
-    spark.conf.set(QueryConf.CoresetPerCellKey, perCell.toString)
-    spark.conf.set(QueryConf.ContainRareCapKey, rareCap.toString)
-    spark.conf.set(QueryConf.WinnowWindowKey, winnowW.toString)
-    spark.conf.set(QueryConf.WinnowMaxDfKey, maxDf.toString)
-    spark.conf.set(QueryConf.DedupMaxBucketKey, maxBucket.toString)
-    spark.conf.set(QueryConf.Bm25TopKKey, bm25K.toString)
-    spark.conf.set(QueryConf.KnnKKey, knnK.toString)
-    spark.conf.set(QueryConf.KnnNprobeKey, knnNprobe.toString)
+    val given = knobs.kv(args.toSeq.drop(2))
+    val at = Table.map { case (k, _, d) => k -> given.getOrElse(k, d) }.toMap
+    val Seq(cells, probes, rounds, perCell, rareCap, winnowW, maxDf,
+      maxBucket, bm25K, knnK, knnNprobe) = Table.map(t => at(t._1))
+    val spark = DevKit.open("graft-conf-replay", knobs).spark
+    Table.foreach { case (k, key, _) => spark.conf.set(key, at(k).toString) }
+    val knobLine = Table.map { case (k, _, _) => s"$k=${at(k)}" }.mkString(" ")
     new java.io.File(outDir).mkdirs()
     val targets = Seq(
       "s04_ann_ivf" -> EmbeddingQueries.s04OracleSqlAt(cells, probes, rounds),
@@ -86,11 +76,7 @@ object ConfReplay {
     targets.foreach { case (name, _) =>
       SparkEntry.queries(name)(spark, sfDir)
         .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-      println(s"[conf-replay] dumped $name " +
-        s"(cells=$cells probes=$probes rounds=$rounds percell=$perCell " +
-        s"rarecap=$rareCap winnow=$winnowW maxdf=$maxDf " +
-        s"maxbucket=$maxBucket bm25k=$bm25K knnk=$knnK " +
-        s"knnnprobe=$knnNprobe)")
+      println(s"[conf-replay] dumped $name ($knobLine)")
     }
     // The STORED-ARTIFACT ann path at the same knobs (r19, VERDICT r18
     // #5): ivftrain → ivfindex → annRankTableIndexed through real

@@ -17,7 +17,7 @@ object GraftSession {
     "SPARK_GRAFT_CPUS",
     math.min(32, Runtime.getRuntime.availableProcessors).toString)
 
-  /** `extraConf` lets a caller (PerfAB's A/B variants) layer config keys
+  /** `extraConf` lets a caller (Probe's A/B conf variants) layer config keys
     * on TOP of the canonical session instead of copy-pasting the builder
     * — the extension and config list lives here and only here. */
   def local(

@@ -141,10 +141,12 @@ object Main {
       |      (writes a MANIFEST (doc_id, n_paras, n_dropped, salvaged), not a
       |       corpus — join it back on doc_id like a spandedup manifest)""".stripMargin
 
-  /** A verb's flag vocabulary: flags that take a value, and switches that
-    * take none. */
+  /** A verb's flag vocabulary: flags that take a value, switches that
+    * take none, and `needs`: flags that only act together with another
+    * flag (flag -> that flag), refused alone instead of ignored. */
   private[graft] final case class Flags(valued: Set[String] = Set.empty,
-      switches: Set[String] = Set.empty) {
+      switches: Set[String] = Set.empty,
+      needs: Map[String, String] = Map.empty) {
     def all: Set[String] = valued ++ switches
   }
 
@@ -153,11 +155,15 @@ object Main {
     * [[parse]] refuses any flag a verb does not declare. */
   private[graft] val verbFlags: Map[String, Flags] = Map(
     "aggregate" -> Flags(Set("-r", "-b", "-k")),
-    "transform" -> Flags(Set("-o", "--loop", "--iterations")),
-    "stream" -> Flags(Set("--queue-dir", "--objects"), Set("--once")),
+    "transform" -> Flags(Set("-o", "--loop", "--iterations"),
+      needs = Map("--iterations" -> "--loop")),
+    "stream" -> Flags(Set("--queue-dir", "--objects"), Set("--once"),
+      needs = Map("--objects" -> "--queue-dir")),
     "ingest" -> Flags(Set("--sigs", "--spansigs", "--span-sep",
       "--winnowsigs", "--repsigs", "--decontam", "--decontam-n",
-      "--quality-min", "--rejects"), Set("--once")),
+      "--quality-min", "--rejects"), Set("--once"), needs = Map(
+      "--span-sep" -> "--spansigs", "--decontam-n" -> "--decontam",
+      "--rejects" -> "--quality-min")),
     "compact" -> Flags(switches = Compact.sidecarKinds.keySet + "--flat"),
     "dedup" -> Flags(switches = Set("--best")),
     "spandedup" -> Flags(Set("--sep")),
@@ -177,7 +183,7 @@ object Main {
     "ivftrain" -> Flags(),
     "ivfindex" -> Flags(),
     "ann" -> Flags(Set("--topk", "--queries", "--nqueries", "--centroids",
-      "--index")),
+      "--index"), needs = Map("--index" -> "--centroids")),
     "fuse" -> Flags(Set("--topk")),
     "salvage" -> Flags(Set("--quality-min", "--sep")))
 
@@ -310,9 +316,6 @@ object Main {
         // rows per batch (replay-idempotent overwrite partitions)
         val qualityMin = fracFlag(verb, opts, "--quality-min")
         val rejectsDir = opts.named.get("--rejects")
-        if (rejectsDir.nonEmpty && qualityMin.isEmpty)
-          fail("ingest: --rejects needs --quality-min — without a gate " +
-            "nothing is ever rejected")
         val ingestStream = graft.streaming.DocumentIngest.stream(spark, drop)
         val writer =
           if (sigDir.isEmpty && spanSigDir.isEmpty && decontamDir.isEmpty &&
@@ -818,9 +821,6 @@ object Main {
         val qDir = opts.named.get("--queries")
         val cDir = opts.named.get("--centroids")
         val iDir = opts.named.get("--index")
-        if (iDir.isDefined && cDir.isEmpty)
-          fail("ann: --index needs --centroids — the probe batch assigns " +
-            "against the same stored quantizer the index was built with")
         // --queries and --nqueries are the SAME choice made two ways: a
         // silent precedence would rank the wrong query set (self-review)
         if (qDir.isDefined && opts.named.contains("--nqueries"))
@@ -1058,7 +1058,8 @@ object Main {
   }
 
   /** The one flag reader: the verb's declared switches, its declared
-    * `-x value` flags, and everything else positional. Any other flag is
+    * `-x value` flags, and everything else positional. Any other flag,
+    * and a flag given without the flag it [[Flags.needs]], is
     * refused loudly (self-review r18): a typo'd flag silently dropped
     * would run at a default and produce a plausible-but-wrong artifact —
     * the worst failure mode a CLI has. */
@@ -1079,7 +1080,12 @@ object Main {
       case v :: tail => loop(tail, o.copy(positional = o.positional :+ v))
       case Nil => o
     }
-    loop(args, Opts())
+    val opts = loop(args, Opts())
+    fl.needs.foreach { case (f, parent) =>
+      if (opts.named.contains(f) && !opts.named.contains(parent))
+        fail(s"$verb: $f needs $parent — it only acts together with $parent")
+    }
+    opts
   }
 
   /** The verb's positional args, which must be exactly `names` (as

@@ -1,101 +1,87 @@
 package graft
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+
 import org.apache.spark.sql.SparkSession
-/** Dev tool: time (and optionally explain) individual queries at a SF.
-  * `SPARK_GRAFT_JOBS` additionally prints a per-Spark-job time breakdown
-  * (job id, wall duration, first stage name) — the fastest way to see
-  * which materialization inside a multi-job query owns the wall clock. */
+
+/** Dev tool: time individual queries at a SF, and A/B session confs.
+  *
+  * After each query's `[probe]` wall line it prints the run's
+  * [[DevKit.Meter]] counters:
+  *  - `[probe-job]`: one line per Spark job (id, wall, first stage name)
+  *    — the fastest way to see which materialization inside a multi-job
+  *    query owns the wall clock;
+  *  - `[probe-shuffle]`: shuffle-write bytes and records. They depend on
+  *    the data, not the clock, so unlike wall time they survive a
+  *    contended host;
+  *  - `[probe-storage]`: the persistent-RDD census before the run's
+  *    storage is released (a query whose cuts outlive their consumers
+  *    shows up here). Every run releases its storage after the clock
+  *    stops, like the bench.
+  *
+  * `SPARK_GRAFT_CONF` is a `;`-separated list of conf variants, each
+  * `k=v,k2=v2` layered on the canonical session (a `graft.exp.<name>` key
+  * gates an experimental code path). Each of `SPARK_GRAFT_BENCH_RUNS`
+  * rounds (default 1) builds one fresh session per variant in turn and
+  * runs every query `warm=N` untimed times, then once timed; with more
+  * than one run in all, `[ab-summary]` prints per-variant min/median.
+  * Interleaving inside ONE JVM is the point: wall time on a shared host
+  * drifts ±30-40% between sbt sessions (SURVEY "Reading BENCH files"), so
+  * only same-JVM interleaved runs count as A/B evidence.
+  *
+  * {{{
+  * SPARK_GRAFT_CONF='spark.sql.adaptive.enabled=true;spark.sql.adaptive.enabled=false' \
+  * SPARK_GRAFT_BENCH_RUNS=3 sbt "runMain graft.Probe d14_contamination warm=2"
+  * }}}
+  *
+  * `SPARK_GRAFT_EXPLAIN` (any value) also prints each formatted plan. */
 object Probe {
+  val knobs = DevKit.Knobs(env = Set("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CONF",
+    "SPARK_GRAFT_BENCH_RUNS", "SPARK_GRAFT_EXPLAIN"), keys = Set("warm"))
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // SPARK_GRAFT_CONF="k=v,k2=v2": extra session confs (e.g. a
-    // graft.exp.* experiment key) layered on the canonical session —
-    // the PerfAB injection point, available to byte/job probes too
-    val extraConf = sys.env.get("SPARK_GRAFT_CONF")
-      .map(_.split(",").filter(_.nonEmpty).map { kv =>
-        val Array(k, v) = kv.split("=", 2); (k, v)
-      }.toMap).getOrElse(Map.empty[String, String])
-    val spark = GraftSession.local(appName = "graft-probe",
-      extraConf = extraConf)
-    val explain = sys.env.contains("SPARK_GRAFT_EXPLAIN")
-    if (sys.env.contains("SPARK_GRAFT_JOBS")) {
-      // durations come from the EVENTS' own time fields, not a clock read
-      // inside the listener callback: the listener bus is async and
-      // backlogs exactly when a query fires many jobs in quick succession
-      // — a bus-drain-time measurement would misattribute the wall clock
-      // the flag exists to attribute
-      val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-      spark.sparkContext.addSparkListener(new SparkListener {
-        override def onJobStart(j: SparkListenerJobStart): Unit = {
-          val site = j.stageInfos.headOption.map(_.name).getOrElse("?")
-          starts.put(j.jobId, (j.time, site))
+    val sfDir = knobs.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val variants = knobs.getOrElse("SPARK_GRAFT_CONF", "").split(";", -1).toSeq
+    val rounds = knobs.int("SPARK_GRAFT_BENCH_RUNS", 1)
+    val explain = knobs.get("SPARK_GRAFT_EXPLAIN").isDefined
+    val (kv, queries) = args.toSeq.partition(_.contains("="))
+    val warm = knobs.kv(kv).getOrElse("warm", 0)
+    val ab = rounds * variants.size > 1
+    val walls = scala.collection.mutable.Map.empty[(String, String), Seq[Double]]
+      .withDefaultValue(Nil)
+    for (r <- 1 to rounds; v <- variants) {
+      val conf = v.split(",").filter(_.nonEmpty).map(DevKit.pair).toMap
+      val meter = DevKit.open("graft-probe", knobs, conf)
+      val spark = meter.spark
+      for (name <- queries) {
+        val run = DevKit.timedRuns(meter, 1, warm) { _ =>
+          val df = SparkEntry.queries(name)(spark, sfDir)
+          if (explain) df.explain("formatted")
+          // the shared bench action — count() prunes a projection-shaped
+          // plan (d19/d51/s05 family) to a bare row-count scan, so a bare
+          // count here timed nothing for exactly the plans Probe is most
+          // often pointed at
+          BenchExec.run(df)
         }
-        override def onJobEnd(j: SparkListenerJobEnd): Unit = {
-          Option(starts.remove(j.jobId)).foreach { case (t0, site) =>
-            System.err.println(
-              f"[probe-job]   #${j.jobId}%-4d ${(j.time - t0)/1e3}%7.2f s  $site")
-          }
+        val (dt, m) = (run.walls.head, run.meter)
+        walls((name, v)) :+= dt
+        System.err.println(f"[probe] $name%-28s $dt%8.2f s  rows=${run.last}" +
+          (if (ab) s"  round $r [$v]" else ""))
+        m.jobLog.foreach { case (id, sec, site) =>
+          System.err.println(f"[probe-job]   #$id%-4d $sec%7.2f s  $site")
         }
-      })
-    }
-    // SPARK_GRAFT_STORAGE: after each query, report the persistent-RDD
-    // census (count + cached memory/disk bytes) — the residency view
-    // behind the barrier-release audits (a query whose materialized
-    // frames outlive their consumers shows up as monotone growth here).
-    // SPARK_GRAFT_UNPERSIST: release all persistent RDDs after each
-    // query (Bench's between-runs discipline) — A/B against the default
-    // accumulate-across-queries mode to attribute storage-pressure skew.
-    val storage = sys.env.contains("SPARK_GRAFT_STORAGE")
-    val unpersist = sys.env.contains("SPARK_GRAFT_UNPERSIST")
-    // SPARK_GRAFT_SHUFFLE: per-query total shuffle WRITE bytes/records
-    // (summed over completed stages). Byte counters are data-dependent,
-    // not clock-dependent, so unlike wall time they survive a contended
-    // box — the honest cross-run metric for "this rewrite moves less
-    // data", where wall-clock A/Bs need a quiet session.
-    val shuffleAcct = sys.env.contains("SPARK_GRAFT_SHUFFLE")
-    val shufBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    val shufRecs = new java.util.concurrent.atomic.AtomicLong(0L)
-    if (shuffleAcct)
-      spark.sparkContext.addSparkListener(new SparkListener {
-        override def onStageCompleted(
-            s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          shufBytes.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-          shufRecs.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
-          ()
-        }
-      })
-    args.foreach { name =>
-      shufBytes.set(0L); shufRecs.set(0L)
-      val t0 = System.nanoTime()
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      if (explain) df.explain("formatted")
-      // the shared bench action — count() prunes a projection-shaped
-      // plan (d19/d51/s05 family) to a bare row-count scan, so a bare
-      // count here timed nothing for exactly the plans Probe is most
-      // often pointed at (the r15 bench-action lesson, applied to the
-      // attribution tool too)
-      val n = BenchExec.run(df)
-      System.err.println(f"[probe] $name%-28s ${(System.nanoTime()-t0)/1e9}%8.2f s  rows=$n")
-      if (storage) {
-        val infos = spark.sparkContext.getRDDStorageInfo
-        val mem = infos.map(_.memSize).sum / 1e6
-        val disk = infos.map(_.diskSize).sum / 1e6
-        System.err.println(f"[probe-storage] ${infos.length}%3d cached RDDs, " +
-          f"$mem%8.1f MB mem, $disk%8.1f MB disk")
+        System.err.println(f"[probe-shuffle] ${m.shuffleBytes / 1e6}%10.2f MB " +
+          f"written, ${m.shuffleRecords}%12d records")
+        System.err.println(f"[probe-storage] ${m.cachedRdds}%3d cached RDDs, " +
+          f"${m.cachedMemBytes / 1e6}%8.1f MB mem, " +
+          f"${m.cachedDiskBytes / 1e6}%8.1f MB disk")
       }
-      if (shuffleAcct) {
-        // the listener bus is async: let it drain before reading tallies
-        var prev = -1L
-        while (prev != shufBytes.get()) {
-          prev = shufBytes.get(); Thread.sleep(200)
-        }
-        System.err.println(f"[probe-shuffle] ${shufBytes.get() / 1e6}%10.2f MB " +
-          f"written, ${shufRecs.get()}%12d records")
-      }
-      if (unpersist)
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+      spark.stop()
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
     }
-    spark.stop()
+    if (ab) for (name <- queries; v <- variants) {
+      val ts = walls((name, v))
+      System.err.println(f"[ab-summary] [$v] $name%-26s min=${ts.min}%6.2f" +
+        f" med=${DevKit.median(ts)}%6.2f  (${DevKit.wallsText(ts)})")
+    }
   }
 }

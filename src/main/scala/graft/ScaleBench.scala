@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-
 /** Dev tool: the scaling measurement behind SCALE.md. Runs the dedup-scope
   * queries ([[graft.queries.DedupQueries.scopedQueryNames]]) over
   * ScaleGen corpora at SEVERAL sizes in
@@ -145,42 +141,21 @@ object ScaleBench {
       // the probe side must stay at d56's post-census shape
       "d58_bm25_probe"
 
-  // dev subset filter (comma-separated ids, matched on the short prefix
-  // like Bench's): sweep just the named cells — unset sweeps everything
-  private def selected(name: String): Boolean =
-    sys.env.get("SPARK_GRAFT_SCALE_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .forall(ids => ids(name.takeWhile(_ != '_')) || ids(name))
+  val knobs = DevKit.Knobs(
+    env = Set("SPARK_GRAFT_BENCH_RUNS", "SPARK_GRAFT_SCALE_QUERIES"),
+    labels = true)
 
   def main(args: Array[String]): Unit = {
-    val scales = args.toSeq.map { a =>
-      val Array(label, dir) = a.split("=", 2); (label, dir)
-    }
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = GraftSession.local(appName = "graft-scale-bench")
-    // job accounting for the overhead-amortization read-out; durations
-    // from the events' own time fields (the listener bus is async)
-    val jobCount = new AtomicInteger(0)
-    val jobNanos = new AtomicLong(0L)
-    // java.lang.Long VALUES, deliberately: with a Scala Long value type,
-    // remove() on a missing key returns Java null which unboxes to 0L, so
-    // Option(…) is Some(0L) and a dropped JobStart event (the async bus
-    // sheds load under exactly the biggest runs) would tally the raw
-    // epoch timestamp as a duration instead of being skipped
-    val starts = new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        starts.put(j.jobId, java.lang.Long.valueOf(j.time))
-      override def onJobEnd(j: SparkListenerJobEnd): Unit = {
-        val t0 = starts.remove(j.jobId)
-        if (t0 != null) {
-          jobCount.incrementAndGet()
-          jobNanos.addAndGet((j.time - t0.longValue()) * 1000000L)
-        }
-      }
-    })
-    val results = scala.collection.mutable.ListBuffer
-      .empty[(String, String, Double, Int, Double, Long)]
+    val scales = args.toSeq.map(DevKit.pair)
+    val runs = knobs.int("SPARK_GRAFT_BENCH_RUNS", 3)
+    // dev subset filter (comma-separated ids, matched on the short prefix
+    // like Bench's): sweep just the named cells — unset sweeps everything
+    val only = knobs.get("SPARK_GRAFT_SCALE_QUERIES")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    def selected(name: String): Boolean =
+      only.forall(ids => ids(name.takeWhile(_ != '_')) || ids(name))
+    val meter = DevKit.open("graft-scale-bench", knobs)
+    val spark = meter.spark
     // Heap-sizing guard (round-15 lesson, SCALE.md "driver heap sizing"):
     // d47/d48/d52's x100+ cells need ~24g of driver heap for honest
     // slopes — under the 8g default the measured "slope" is mostly GC
@@ -203,39 +178,18 @@ object ScaleBench {
           "Re-run with SPARK_DRIVER_MEM=24g for honest numbers.")
       System.err.println("=" * 72)
     }
-    for ((label, dir, nDocs) <- docCounts) {
-      for (q <- Queries if selected(q)) {
-        val fn = SparkEntry.queries(q)
-        var lastJobs = 0
-        var lastJobSec = 0.0
-        val times = (1 to runs).map { _ =>
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = true))
-          spark.catalog.clearCache()
-          jobCount.set(0); jobNanos.set(0L)
-          val t0 = System.nanoTime()
-          BenchExec.run(fn(spark, dir))
-          val dt = (System.nanoTime() - t0) / 1e9
-          // the listener bus is async and its drain API is private; poll
-          // until the job tally stops moving (tallies are advisory)
-          var prev = -1
-          while (prev != jobCount.get()) {
-            prev = jobCount.get(); Thread.sleep(100)
-          }
-          lastJobs = jobCount.get(); lastJobSec = jobNanos.get() / 1e9
-          dt
-        }
-        System.err.println(f"[scale] $label%-6s $q%-26s min=${times.min}%7.2f s" +
-          f"  jobs=$lastJobs%3d jobSec=$lastJobSec%7.2f" +
-          f"  (${times.map(t => f"$t%.2f").mkString(" ")})")
-        results += ((label, q, times.min, lastJobs, lastJobSec, nDocs))
-      }
+    val rows = for ((label, dir, nDocs) <- docCounts; q <- Queries
+        if selected(q)) yield {
+      val fn = SparkEntry.queries(q)
+      val run = DevKit.timedRuns(meter, runs)(_ => BenchExec.run(fn(spark, dir)))
+      val m = run.meter
+      System.err.println(f"[scale] $label%-6s $q%-26s min=${run.min}%7.2f s" +
+        f"  jobs=${m.jobs}%3d jobSec=${m.jobSec}%7.2f" +
+        f"  (${DevKit.wallsText(run.walls)})")
+      DevKit.csv(label, q, run.min, m.jobs, m.jobSec, nDocs)
     }
     println("scale,query,min_wall_s,jobs,job_sum_s,n_docs")
-    results.foreach { case (l, q, w, j, js, n) =>
-      println(String.format(java.util.Locale.ROOT, "%s,%s,%.2f,%d,%.2f,%d",
-        l, q, Double.box(w), Int.box(j), Double.box(js), Long.box(n)))
-    }
+    rows.foreach(println)
     spark.stop()
   }
 }

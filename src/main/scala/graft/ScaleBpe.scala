@@ -19,45 +19,37 @@ package graft
   * ~89 merges; production merge counts need production vocab).
   */
 object ScaleBpe {
+  val knobs = DevKit.Knobs()
+
   def main(args: Array[String]): Unit = {
     val Array(dir, sparkKs, driverKs) = args
-    val spark = GraftSession.local(appName = "graft-scale-bpe")
+    val meter = DevKit.open("graft-scale-bpe", knobs)
+    val spark = meter.spark
     import spark.implicits._
     val docs =
       if (dir.startsWith("synth:")) {
         val Array(_, nd, vs) = dir.split(":")
         val vocab = vs.toInt
         spark.range(0L, nd.toLong, 1L, 32).map { id =>
-          def mix(z0: Long): Long = {
-            var z = z0 + 0x9e3779b97f4a7c15L
-            z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-            z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-            z ^ (z >>> 31)
-          }
-          val n = 50 + Math.floorMod(mix(id), 151L).toInt
+          val n = 50 + Math.floorMod(ScaleGen.mix64(id), 151L).toInt
           // Zipf-ish word ids: squared uniform biases toward low ids so
           // the pair-count distribution has the hot head real text has
           val text = (0 until n).map { i =>
-            val u = Math.floorMod(mix(id * 1000003L + i), vocab.toLong)
-              .toDouble / vocab
+            val u = Math.floorMod(ScaleGen.mix64(id * 1000003L + i),
+              vocab.toLong).toDouble / vocab
             "w" + (u * u * vocab).toLong
           }.mkString(" ")
           (id, text)
         }.toDF("doc_id", "text")
       } else Tables(spark, dir, "documents").select("doc_id", "text")
-    def time(f: => Long): (Double, Long) = {
-      val t0 = System.nanoTime()
-      val n = f
-      ((System.nanoTime() - t0) / 1e9, n)
-    }
     def sweep(label: String, ks: String,
         run: (org.apache.spark.sql.DataFrame, Int) => Long): Unit =
-      ks.split(",").map(_.trim.toInt).foreach { k =>
+      DevKit.grid(ks).foreach { k =>
         // min-of-2 timed runs after one warmup at the smallest k only
         // (a warmup per k would double the long cells for nothing)
-        val walls = (1 to 2).map(_ => time(run(docs, k)))
-        val (wall, rows) = walls.minBy(_._1)
-        println(f"""{"path":"$label","k":$k,"wall_s":$wall%.2f,"rows":$rows}""")
+        val runs = DevKit.timedRuns(meter, 2)(_ => run(docs, k))
+        println(DevKit.json("path" -> label, "k" -> k, "wall_s" -> runs.min,
+          "rows" -> runs.last))
       }
     // JIT/session warmup
     graft.queries.DocumentQueries.bpeMerges(docs, 5).count()

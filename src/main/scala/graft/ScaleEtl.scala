@@ -1,8 +1,8 @@
 package graft
 
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import java.io.File
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -26,7 +26,7 @@ import graft.etl.{EtlConfig, Transform}
   * All scales run in ONE session (same JVM/JIT — this box drifts
   * ±30-40% across sessions, SURVEY "Reading BENCH files"); per scale:
   * min wall over `SPARK_GRAFT_BENCH_RUNS` (default 3) FULL runs of
-  * `Transform.run` (each to a fresh sink dir, removed after), plus the
+  * `Transform.run` (each to a fresh sink dir), plus the
   * Spark-job count, summed job wall, and output file count of the last
   * run — file count is the check that the salted sink's fan-out stays
   * BOUNDED (≤ partitions × salt × ceil(rows/maxRecordsPerFile)) while
@@ -36,87 +36,40 @@ import graft.etl.{EtlConfig, Transform}
   * `1x=100000 10x=1000000 100x=10000000`.
   */
 object ScaleEtl {
+  val knobs = DevKit.Knobs(
+    env = Set("SPARK_GRAFT_BENCH_RUNS", "SPARK_GRAFT_SCALE_DIR"), labels = true)
+
   def main(args: Array[String]): Unit = {
-    val scales = args.toSeq.map { a =>
-      val Array(label, n) = a.split("=", 2); (label, n.toLong)
-    }
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val work = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft-scale-etl")
-    val spark = GraftSession.local(appName = "graft-scale-etl")
+    val scales = args.toSeq.map(DevKit.pair).map { case (l, n) => (l, n.toLong) }
+    val runs = knobs.int("SPARK_GRAFT_BENCH_RUNS", 3)
+    val work = knobs.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft-scale-etl")
+    val meter = DevKit.open("graft-scale-etl", knobs)
+    val spark = meter.spark
     import spark.implicits._
-    val jobCount = new AtomicInteger(0)
-    val jobNanos = new AtomicLong(0L)
-    // java.lang.Long values: a dropped JobStart under bus load must skip,
-    // not unbox null to 0L and tally an epoch timestamp (ScaleBench note)
-    val starts = new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        starts.put(j.jobId, java.lang.Long.valueOf(j.time))
-      override def onJobEnd(j: SparkListenerJobEnd): Unit = {
-        val t0 = starts.remove(j.jobId)
-        if (t0 != null) {
-          jobCount.incrementAndGet()
-          jobNanos.addAndGet((j.time - t0.longValue()) * 1000000L)
-        }
-      }
-    })
 
-    def rmrf(p: java.io.File): Unit = {
-      if (p.isDirectory) p.listFiles.foreach(rmrf)
-      p.delete(): Unit
-    }
-
-    // e03's line shape + e02's duplicate discipline; key/bytes vary per
-    // line, timestamps cover a full day so all 24 hour-partitions exist
-    def genLines(n: Long, dir: String): Unit = {
-      val base = ScaleEtl.logLines(spark, n)
-      val dups = base.filter(pmod(xxhash64($"value"), lit(7)) === 0)
-      base.unionAll(dups).repartition(32)
-        .write.mode("overwrite").text(dir)
-    }
-
-    val results = scala.collection.mutable.ListBuffer
-      .empty[(String, Long, Double, Int, Double, Long, Long, Int)]
-    for ((label, n) <- scales) {
+    val rows = for ((label, n) <- scales) yield {
+      // e03's line shape + e02's duplicate discipline; key/bytes vary per
+      // line, timestamps cover a full day so all 24 hour-partitions exist
       val inDir = s"$work/in-$label"
-      genLines(n, inDir)
-      var lastJobs = 0
-      var lastJobSec = 0.0
-      var outputRows = 0L
-      var nFiles = 0
-      val times = (1 to runs).map { _ =>
-        val outDir = s"$work/out-$label"
-        rmrf(new java.io.File(outDir))
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        spark.catalog.clearCache()
-        jobCount.set(0); jobNanos.set(0L)
-        val t0 = System.nanoTime()
-        val stats = Transform.run(spark, Seq(inDir), outDir, EtlConfig())
-        val dt = (System.nanoTime() - t0) / 1e9
-        var prev = -1
-        while (prev != jobCount.get()) {
-          prev = jobCount.get(); Thread.sleep(100)
-        }
-        lastJobs = jobCount.get(); lastJobSec = jobNanos.get() / 1e9
-        outputRows = stats.outputRows
-        def countParquet(f: java.io.File): Int =
-          if (f.isDirectory) f.listFiles.map(countParquet).sum
-          else if (f.getName.endsWith(".parquet")) 1 else 0
-        nFiles = countParquet(new java.io.File(outDir))
-        dt
+      val base = ScaleEtl.logLines(spark, n)
+      base.unionAll(base.filter(pmod(xxhash64($"value"), lit(7)) === 0))
+        .repartition(32).write.mode("overwrite").text(inDir)
+      val outDir = s"$work/out-$label"
+      val run = DevKit.timedRuns(meter, runs,
+          setup = _ => FileUtils.deleteQuietly(new File(outDir))) { _ =>
+        Transform.run(spark, Seq(inDir), outDir, EtlConfig())
       }
-      System.err.println(f"[scale-etl] $label%-6s n=$n%9d min=${times.min}%7.2f s" +
-        f"  jobs=$lastJobs%3d jobSec=$lastJobSec%7.2f files=$nFiles%4d" +
-        f"  out=$outputRows%9d  (${times.map(t => f"$t%.2f").mkString(" ")})")
-      results += ((label, n, times.min, lastJobs, lastJobSec, outputRows, n, nFiles))
+      val m = run.meter
+      val out = run.last.outputRows
+      val nFiles =
+        FileUtils.listFiles(new File(outDir), Array("parquet"), true).size
+      System.err.println(f"[scale-etl] $label%-6s n=$n%9d min=${run.min}%7.2f s" +
+        f"  jobs=${m.jobs}%3d jobSec=${m.jobSec}%7.2f files=$nFiles%4d" +
+        f"  out=$out%9d  (${DevKit.wallsText(run.walls)})")
+      DevKit.csv(label, n, run.min, m.jobs, m.jobSec, out, nFiles)
     }
     println("scale,n_lines,min_wall_s,jobs,job_sum_s,output_rows,n_files")
-    results.foreach { case (l, n, w, j, js, out, _, f) =>
-      println(String.format(java.util.Locale.ROOT, "%s,%d,%.2f,%d,%.2f,%d,%d",
-        l, Long.box(n), Double.box(w), Int.box(j), Double.box(js),
-        Long.box(out), Int.box(f)))
-    }
+    rows.foreach(println)
     spark.stop()
   }
 

@@ -24,18 +24,23 @@ import org.apache.spark.sql.functions._
   * task's pass over `hot` rows. The groupBy collapses the hot key
   * map-side (each input partition emits ONE partial row for it) and the
   * join-back is AQE-splittable, so the hot key costs what any key costs.
-  * Same-JVM interleaved timing (the PerfAB discipline — cross-session
+  * Same-JVM interleaved timing (the Probe A/B discipline — cross-session
   * deltas on this box are unreadable).
   *
   * Usage: `runMain graft.ScaleFold [nRows] [hotCopies]` (defaults 40M /
-  * 10M). Results land in SCALE.md "hot-key fold A/B".
+  * 10M), `SPARK_GRAFT_BENCH_RUNS` rounds (default 3). Results land in
+  * SCALE.md "hot-key fold A/B".
   */
 object ScaleFold {
+  val knobs = DevKit.Knobs(env = Set("SPARK_GRAFT_BENCH_RUNS"))
+
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 40000000L
     val hot = if (args.length > 1) args(1).toLong else 10000000L
     require(hot <= n, s"hot ($hot) must be <= n ($n)")
-    val spark = GraftSession.local(appName = "graft-scale-fold")
+    val rounds = knobs.int("SPARK_GRAFT_BENCH_RUNS", 3)
+    val meter = DevKit.open("graft-scale-fold", knobs)
+    val spark = meter.spark
     import spark.implicits._
 
     def frame(rows: Long, hotRows: Long): DataFrame = spark
@@ -67,43 +72,25 @@ object ScaleFold {
         force(df.join(occ, Seq("fp")), "n")
       })
 
-    // Max single-task duration listener — the CLUSTER-honest metric.
-    // local[32] hides the funnel in wall clock (while the one window
-    // task grinds the hot group, the other 31 threads absorb the rest
-    // of the work on the same box), but on a 1000-executor cluster the
-    // stage ends when its SLOWEST task does: the window's hot task is
-    // a per-task floor no amount of executors removes, while the
-    // groupBy's partials and the AQE-split join chunks stay bounded.
-    val maxTaskMs = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val d = e.taskInfo.duration
-        var cur = maxTaskMs.get()
-        while (d > cur && !maxTaskMs.compareAndSet(cur, d))
-          cur = maxTaskMs.get()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-
     // one small untimed pass per shape compiles the generated code
     shapes.foreach { case (_, f) => f(frame(100000L, 25000L)) }
-    val rounds = sys.env.getOrElse("SPARK_GRAFT_FOLD_ROUNDS", "3").toInt
     val acc = scala.collection.mutable.Map.empty[String, List[(Double, Double)]]
       .withDefaultValue(Nil)
     val df = frame(n, hot)
     for (r <- 1 to rounds; (label, f) <- shapes) {
-      maxTaskMs.set(0)
-      val t0 = System.nanoTime()
-      val chk = f(df)
-      val dt = (System.nanoTime() - t0) / 1e9
-      // listener events drain async; give the bus a beat before reading
-      Thread.sleep(1000)
-      val mt = maxTaskMs.get() / 1e3
+      val run = DevKit.timedRuns(meter, 1)(_ => f(df))
+      // the longest single task is the CLUSTER-honest metric: local[32]
+      // hides the funnel in wall clock (while the one window task grinds
+      // the hot group, the other 31 threads absorb the rest of the work),
+      // but on a 1000-executor cluster the stage ends when its SLOWEST
+      // task does — the window's hot task is a floor no executor count
+      // removes, while the groupBy's partials and the AQE-split join
+      // chunks stay bounded
+      val (dt, mt) = (run.min, run.meter.maxTaskMs / 1e3)
       acc(label) = (dt, mt) :: acc(label)
       System.err.println(
         f"[fold] round $r $label%-24s wall $dt%7.2f s  maxTask $mt%7.2f s" +
-          f" (chk $chk)")
+          f" (chk ${run.last})")
     }
     shapes.foreach { case (label, _) =>
       val ts = acc(label)
@@ -112,7 +99,7 @@ object ScaleFold {
       System.err.println(
         f"[fold-summary] $label%-24s wall-min=${walls.min}%7.2f s  " +
           f"maxTask-min=${maxTasks.min}%7.2f s  " +
-          f"(walls ${walls.reverse.map(t => f"$t%.2f").mkString(" ")})  " +
+          f"(walls ${DevKit.wallsText(walls.reverse)})  " +
           f"n=$n hot=$hot")
     }
     spark.stop()

@@ -36,7 +36,8 @@ object ScaleGen {
     "spark", "stream", "table", "the", "value", "vector", "window")
   private val Langs = Array("en", "en", "zh", "es", "fr", "de")
 
-  private def mix64(z0: Long): Long = {
+  /** splitmix64's finalizer. */
+  private[graft] def mix64(z0: Long): Long = {
     var z = z0 + 0x9e3779b97f4a7c15L
     z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
     z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
@@ -82,10 +83,12 @@ object ScaleGen {
     words.mkString(" ")
   }
 
+  val knobs = DevKit.Knobs()
+
   def main(args: Array[String]): Unit = {
     val out = args(0)
     val n = args(1).toLong
-    val spark = GraftSession.local(appName = "graft-scale-gen")
+    val spark = DevKit.open("graft-scale-gen", knobs).spark
     import spark.implicits._
     val nb = spark.sparkContext.broadcast(n)
     spark.range(0L, n, 1L, 32)

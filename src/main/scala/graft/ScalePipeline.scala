@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** Dev tool: the END-TO-END training-data pipeline wall measurement
@@ -49,6 +46,8 @@ import org.apache.spark.sql.functions._
   *                   IS that claim)
   */
 object ScalePipeline {
+  val knobs = DevKit.Knobs(env = Set("GRAFT_CHECKPOINT_DIR"))
+
   def main(args: Array[String]): Unit = {
     val sidecars = args.contains("--sidecars")
     val hybrid = args.contains("--hybrid")
@@ -56,7 +55,8 @@ object ScalePipeline {
     val src = pos(0)
     val work = pos(1)
     val seqLen = if (pos.length > 2) pos(2) else "1024"
-    val spark = GraftSession.local(appName = "graft-scale-pipeline")
+    val meter = DevKit.open("graft-scale-pipeline", knobs)
+    val spark = meter.spark
     import spark.implicits._
     // $GRAFT_CHECKPOINT_DIR passes through to every stage (the same
     // knob the CLI honors): set, the whole pipeline runs its engine
@@ -65,36 +65,14 @@ object ScalePipeline {
     // Main.run applies (or explicitly unsets) the session conf from
     // this env on every stage, so no conf handling is duplicated here;
     // the two non-Main stages (prep, joinback) never materialize.
-    val env = sys.env.view
-      .filterKeys(_ == "GRAFT_CHECKPOINT_DIR").toMap
-    val jobs = new AtomicInteger(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        { jobs.incrementAndGet(); () }
-    })
+    val env = knobs.get("GRAFT_CHECKPOINT_DIR")
+      .map("GRAFT_CHECKPOINT_DIR" -> _).toMap
     // per-stage (label, wall, jobs) so the summary can separate the SIX
     // pipeline stages from prep and from the bookkeeping counts below —
     // "pipeline_total"/"jobs" must describe the pipeline alone
-    def timed(label: String)(body: => Unit): (String, Double, Int) = {
-      val j0 = jobs.get()
-      val t0 = System.nanoTime()
-      body
-      val dt = (System.nanoTime() - t0) / 1e9
-      // the listener bus is async: JobStart events submitted at the
-      // stage's tail can still be in flight when body returns, which
-      // would attribute them to the NEXT stage (or drop trailing ones
-      // from the summary). Wait for the counter to go quiet — unchanged
-      // across three 100 ms polls, capped at 5 s — before reading the
-      // delta; the wait runs after dt is taken, so wall is unaffected.
-      var last = jobs.get()
-      var quiet = 0
-      val deadline = System.nanoTime() + 5000000000L
-      while (quiet < 3 && System.nanoTime() < deadline) {
-        Thread.sleep(100)
-        val now = jobs.get()
-        if (now == last) quiet += 1 else { quiet = 0; last = now }
-      }
-      val dj = jobs.get() - j0
+    def timed(label: String)(body: => Any): (String, Double, Int) = {
+      val run = DevKit.timedRuns(meter, 1)(_ => body)
+      val (dt, dj) = (run.min, run.meter.jobs)
       System.err.println(f"[pipeline] $label%-10s $dt%8.2f s ($dj%3d jobs)")
       (label, dt, dj)
     }
@@ -122,13 +100,11 @@ object ScalePipeline {
           else Nil
         Main.run(spark, Seq("ingest", "--once") ++ artifactFlags ++
           Seq(s"$work/drop", s"$work/corpus", s"$work/ckpt"), env)
-        ()
       }
     val hybridStages = if (!hybrid) Nil else Seq(
       timed("bm25index") {
         Main.run(spark, Seq("bm25index", s"$work/corpus", s"$work/bm25idx"),
           env)
-        ()
       },
       timed("lexrank") {
         // probe queries = the corpus's own first 20 docs (the s04/d56
@@ -141,20 +117,17 @@ object ScalePipeline {
           .write.mode("overwrite").parquet(s"$work/probes")
         Main.run(spark, Seq("bm25", s"$work/bm25idx", s"$work/probes",
           s"$work/lexranks"), env)
-        ()
       },
       timed("ivftrain") {
         // the semantic build half, mirroring bm25index: quantizer
         // trained ONCE on the ScaleGen embeddings...
         Main.run(spark, Seq("ivftrain", s"$src/embeddings.parquet",
           s"$work/centroids"), env)
-        ()
       },
       timed("ivfindex") {
         // ...and the corpus assignment written cell-partitioned once
         Main.run(spark, Seq("ivfindex", s"$src/embeddings.parquet",
           s"$work/centroids", s"$work/ivfidx"), env)
-        ()
       },
       timed("semrank") {
         // the PROBE half: `ann --index --centroids` over the stored
@@ -164,12 +137,10 @@ object ScalePipeline {
         Main.run(spark, Seq("ann", s"$src/embeddings.parquet",
           s"$work/semranks", "--centroids", s"$work/centroids",
           "--index", s"$work/ivfidx"), env)
-        ()
       },
       timed("fuse") {
         Main.run(spark, Seq("fuse", s"$work/lexranks", s"$work/semranks",
           s"$work/fused"), env)
-        ()
       })
     val curationStages = if (hybrid) Nil else Seq(
       timed("spandedup") {
@@ -180,7 +151,6 @@ object ScalePipeline {
         // structure exercises the same plan at finer grain)
         Main.run(spark, Seq("spandedup", s"$work/corpus",
           s"$work/spans"), env)
-        ()
       },
       timed("joinback") {
         // the manifest-consumer step: replace each doc's text with its
@@ -197,17 +167,14 @@ object ScalePipeline {
       timed("curate") {
         Main.run(spark, Seq("curate", s"$work/cleaned", s"$work/cur"),
           env)
-        ()
       },
       timed("decontam") {
         Main.run(spark, Seq("decontam", s"$work/cur/corpus",
           s"$work/dec"), env)
-        ()
       },
       timed("pack") {
         Main.run(spark, Seq("pack", s"$work/cur/corpus", s"$work/packed",
           "--seq-len", seqLen), env)
-        ()
       })
     val stages = ingestStage +: (hybridStages ++ curationStages)
     val nKept =
@@ -221,16 +188,13 @@ object ScalePipeline {
     // bookkeeping counts are measurement overhead, not pipeline work
     val total = stages.map(_._2).sum
     val pipelineJobs = stages.map(_._3).sum
-    def num(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    val stageJson = (prep +: stages)
-      .map { case (l, s, _) => s""""$l":${num(s)}""" }.mkString(",")
     val outcome =
-      if (hybrid) s""""fused_rows":$nKept"""
-      else s""""docs_kept":$nKept,"sequences":$nSeqs"""
-    println(s"""{"metric":"pipeline_total","value":${num(total)},""" +
-      s""""unit":"sec","docs_in":$nIn,$outcome,"jobs":$pipelineJobs,""" +
-      s""""sidecars":$sidecars,"hybrid":$hybrid,$stageJson}""")
+      if (hybrid) Seq("fused_rows" -> nKept)
+      else Seq("docs_kept" -> nKept, "sequences" -> nSeqs)
+    println(DevKit.json(Seq("metric" -> "pipeline_total", "value" -> total,
+      "unit" -> "sec", "docs_in" -> nIn) ++ outcome ++ Seq(
+      "jobs" -> pipelineJobs, "sidecars" -> sidecars, "hybrid" -> hybrid) ++
+      (prep +: stages).map { case (l, s, _) => l -> s }: _*))
     spark.stop()
   }
 }

@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.functions._
+import java.io.File
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.etl.{EtlConfig, StreamingTransform}
@@ -32,81 +34,67 @@ import graft.sources.{FileQueue, QueueRegistry}
   *   e.g. 1x=100000:10 10x=1000000:100
   */
 object ScaleQueue {
+  val knobs = DevKit.Knobs(
+    env = Set("SPARK_GRAFT_BENCH_RUNS", "SPARK_GRAFT_SCALE_DIR"), labels = true)
+
   def main(args: Array[String]): Unit = {
-    val scales = args.toSeq.map { a =>
-      val Array(label, spec) = a.split("=", 2)
+    val scales = args.toSeq.map(DevKit.pair).map { case (label, spec) =>
       val parts = spec.split(":")
       (label, parts(0).toLong, parts(1).toInt,
         if (parts.length > 2) parts(2).toInt else 10)
     }
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt
-    val work = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft-scale-queue")
-    val spark = GraftSession.local(appName = "graft-scale-queue")
-
-    def rmrf(p: java.io.File): Unit = {
-      if (p.isDirectory) p.listFiles.foreach(rmrf)
-      p.delete(): Unit
-    }
+    val runs = knobs.int("SPARK_GRAFT_BENCH_RUNS", 2)
+    val work = knobs.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft-scale-queue")
+    val meter = DevKit.open("graft-scale-queue", knobs)
+    val spark = meter.spark
 
     def event(key: String): String =
       s"""{"Records":[{"eventName":"ObjectCreated:Put","awsRegion":"us-east-1",""" +
         s""""s3":{"bucket":{"name":"scale-bucket"},"object":{"key":"$key","size":1}}}]}"""
 
-    val results = scala.collection.mutable.ListBuffer
-      .empty[(String, Long, Int, Double, Long, Long, Int, Boolean)]
-    for ((label, n, k, maxMsgs) <- scales) {
+    val rows = for ((label, n, k, maxMsgs) <- scales) yield {
       // objects: the file-fed generator's line population written as K
       // text objects (repartition(k) → exactly k part files)
       val objDir = s"$work/obj-$label"
       ScaleEtl.logLines(spark, n).repartition(k)
         .write.mode("overwrite").text(objDir)
-      val objects = new java.io.File(objDir).listFiles
+      val objects = new File(objDir).listFiles
         .filter(f => f.isFile && f.getName.startsWith("part-"))
         .map(_.getName).sorted.toSeq
       require(objects.size == k, s"expected $k objects, got ${objects.size}")
 
-      var outRows = 0L
-      var batches = 0
-      var drained = true
-      val times = (1 to runs).map { r =>
-        val qDir = s"$work/queue-$label-$r"
-        val out = s"$work/out-$label-$r"
-        val ckpt = s"$work/ckpt-$label-$r"
-        Seq(qDir, out, ckpt).foreach(d => rmrf(new java.io.File(d)))
+      // fresh queue/checkpoint/sink per run, objects reused
+      def dirs(r: Int) = Seq("queue", "out", "ckpt").map(d => s"$work/$d-$label-$r")
+      val queues = scala.collection.mutable.ArrayBuffer.empty[FileQueue]
+      val run = DevKit.timedRuns(meter, runs, setup = { r =>
+        dirs(r).foreach(d => FileUtils.deleteQuietly(new File(d)))
         // visibility sized like production: >> trigger + batch runtime,
         // so no mid-drain redelivery muddies the throughput number
-        val q = new FileQueue(qDir, visibilityTimeoutSeconds = 3600)
+        val q = new FileQueue(dirs(r).head, visibilityTimeoutSeconds = 3600)
         QueueRegistry.register(s"scale-$label", q)
         objects.foreach(key => q.enqueue(event(key)))
-        val t0 = System.nanoTime()
+        queues += q
+      }) { r =>
+        val Seq(_, out, ckpt) = dirs(r)
         val query = StreamingTransform.queueNotificationPipeline(spark,
             s"scale-$label", out, ckpt, (_, key) => s"$objDir/$key",
             EtlConfig(), maxMessagesPerTrigger = maxMsgs)
           .trigger(Trigger.AvailableNow()).start()
         query.awaitTermination(600000)
-        val dt = (System.nanoTime() - t0) / 1e9
-        batches = query.recentProgress.count(_.numInputRows > 0)
-        drained = drained && q.size == 0
-        outRows = spark.read.parquet(out).count()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        spark.catalog.clearCache()
-        dt
+        query
       }
-      val wall = times.min
+      val wall = run.min
+      val batches = run.last.recentProgress.count(_.numInputRows > 0)
+      val drained = queues.forall(_.size == 0)
+      val outRows = spark.read.parquet(dirs(queues.size)(1)).count()
       System.err.println(f"[scale-queue] $label%-6s n=$n%9d objs=$k%4d " +
         f"min=$wall%7.2f s  ${n / wall}%9.0f lines/s  batches=$batches%3d " +
-        f"out=$outRows%9d drained=$drained  " +
-        f"(${times.map(t => f"$t%.2f").mkString(" ")})")
-      results += ((label, n, k, wall, (n / wall).toLong, outRows, batches,
-        drained))
+        f"out=$outRows%9d drained=$drained  (${DevKit.wallsText(run.walls)})")
+      DevKit.csv(label, n, k, wall, (n / wall).toLong, outRows, batches,
+        drained)
     }
     println("scale,n_lines,n_objects,min_wall_s,lines_per_s,output_rows,batches,queue_drained")
-    results.foreach { case (l, n, k, w, lps, out, b, d) =>
-      println(String.format(java.util.Locale.ROOT, "%s,%d,%d,%.2f,%d,%d,%d,%b",
-        l, Long.box(n), Int.box(k), Double.box(w), Long.box(lps),
-        Long.box(out), Int.box(b), Boolean.box(d)))
-    }
+    rows.foreach(println)
     spark.stop()
   }
 }

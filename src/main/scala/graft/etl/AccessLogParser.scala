@@ -3,7 +3,6 @@ package graft.etl
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
 /** Line tokenizer for S3 server access logs (SURVEY §2.1 P1–P4, F1, W2).
@@ -17,8 +16,10 @@ import org.apache.spark.sql.functions._
   *
   * Implementation is a hand-rolled single-pass scanner rather than a
   * regex: on the JVM this is ~5× faster than java.util.regex alternation
-  * and has no pathological backtracking. It runs inside a UDF; the rest of
-  * the pipeline stays in codegen'd built-ins.
+  * and has no pathological backtracking. [[parse]] runs it through the
+  * native codegen expression `graft_tokenize`
+  * ([[graft.functions.ParseS3LogExpr]]), which every GraftSession
+  * registers, so the whole parse stays in whole-stage codegen.
   */
 object AccessLogParser {
 
@@ -52,21 +53,6 @@ object AccessLogParser {
     out.toArray
   }
 
-  /** UDF wrapper (P1) — fallback for sessions without the graft
-    * extensions; GraftSession-built sessions use the native codegen
-    * expression graft.functions.ParseS3LogExpr instead. */
-  val tokenizeUdf: UserDefinedFunction = udf((line: String) =>
-    if (line == null) Array.empty[String] else tokenize(line))
-
-  /** Tokenize column: native `graft_tokenize` expression when the session
-    * has the engine extensions (whole-stage codegen fusion), UDF
-    * otherwise. */
-  private def tokenizeCol(df: DataFrame): Column =
-    if (df.sparkSession.catalog.functionExists(
-        graft.functions.ParseS3LogExpr.functionName))
-      call_function(graft.functions.ParseS3LogExpr.functionName, col("value"))
-    else tokenizeUdf(col("value"))
-
   /** Parse a one-column DataFrame of raw lines (column `value`, as
     * produced by `spark.read.text`) into the 26-column string table plus
     * the ExtraFields overflow array (W1) with short rows null-filled (W2).
@@ -79,7 +65,8 @@ object AccessLogParser {
       keepRaw: Boolean = false): DataFrame = {
     val w = AccessLogSchema.width
     val withFields = lines
-      .withColumn("_f", tokenizeCol(lines))
+      .withColumn("_f", call_function(
+        graft.functions.ParseS3LogExpr.functionName, col("value")))
     // try_element_at is 1-based and yields null past the end → W2
     // null-fill happens for free (ANSI-safe, unlike element_at which
     // throws under Spark 4's default ANSI mode); fields beyond 26 slice

@@ -14,11 +14,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * "promote the parser UDF to a codegen Expression"): `graft_tokenize(line)
   * -> array<string>`.
   *
-  * Unlike the ScalaUDF path this stays inside whole-stage codegen — no
+  * Unlike a ScalaUDF this stays inside whole-stage codegen — no
   * encoder round-trip, no lambda dispatch: doGenCode emits a direct static
   * call, so the projection containing it fuses with the surrounding
-  * operators exactly like a built-in. The scan loop itself is the same
-  * quote/bracket-aware scanner the UDF used (AccessLogParser.tokenize).
+  * operators exactly like a built-in. The scan loop itself is the
+  * quote/bracket-aware scanner AccessLogParser.tokenize.
   */
 case class ParseS3LogExpr(child: Expression) extends UnaryExpression {
 

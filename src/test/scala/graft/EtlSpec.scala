@@ -51,6 +51,11 @@ class EtlSpec extends SparkSpec {
     import spark.implicits._
     val good = LogGen.lines(100, seed = 9, extraFrac = 0.3)
     val bad = Seq("not a log line at all", "a b [not-a-time] c")
+    // the native tokenizer, never a UDF (repartition keeps the optimizer
+    // from folding the local input through the expression)
+    val plan = AccessLogParser.parse(good.toDF("value").repartition(2))
+      .queryExecution.optimizedPlan.toString
+    assert(plan.contains("graft_tokenize") && !plan.contains("ScalaUDF"), plan)
     val df = AccessLogParser.parse((good ++ bad).toDF("value")).cache()
     assert(df.count() == 100)
     assert(df.filter($"ts".isNull).count() == 0)

@@ -1476,6 +1476,31 @@ class MainSpec extends SparkSpec {
     }
   }
 
+  test("a flag that only acts together with another is refused alone, " +
+    "before any output exists") {
+    val tmp = Files.createTempDirectory("graft-cli-needs").toString
+    val (in, out, ck) = (s"$tmp/in", s"$tmp/out", s"$tmp/ck")
+    Seq(
+      Seq("transform", "-o", out, "--iterations", "2", in) -> "--loop",
+      Seq("stream", "--once", "--objects", in, in, out, ck) -> "--queue-dir",
+      Seq("ingest", "--once", "--span-sep", "|", in, out, ck) -> "--spansigs",
+      Seq("ingest", "--once", "--decontam-n", "5", in, out, ck) -> "--decontam",
+      Seq("ingest", "--once", "--rejects", s"$tmp/r", in, out, ck) ->
+        "--quality-min",
+      Seq("ann", in, out, "--index", s"$tmp/ix") -> "--centroids"
+    ).foreach { case (argv, parent) =>
+      val e = intercept[IllegalArgumentException](
+        Main.run(spark, argv, Map.empty))
+      val child = argv(argv.indexWhere(a => a.startsWith("--") &&
+        Main.verbFlags(argv.head).needs.contains(a)))
+      assert(e.getMessage.startsWith(s"${argv.head}: $child needs $parent"),
+        e.getMessage)
+      Seq(out, ck, s"$tmp/r").foreach { d =>
+        assert(!new java.io.File(d).exists, s"${argv.mkString(" ")} made $d")
+      }
+    }
+  }
+
   test("every verb refuses an unknown flag and names the flags it accepts") {
     Main.verbFlags.foreach { case (verb, flags) =>
       val e = intercept[IllegalArgumentException](Main.run(spark,
