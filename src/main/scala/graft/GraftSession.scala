@@ -63,7 +63,8 @@ object GraftSession {
       // by Spark 4; read as long and convert in Tables().
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-    val spark = extraConf.foldLeft(builder) {
+    // `file://` goes through the in-process local FS (graft.LocalFs)
+    val spark = (LocalFs.conf ++ extraConf).foldLeft(builder) {
       case (b, (k, v)) => b.config(k, v)
     }.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

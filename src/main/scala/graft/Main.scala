@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{avg, coalesce, col, count, count_distinct, expr, lit, max, sum, when}
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 import graft.etl.{AccessLogParser, Compact, EtlConfig, StreamingTransform, Transform}
 import graft.queries.{DedupQueries, DocumentQueries, EmbeddingQueries, QueryConf}
@@ -326,7 +326,7 @@ object Main {
             ingestStream, corpus, sigDir, spanSigDir,
             opts.getOrElse("--span-sep", "\n\n"), checkpoint, decontamDir,
             decontamN, qualityMin, rejectsDir, winnowDir, repSigDir)
-        awaitQuery(writer, opts.switches("--once"))
+        startQuery(writer, opts.switches("--once")).awaitTermination()
         Seq("ingest query terminated")
       case "compact" =>
         val (lake, cols) = opts.positional match {
@@ -918,8 +918,9 @@ object Main {
               StreamingTransform.stream(spark, landing, cfg), out,
               checkpoint, cfg)
         }
-        awaitQuery(writer, opts.switches("--once"))
-        Seq("stream query terminated")
+        val census = graft.streaming.Census.await(spark)(
+          startQuery(writer, opts.switches("--once")))
+        Seq("stream query terminated", census.toString)
     }
   }
 
@@ -1170,10 +1171,9 @@ object Main {
   }
 
   /** Start a streaming query — under `--once` it drains the backlog and
-    * exits (Trigger.AvailableNow) — and block until it terminates. */
-  private def awaitQuery(writer: DataStreamWriter[Row], once: Boolean): Unit =
-    (if (once) writer.trigger(Trigger.AvailableNow()) else writer)
-      .start().awaitTermination()
+    * exits (Trigger.AvailableNow). */
+  private def startQuery(writer: DataStreamWriter[Row], once: Boolean): StreamingQuery =
+    (if (once) writer.trigger(Trigger.AvailableNow()) else writer).start()
 
   private def fail(msg: String): Nothing =
     throw new IllegalArgumentException(msg)

@@ -1,9 +1,10 @@
 package graft.streaming
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.UUID
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
 import org.apache.spark.sql.streaming.StreamingQueryListener._
 
 /** M1 parity: the reference's mon task keeps 1-min ring buffers of
@@ -49,6 +50,62 @@ object Metrics {
     val m = new Metrics
     spark.streams.addListener(m)
     m
+  }
+}
+
+/** Whole-life totals of a streaming query, from its progress events:
+  * executed micro-batches (an idle progress report runs no `addBatch`),
+  * rows read, rows the stateful operators dropped as late and duplicate
+  * rows the dedup dropped. `recentProgress` keeps only the last 100
+  * batches, so a long drain's totals need a listener. Keyed by run id:
+  * other queries of the session do not mix in. */
+final class Census private extends StreamingQueryListener {
+  import Census.Totals
+
+  private val runs = new ConcurrentHashMap[UUID, Totals]
+  private val ended = new ConcurrentHashMap[UUID, CountDownLatch]
+  private def latch(runId: UUID) = ended.computeIfAbsent(runId, _ => new CountDownLatch(1))
+
+  override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+  override def onQueryTerminated(e: QueryTerminatedEvent): Unit = latch(e.runId).countDown()
+
+  override def onQueryProgress(e: QueryProgressEvent): Unit = {
+    val p = e.progress
+    val state = p.stateOperators.toSeq
+    val batch = Totals(
+      if (p.durationMs.containsKey("addBatch")) 1 else 0,
+      p.numInputRows,
+      state.map(_.numRowsDroppedByWatermark).sum,
+      state.flatMap(s => Option(s.customMetrics.get("numDroppedDuplicateRows"))).map(_.longValue).sum)
+    runs.merge(p.runId, batch, (a, b) => a + b)
+  }
+
+  /** The totals of run `runId` once its terminated event has arrived (the
+    * bus delivers a run's events in order, the terminated one last). */
+  private def totals(runId: UUID): Totals = {
+    latch(runId).await(60, TimeUnit.SECONDS)
+    runs.getOrDefault(runId, Totals(0, 0, 0, 0))
+  }
+}
+
+object Census {
+  final case class Totals(batches: Long, rowsRead: Long, late: Long, duplicates: Long) {
+    def +(o: Totals): Totals =
+      Totals(batches + o.batches, rowsRead + o.rowsRead, late + o.late, duplicates + o.duplicates)
+    override def toString: String = s"stream census: $batches micro-batches, $rowsRead rows read, " +
+      s"$late rows dropped as late, $duplicates duplicate rows dropped"
+  }
+
+  /** Start a query with a census attached for its lifetime and block until
+    * it terminates; the query's whole-life totals. */
+  def await(spark: SparkSession)(start: => StreamingQuery): Totals = {
+    val census = new Census
+    spark.streams.addListener(census)
+    try {
+      val q = start
+      q.awaitTermination()
+      census.totals(q.runId)
+    } finally spark.streams.removeListener(census)
   }
 }
 

@@ -109,7 +109,8 @@ class MainSpec extends SparkSpec {
     LogGen.lines(60, seed = 45).toDF("value").write.text(s"$tmp/landing")
     val out = Main.run(spark, Seq("stream", "--once",
       s"$tmp/landing", s"$tmp/out", s"$tmp/ckpt"), Map.empty)
-    assert(out == Seq("stream query terminated"))
+    assert(out == Seq("stream query terminated", "stream census: 2 micro-batches, " +
+      "60 rows read, 0 rows dropped as late, 0 duplicate rows dropped"))
     val lake = spark.read.parquet(s"$tmp/out")
     assert(lake.count() == 60)
     // stream layout is dt=YYYYMMDD (the reference's streaming default)
@@ -119,6 +120,26 @@ class MainSpec extends SparkSpec {
     Main.run(spark, Seq("stream", "--once",
       s"$tmp/landing", s"$tmp/out", s"$tmp/ckpt"), Map.empty)
     assert(spark.read.parquet(s"$tmp/out").count() == 60)
+  }
+
+  test("stream --once census counts a drain's duplicate and late rows") {
+    val tmp = Files.createTempDirectory("graft-cli-census").toString
+    val landing = java.nio.file.Paths.get(tmp, "landing")
+    Files.createDirectories(landing)
+    def land(name: String, lines: Seq[String]): Unit =
+      Files.writeString(landing.resolve(name), lines.mkString("", "\n", "\n"))
+    def drain() = Main.run(spark, Seq("stream", "--once",
+      landing.toString, s"$tmp/out", s"$tmp/ckpt"), Map.empty)
+    land("a.log", LogGen.lines(100, seed = 51))
+    drain()
+    // the next drain starts from the checkpointed watermark (~t0): ten
+    // lines arrive twice, five are two hours older than it
+    val fresh = LogGen.entries(30, t0 = 1700000600L, seed = 52).map(_.line)
+    val late = LogGen.entries(5, t0 = 1700000000L - 7200, seed = 53).map(_.line)
+    land("b.log", fresh ++ fresh.take(10) ++ late)
+    assert(drain().last == "stream census: 2 micro-batches, 45 rows read, " +
+      "5 rows dropped as late, 10 duplicate rows dropped")
+    assert(spark.read.parquet(s"$tmp/out").count() == 130)
   }
 
   test("stream --once --queue-dir: notifications drive the transform, acks empty the queue") {
@@ -139,7 +160,8 @@ class MainSpec extends SparkSpec {
     val out = Main.run(spark, Seq("stream", "--once",
       "--queue-dir", s"$tmp/queue", "--objects", objects,
       s"$tmp/lake", s"$tmp/ckpt"), Map.empty)
-    assert(out == Seq("stream query terminated"))
+    assert(out == Seq("stream query terminated", "stream census: 1 micro-batches, " +
+      "1 rows read, 0 rows dropped as late, 0 duplicate rows dropped"))
     assert(spark.read.parquet(s"$tmp/lake").count() == 90)
     assert(q.size == 0) // acked after the transform landed
   }
