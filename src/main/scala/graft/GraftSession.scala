@@ -31,8 +31,9 @@ object GraftSession {
       // Engine extensions: native codegen functions (graft_tokenize,
       // graft_text_signature, graft_dot, graft_eq_count, graft_rollhash,
       // graft_rep_concentration, graft_ngram_fps, graft_ngrams,
-      // graft_hashed_feats, graft_quality_stats).
+      // graft_hashed_feats, graft_quality_stats, graft_first_in_window).
       .withExtensions(graft.functions.ParseS3LogExpr.register)
+      .withExtensions(graft.functions.FirstInWindowExpr.register)
       .withExtensions(graft.functions.TextSignatureExpr.register)
       .withExtensions(graft.functions.DotProductExpr.register)
       .withExtensions(graft.functions.EqCountExpr.register)

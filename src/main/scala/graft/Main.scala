@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{avg, coalesce, col, count, count_distinct, expr, lit, max, sum, when}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
-import graft.etl.{AccessLogParser, Compact, EtlConfig, StreamingTransform, Transform}
+import graft.etl.{AccessLogParser, Compact, EtlConfig, StreamingTransform, Transform,
+  TransformStats}
 import graft.queries.{DedupQueries, DocumentQueries, EmbeddingQueries, QueryConf}
 
 /** CLI entry point — the reference's `s3logs` binary surface
@@ -23,7 +24,9 @@ import graft.queries.{DedupQueries, DocumentQueries, EmbeddingQueries, QueryConf
   *       dedup → partitioned parquet. With no input it scans
   *       $S3LOGS_STAGGING_ROOT_PATH, exactly like main.rs:97-101's
   *       `process_stagging_dir`. Prints "transform task ended, N lines
-  *       processed" (main.rs:99,106 parity). `--loop` re-runs on a timer
+  *       processed" (main.rs:99,106 parity), then "transform census: L
+  *       lines read, M malformed, D duplicates dropped, W rows written"
+  *       (each `--loop` iteration prints both). `--loop` re-runs on a timer
   *       over the age gate, moving processed files to `.processed/` —
   *       the scripts/transform.sh daemon shape; see [[transformLoop]].
   *   stream [--once] <landingDir> <outDir> <checkpointDir>
@@ -267,8 +270,7 @@ object Main {
             fail("transform needs input paths or $S3LOGS_STAGGING_ROOT_PATH")))
         numFlag(verb, opts, "--loop", "an integer", _.toLong, ">= 0")(_ >= 0) match {
           case None =>
-            val stats = Transform.run(spark, inputs, out, cfg)
-            Seq(s"transform task ended, ${stats.inputLines} lines processed")
+            transformLines(Transform.run(spark, inputs, out, cfg))
           case Some(secs) =>
             transformLoop(spark, inputs, out, cfg, secs,
               intFlag(verb, opts, "--iterations", min = 0))
@@ -924,6 +926,12 @@ object Main {
     }
   }
 
+  /** What `transform` prints per run: the reference's end line
+    * (main.rs:99,106), then the run's census. */
+  private def transformLines(stats: TransformStats): Seq[String] = Seq(
+    s"transform task ended, ${stats.inputLines} lines processed",
+    stats.census)
+
   /** `transform --loop <seconds>`: the reference's ops runbook shape
     * (scripts/transform.sh:19-26 re-invokes `s3logs transform` on a 60 s
     * timer over the staging dir) as one daemon command.
@@ -978,13 +986,12 @@ object Main {
         iter += 1
         val batch = quietFiles(inputs, cfg)
         if (batch.isEmpty)
-          emit("transform task ended, 0 lines processed")
+          transformLines(TransformStats(0, 0, 0, 0)).foreach(emit)
         else {
           // the gate already ran in quietFiles — the run itself must not
           // re-apply it against a LATER now() and drop selected files
-          val stats = Transform.run(spark, batch.map(_.toString), out,
-            cfg.copy(jobIntervalSeconds = 0))
-          emit(s"transform task ended, ${stats.inputLines} lines processed")
+          transformLines(Transform.run(spark, batch.map(_.toString), out,
+            cfg.copy(jobIntervalSeconds = 0))).foreach(emit)
           batch.foreach { f =>
             val dest = new java.io.File(f.getParentFile, ".processed")
             dest.mkdirs()

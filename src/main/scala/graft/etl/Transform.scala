@@ -241,7 +241,13 @@ object EtlConfig {
   * reference asserts inline (M2, s3logs/src/utils.rs:642-643). */
 final case class TransformStats(
     inputLines: Long, malformedLines: Long, dedupedLines: Long,
-    outputRows: Long)
+    outputRows: Long) {
+
+  /** The run's funnel as one line, the batch twin of `stream census`. */
+  def census: String = s"transform census: $inputLines lines read, " +
+    s"$malformedLines malformed, $dedupedLines duplicates dropped, " +
+    s"$outputRows rows written"
+}
 
 /** The batch ETL pipeline (SURVEY §3.1 + §3.2 fused into ONE Spark job).
   *
@@ -253,20 +259,23 @@ final case class TransformStats(
   * all collapse into Spark's task retry + output-committer protocol.
   *
   * Scale design: a default run is a single pass — scan → parse → ONE
-  * exchange → dedup → sort → partitioned parquet write, with nothing
-  * cached. The exchange is the sink's: it hash-partitions by the output
-  * partition values of each row's aggregate WINDOW (`agg_ts` on the local
-  * clock) plus a bounded RequestID salt. Those key columns are functions
-  * of the D1 key (RequestID, agg_ts), so adding them to the dedup key
-  * leaves D1 unchanged, and the exchange already clusters the dedup —
-  * Spark plans no second one. When the window nests in the output
-  * partition (the default 900 s in hourly dirs) the key values equal the
-  * row's own partition values, so each Hive partition is written by its
-  * own ≤ sinkSaltBuckets tasks (no 1000-way small-file fan-out per task);
-  * a window that straddles partitions (7200 s) puts the few dirs it spans
-  * on one task. `maxRecordsPerFile` bounds file size the way ST4's
-  * rotation does. [[TransformStats]] come from two `Dataset.observe`
-  * counters in the write job's result stage, not from extra count jobs.
+  * exchange → ONE sort → first-row-per-(RequestID, window) filter →
+  * partitioned parquet write, with nothing cached and no aggregate. The
+  * exchange hash-partitions by the output partition values of each row's
+  * aggregate WINDOW (`agg_ts` on the local clock) plus a bounded RequestID
+  * salt, so every row of one D1 key (RequestID, agg_ts) lands in one task.
+  * The sort within each task is (partition columns, agg_ts, ts): it is the
+  * writer's required order (Spark adds no sort of its own, and row groups
+  * stay time-clustered), and it keeps each window contiguous, so D1 is the
+  * reference's own first-wins scan with a seen-set cleared at every window
+  * change ([[graft.functions.FirstInWindowExpr]]). When the window nests
+  * in the output partition (the default 900 s in hourly dirs) each Hive
+  * partition is written by its own ≤ sinkSaltBuckets tasks (no 1000-way
+  * small-file fan-out per task); a window that straddles partitions
+  * (7200 s) puts the few dirs it spans on one task. `maxRecordsPerFile`
+  * bounds file size the way ST4's rotation does. [[TransformStats]] come
+  * from two `Dataset.observe` counters in the write job's result stage,
+  * not from extra count jobs.
   */
 object Transform {
 
@@ -324,16 +333,13 @@ object Transform {
       if (cfg.mergeOrigBuckets) lit("ALLBUCKETS") else col("Bucket"))
     .withColumn("agg_ts", bucketTs(cfg, cfg.aggregateSeconds))
 
-  /** D1: the dedup key is (RequestID, window), NOT global RequestID — the
-    * reference resets its seen-set at aggregate_second bounds
-    * (s3logs/src/utils.rs:1034-1045). `refine` columns must be functions
-    * of that key: they add grouping columns (so a partitioning on them
-    * satisfies the dedup's distribution) without changing which rows are
-    * duplicates. */
-  private def dedup(df: DataFrame, cfg: EtlConfig,
-      refine: Seq[String] = Nil): DataFrame =
-    if (cfg.dedup) df.dropDuplicates(Seq("RequestID", "agg_ts") ++ refine)
-    else df
+  /** D1 over an unsorted frame: the dedup key is (RequestID, window), NOT
+    * global RequestID — the reference resets its seen-set at
+    * aggregate_second bounds (s3logs/src/utils.rs:1034-1045). The batch
+    * sink keeps the first row per key from its time-sorted rows instead
+    * (`sink`); EtlSpec ties the two together. */
+  private def dedup(df: DataFrame, cfg: EtlConfig): DataFrame =
+    if (cfg.dedup) df.dropDuplicates("RequestID", "agg_ts") else df
 
   /** Full batch run: read text logs, transform, write partitioned parquet.
     * Returns conservation stats (M2). */
@@ -385,23 +391,24 @@ object Transform {
     } finally if (keepRaw) parsed.unpersist()
   }
 
-  /** bucket → sink exchange → dedup → sort → partitioned parquet, one
-    * job chain; the counters ride the write. */
+  /** bucket → sink exchange → sort → first row per D1 key → partitioned
+    * parquet, one job chain; the counters ride the write. */
   private def sink(parsed: DataFrame, out: String,
       cfg: EtlConfig): TransformStats = {
     val parts = partitionFormats(cfg)
     val partCols = parts.map(_._1)
-    def partValues(t: Column, prefix: String) = parts.map { case (name, fmt) =>
-      date_format(localClock(cfg, t), fmt).as(prefix + name)
+    def partValues(t: Column) = parts.map { case (name, fmt) =>
+      date_format(localClock(cfg, t), fmt).as(name)
     }
 
     // The sink key: the output partition values of the row's WINDOW, plus
-    // a bounded RequestID salt. Partition values alone would route a hot
-    // hour — guaranteed by diurnal log traffic — to ONE reducer task
-    // regardless of cluster size (maxRecordsPerFile bounds file size, not
-    // task size). The salt fans each output partition over
-    // ≤ sinkSaltBuckets tasks; RequestID is effectively uniform, so the
-    // fan-out is even. Both parts are functions of (RequestID, agg_ts).
+    // a bounded RequestID salt, both functions of the D1 key (RequestID,
+    // agg_ts) and hashed straight from expressions (no shuffled key
+    // columns). Partition values alone would route a hot hour — guaranteed
+    // by diurnal log traffic — to ONE reducer task regardless of cluster
+    // size (maxRecordsPerFile bounds file size, not task size). The salt
+    // fans each output partition over ≤ sinkSaltBuckets tasks; RequestID
+    // is effectively uniform, so the fan-out is even.
     //
     // AQE interaction: coalescePartitions can merge salted sub-splits
     // back together when they are SMALL — at production sizes a hot
@@ -416,9 +423,8 @@ object Transform {
     // bounded and compactable (graft.etl.Compact).
     val salt =
       if (cfg.sinkSaltBuckets > 1)
-        Seq(pmod(hash(col("RequestID")), lit(cfg.sinkSaltBuckets)).as("_salt"))
+        Seq(pmod(hash(col("RequestID")), lit(cfg.sinkSaltBuckets)))
       else Nil
-    val sinkKey = partCols.map("_k" + _) ++ salt.map(_ => "_salt")
 
     // W1 at the sink: reference-shaped physical schema — real ExtraFieldN
     // columns instead of the overflow array (s3logs/src/utils.rs:1217-1222)
@@ -445,27 +451,31 @@ object Transform {
     // stage, where Spark applies each task's update exactly once.
     val inObs = Observation("etl_in")
     val outObs = Observation("etl_out")
-    val deduped = dedup(
-      bucket(parsed, cfg)
-        .select(col("*") +:
-          (partValues(timestamp_seconds(col("agg_ts")), "_k") ++ salt): _*)
-        .repartition(sinkKey.map(col): _*)
-        .observe(inObs, count(lit(1)).as("lines"),
-          count_if(col("ts").isNull).as("malformed"))
-        .filter(col("ts").isNotNull),
-      cfg, sinkKey)
-      .observe(outObs, count(lit(1)).as("rows"))
-
     // T1's sort exists in the reference to enable its streaming split +
     // first-wins dedup; post-shuffle we sort within partitions only (no
-    // global exchange). Sorting by the partition columns first satisfies
-    // the writer's required ordering, so Spark adds no sort of its own
-    // and the trailing `ts` survives: parquet row groups are
-    // time-clustered for downstream range pruning.
+    // global exchange). The partition columns lead, so the writer's
+    // required ordering holds and Spark adds no sort of its own; agg_ts
+    // next keeps every window contiguous even where the local clock
+    // repeats an hour (a DST fall-back); ts last makes the kept row the
+    // earliest of its key and time-clusters the parquet row groups for
+    // downstream range pruning. With a fixed offset agg_ts is monotone
+    // in ts, so this is the (partition, ts) order.
+    val sorted = bucket(parsed, cfg)
+      .repartition(partValues(timestamp_seconds(col("agg_ts"))) ++ salt: _*)
+      .observe(inObs, count(lit(1)).as("lines"),
+        count_if(col("ts").isNull).as("malformed"))
+      .filter(col("ts").isNotNull)
+      .select(col("*") +: partValues(col("ts")): _*)
+      .sortWithinPartitions((partCols :+ "agg_ts" :+ "ts").map(col): _*)
+    // D1: the first row per (RequestID, agg_ts) of the sorted rows
+    val deduped =
+      if (!cfg.dedup) sorted
+      else sorted.filter(call_function(
+        graft.functions.FirstInWindowExpr.functionName,
+        col("RequestID"), col("agg_ts")))
     val rows = deduped
-      .select(col("*") +: partValues(col("ts"), ""): _*)
-      .sortWithinPartitions((partCols :+ "ts").map(col): _*)
-      .drop(Seq("ts", "agg_ts") ++ sinkKey: _*)
+      .observe(outObs, count(lit(1)).as("rows"))
+      .drop("ts", "agg_ts")
     val sinkShaped =
       if (cfg.widenedSink) AccessLogSchema.widened(rows, extraCols) else rows
     sinkShaped.write.mode(SaveMode.Append)

@@ -459,14 +459,13 @@ class EtlSpec extends SparkSpec {
       override def onFailure(f: String, qe: QueryExecution,
           e: Exception): Unit = ()
     }
+    // the listener bus is async: deliver the events of earlier actions
+    // (a fixture write) before listening, and those of `body` after it
+    org.apache.spark.ListenerBusBridge.drain(spark.sparkContext)
     spark.listenerManager.register(listener)
     try {
       body
-      // the listener bus is async: wait for the write, then for stragglers
-      val deadline = System.currentTimeMillis + 30000
-      while (seen.isEmpty && System.currentTimeMillis < deadline)
-        Thread.sleep(50)
-      Thread.sleep(500)
+      org.apache.spark.ListenerBusBridge.drain(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
     seen.asScala.toSeq
   }
@@ -521,6 +520,12 @@ class EtlSpec extends SparkSpec {
 
   test("fused sink equals Transform.pipeline for a window straddling " +
     "hour dirs and across a DST fall-back, with conservation") {
+    sinkMatchesPipeline()
+  }
+
+  /** `Transform.run`'s lake equals `Transform.pipeline` (dropDuplicates)
+    * for a window straddling hour dirs and across a DST fall-back. */
+  private def sinkMatchesPipeline(): Unit = {
     import spark.implicits._
     def epoch(iso: String) = java.time.Instant.parse(iso).getEpochSecond
     val cases = Seq(
@@ -557,6 +562,108 @@ class EtlSpec extends SparkSpec {
       assert(stats.inputLines ==
         stats.malformedLines + stats.dedupedLines + stats.outputRows)
     }
+  }
+
+  /** `body` with session conf `knobs` set, the previous values restored. */
+  private def withKnobs[A](knobs: Map[String, String])(body: => A): A = {
+    val before = knobs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    knobs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("fused sink equals Transform.pipeline under the engine knobs a " +
+    "stateful per-partition dedup could break") {
+    Seq(
+      Map("spark.sql.shuffle.partitions" -> "1"),
+      Map("spark.sql.shuffle.partitions" -> "7"),
+      Map("spark.sql.adaptive.enabled" -> "false"),
+      Map("spark.sql.codegen.wholeStage" -> "false")).foreach { knobs =>
+      withClue(s"$knobs: ")(withKnobs(knobs)(sinkMatchesPipeline()))
+    }
+  }
+
+  test("the write plan is one exchange and one sort, with no aggregate") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.aggregate.{HashAggregateExec,
+      ObjectHashAggregateExec, SortAggregateExec}
+    val tmp = Files.createTempDirectory("graft-one-sort").toString
+    val in = s"$tmp/in"
+    LogGen.entries(1000, rangeSec = 3 * 3600, seed = 85, dupFrac = 0.1)
+      .map(_.line).toDF("value").repartition(2).write.text(in)
+    val actions = actionsOf { Transform.run(spark, Seq(in), s"$tmp/out") }
+    assert(actions.size == 1, actions.map(_._1))
+    val plan = actions.head._2
+    val nodes = planNodes(plan)
+    assert(SparkSpec.shuffleCount(plan) == 1, plan)
+    assert(nodes.count(_.isInstanceOf[SortExec]) == 1, plan)
+    assert(!nodes.exists(n => n.isInstanceOf[SortAggregateExec] ||
+      n.isInstanceOf[HashAggregateExec] ||
+      n.isInstanceOf[ObjectHashAggregateExec]), plan)
+    assert(plan.toString.contains("graft_first_in_window"), plan)
+  }
+
+  test("D1 keeps the earliest row per (RequestID, window): one RequestID " +
+    "at two times in one window and again in the next") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft-first").toString
+    val in = s"$tmp/in"; val out = s"$tmp/out"
+    val w0 = 1699999200L // a 900 s window start
+    val base = LogGen.entries(200, t0 = w0, rangeSec = 1800, seed = 86)
+    val req = base.head.copy(requestId = "REQSAME")
+    // the later copy of window w0 comes first in the input and differs
+    // in Operation, so the kept row tells which one survived
+    val fixture = Seq(
+      req.copy(epochSec = w0 + 700, operation = "REST.PUT.OBJECT"),
+      req.copy(epochSec = w0 + 100, operation = "REST.GET.OBJECT"),
+      req.copy(epochSec = w0 + 900 + 10, operation = "REST.HEAD.OBJECT"))
+    (fixture ++ base.tail).map(_.line).toDF("value").repartition(3)
+      .write.text(in)
+    val stats = Transform.run(spark, Seq(in), out)
+    assert(stats.dedupedLines == 1 && stats.outputRows == 201, stats)
+    val kept = spark.read.parquet(out).filter($"RequestID" === "REQSAME")
+      .select(unix_timestamp(to_timestamp($"Time",
+        AccessLogSchema.timeFormat)), $"Operation")
+      .collect().map(r => r.getLong(0) -> r.getString(1)).sorted.toSeq
+    assert(kept == Seq(w0 + 100 -> "REST.GET.OBJECT",
+      (w0 + 910) -> "REST.HEAD.OBJECT"), kept)
+    // Transform.pipeline agrees on how many rows each window keeps
+    val viaPipeline = Transform.pipeline(
+      spark.read.text(in), EtlConfig()).filter($"RequestID" === "REQSAME")
+      .groupBy("agg_ts").count().collect().map(_.getLong(1)).toSeq
+    assert(viaPipeline == Seq(1L, 1L), viaPipeline)
+  }
+
+  test("short lines without a RequestID collapse per window exactly as " +
+    "Transform.pipeline collapses them") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft-short").toString
+    val in = s"$tmp/in"; val out = s"$tmp/out"
+    // valid time, no RequestID field: two windows of 3 and 2 short lines
+    val short = Seq(
+      "o2 b [14/Nov/2023:22:14:00 +0000]", "o1 b [14/Nov/2023:22:13:20 +0000]",
+      "o3 c [14/Nov/2023:22:14:30 +0000]", "o5 b [14/Nov/2023:22:40:00 +0000]",
+      "o4 b [14/Nov/2023:22:30:00 +0000]")
+    val lines = short ++ LogGen.lines(50, seed = 87)
+    lines.toDF("value").repartition(2).write.text(in)
+    val stats = Transform.run(spark, Seq(in), out)
+    val expected = Transform.pipeline(lines.toDF("value"), EtlConfig())
+    val perWindow = (df: org.apache.spark.sql.DataFrame) => df
+      .filter($"RequestID".isNull)
+      .groupBy(floor(unix_timestamp(to_timestamp($"Time",
+        AccessLogSchema.timeFormat)) / 900)).count()
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val lake = perWindow(spark.read.parquet(out))
+    assert(lake == perWindow(expected) && lake.values.toSeq == Seq(1L, 1L), lake)
+    assert(stats.outputRows == 52 && stats.dedupedLines == 3, stats)
+    // the kept null-key row of each window is its earliest
+    assert(spark.read.parquet(out).filter($"RequestID".isNull)
+      .select($"BucketOwner").as[String].collect().sorted.toSeq ==
+      Seq("o1", "o4"))
   }
 
   test("conservation holds on the cached path: archive and quarantine " +

@@ -60,7 +60,9 @@ class MainSpec extends SparkSpec {
     val out = Main.run(spark,
       Seq("transform", "-o", s"$tmp/lake", s"$tmp/in"),
       Map("S3LOGS_TRANSFORM_JOB_INTERVAL" -> "0"))
-    assert(out == Seq("transform task ended, 200 lines processed"))
+    assert(out == Seq("transform task ended, 200 lines processed",
+      "transform census: 200 lines read, 0 malformed, 0 duplicates " +
+        "dropped, 200 rows written"))
     // the lake is hive-partitioned parquet with every surviving row
     val lake = spark.read.parquet(s"$tmp/lake")
     assert(lake.count() > 0 && lake.columns.contains("RequestID"))
@@ -581,7 +583,11 @@ class MainSpec extends SparkSpec {
     writer.join()
     assert(out == Seq(
       "transform task ended, 40 lines processed",
+      "transform census: 40 lines read, 0 malformed, 0 duplicates " +
+        "dropped, 40 rows written",
       "transform task ended, 25 lines processed",
+      "transform census: 25 lines read, 0 malformed, 0 duplicates " +
+        "dropped, 25 rows written",
       "transform loop ended after 2 iteration(s)"))
     assert(spark.read.parquet(s"$tmp/lake").count() == 65)
     // processed staging files moved into the hidden .processed dir
@@ -593,6 +599,8 @@ class MainSpec extends SparkSpec {
     val again = Main.run(spark, Seq("transform", "-o", s"$tmp/lake",
       "--loop", "0", "--iterations", "1", s"$tmp/stage"), env)
     assert(again == Seq("transform task ended, 0 lines processed",
+      "transform census: 0 lines read, 0 malformed, 0 duplicates " +
+        "dropped, 0 rows written",
       "transform loop ended after 1 iteration(s)"))
     assert(spark.read.parquet(s"$tmp/lake").count() == 65)
   }
@@ -809,6 +817,9 @@ class MainSpec extends SparkSpec {
           qe: org.apache.spark.sql.execution.QueryExecution,
           e: Exception): Unit = ()
     }
+    // deliver the fixture writes' events before listening: their plans
+    // name the corpus path too
+    org.apache.spark.ListenerBusBridge.drain(spark.sparkContext)
     spark.listenerManager.register(listener)
     val out = try {
       val r = Main.run(spark,
