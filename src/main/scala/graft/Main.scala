@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{avg, coalesce, col, count, count_distinct, expr, lit, max, sum, when}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.functions.{avg, coalesce, col, count, count_distinct, count_if, expr, lit, max, sum, when}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 import graft.etl.{AccessLogParser, Compact, EtlConfig, StreamingTransform, Transform,
@@ -207,8 +207,8 @@ object Main {
       env: Map[String, String] = sys.env): Seq[String] = {
     val cfg = EtlConfig.fromEnv(env)
     // $GRAFT_CHECKPOINT_DIR: reliable-checkpoint knob (see [[Materialize]])
-    // — on a real cluster the iterative/disposition commands (dedup,
-    // curate, the component loops) must survive executor loss, which
+    // — on a real cluster the iterative/disposition commands (curate,
+    // the BPE and k-means loops) must survive executor loss, which
     // localCheckpoint's executor-resident blocks cannot. Setting the dir
     // routes every engine materialization through reliable checkpoint().
     env.get("GRAFT_CHECKPOINT_DIR").filter(_.trim.nonEmpty) match {
@@ -379,33 +379,29 @@ object Main {
         // command: one artifact write, decision counts on stdout.
         // --best chooses each content cluster's canonical by d09
         // quality instead of min doc_id — the emission policy when the
-        // cleanest capture should win. The disposition frame is
-        // checkpoint-backed, so Spark's own "cannot overwrite a path
-        // being read from" check never fires: the output guard is all
-        // that keeps a typo from replacing the documents.
+        // cleanest capture should win.
         val Seq(corpus, out) = positional(verb, opts, "<corpusDir>", "<outDir>")
         guardOutputClash(spark, verb, out, "corpus" -> corpus)
         val best = opts.switches("--best")
-        // dedupApply/dedupBest refuse duplicate doc_ids (a replayed
-        // corpus), null ids/text, and non-integral id types — before
-        // the pipeline runs, so a refused corpus writes no artifact.
-        val disp =
-          if (best) DedupQueries.dedupBest(corpusIn(corpus))
-          else DedupQueries.dedupApply(corpusIn(corpus))
-        // all reads below hit the checkpoint-backed disposition frame —
-        // the dedup pipeline runs once, not once per consumer.
-        val counts = disp.groupBy("status").count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        val total = counts.values.sum
-        writeArtifact(disp, out, cfg)
+        // the contract checks (duplicate doc_ids of a replayed corpus,
+        // null ids/text, non-integral ids) fail before the write, so a
+        // refused corpus writes no artifact; the census is counted in
+        // the write itself, so the disposition plan runs once
+        val statuses =
+          if (best) Seq("kept", "dup") else Seq("kept", "exact_dup", "near_dup")
+        val census = Observation("dedup")
+        DedupQueries.withDisposition(corpusIn(corpus), best) { disp =>
+          writeArtifact(disp.observe(census, count(lit(1)).as("total"),
+            statuses.map(st => count_if(col("status") === st).as(st)): _*),
+            out, cfg)
+        }
+        val n = census.get.map { case (k, v) => k -> v.asInstanceOf[Long] }
         if (best)
-          Seq(s"dedup task ended, ${counts.getOrElse("kept", 0L)} of " +
-            s"$total docs kept (${counts.getOrElse("dup", 0L)} duplicates " +
-            "dropped, best-quality canonicals)")
+          Seq(s"dedup task ended, ${n("kept")} of ${n("total")} docs kept " +
+            s"(${n("dup")} duplicates dropped, best-quality canonicals)")
         else
-          Seq(s"dedup task ended, ${counts.getOrElse("kept", 0L)} of $total " +
-            s"docs kept (${counts.getOrElse("exact_dup", 0L)} exact, " +
-            s"${counts.getOrElse("near_dup", 0L)} near duplicates dropped)")
+          Seq(s"dedup task ended, ${n("kept")} of ${n("total")} docs kept " +
+            s"(${n("exact_dup")} exact, ${n("near_dup")} near duplicates dropped)")
       case "spandedup" =>
         // the d28 span disposition as a pipeline command: documents are
         // split on the LITERAL separator (default blank line — the

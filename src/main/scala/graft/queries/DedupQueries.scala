@@ -366,8 +366,9 @@ object DedupQueries {
         .select($"doc_a", $"doc_b", $"jaccard")
     }
 
-    /** d11: duplicate clusters from this scope's candidate pairs. Eager
-      * (the component loop materializes every round). */
+    /** d11: duplicate clusters from this scope's candidate pairs. Eager:
+      * one action fetches the pairs, and the labels come back as a local
+      * table that outlives the scope. */
     def clusters: DataFrame =
       connectedComponents(pairs.select(col("doc_a"), col("doc_b")))
 
@@ -895,50 +896,20 @@ object DedupQueries {
     * near-dup links (transitive closure). This is the actual artifact a
     * dedup pipeline ships: keep one doc per cluster_id.
     *
-    * Implementation is iterative min-label propagation (the Pregel
-    * pattern as plain DataFrame ops): each round every node takes the
-    * min of its own label and its neighbors' labels — converges in
-    * O(cluster diameter) rounds. Per round the data in motion is ONLY
-    * (doc_id, label) pairs — two narrow hash shuffles — so the loop
-    * scales to any corpus whose near-dup graph fits the cluster (it
-    * always does: the graph is bounded by the capped candidate pairs,
-    * not the corpus). Labels are persisted per round and the previous
-    * round unpersisted, keeping lineage flat.
+    * The pair set is fetched once and its components are found by
+    * union-find on the driver ([[connectedComponents]]): the graph is
+    * bounded by the capped candidate pairs, not the corpus, so it fits
+    * the driver at any corpus size SCALE.md measures. The returned
+    * labels are a local table that references no scope state.
     */
   def duplicateClusters(docs: DataFrame): DataFrame =
-    // run the component loop INSIDE the scope: the loop's own per-round
-    // checkpoints materialize the pair join straight off the cached
-    // signatures, skipping the intermediate eager pair checkpoint the
-    // one-shot minhashPairs needs; the returned labels are checkpoint-
-    // backed and reference no scope state
-    withDedupScope(docs) { scope =>
-      connectedComponents(scope.pairs.select(col("doc_a"), col("doc_b")))
-    }
+    withDedupScope(docs)(_.clusters)
 
-  /** d25: APPLY the dedup decision — the disposition a training pipeline
-    * actually executes to emit its corpus: every document labeled
-    * `kept`, `exact_dup` (a byte-identical copy of an earlier doc), or
-    * `near_dup` (an exact-dup representative whose near-dup cluster
-    * keeps a smaller doc), with `canonical_id` = the kept document this
-    * one's content collapses to. Filtering to `status = 'kept'` (or
-    * `doc_id = canonical_id`) yields exactly one doc per content
-    * cluster; d01/d03/d11 DETECT, this DISPOSES.
-    *
-    * Composition (nothing new moves): exact stage = min doc_id per
-    * fingerprint over the scope's one signature pass (fixed-width fp
-    * shuffle keys — shingle-less docs participate here too, identical
-    * empty-ish texts are still exact dups); near-dup stage = the d11
-    * cluster labels over the capped rep-level pair graph; disposition =
-    * one rep-keyed left join of the corpus-size member table against
-    * the (pair-graph-bounded) label table. Canonical chase terminates
-    * in one step by construction: a cluster label IS the component's
-    * min doc, whose own label is itself. */
   /** The disposition operators' shared contract checks (loud — these
     * are CLI-reachable over arbitrary user parquet, where a schema
     * deviation must fail, not silently disposition wrong):
-    *   - non-integral doc_id: connectedComponents' label cast("long")
-    *     would null every cluster_id and every near-dup would read
-    *     'kept';
+    *   - non-integral doc_id: connectedComponents reads ids as longs,
+    *     and a cast string id is null or truncated;
     *   - duplicate doc_id (a replayed corpus): rep = canonical = itself
     *     on BOTH rows and both read 'kept' — the "deduped" corpus keeps
     *     duplicates. One id-only shuffle (fixed-width keys,
@@ -977,23 +948,26 @@ object DedupQueries {
         .otherwise($"text"))
   }
 
-  def dedupApply(docs: DataFrame): DataFrame = {
-    val s = docs.sparkSession
-    import s.implicits._
-    val guarded = dispositionGuarded(docs, "dedupApply")
-    withDedupScope(guarded) { scope =>
-      val members = scope.members()
-      val clusters = scope.clusters.select($"doc_id".as("rep"), $"cluster_id")
-      val canonical = coalesce($"cluster_id", $"rep")
-      members.join(clusters, Seq("rep"), "left")
-        .select($"doc_id",
-          canonical.as("canonical_id"),
-          when($"doc_id" === canonical, "kept")
-            .when($"doc_id" =!= $"rep", "exact_dup")
-            .otherwise("near_dup").as("status"))
-        .materialize()
-    }
-  }
+  /** d25: APPLY the dedup decision — the disposition a training pipeline
+    * actually executes to emit its corpus: every document labeled
+    * `kept`, `exact_dup` (a byte-identical copy of an earlier doc), or
+    * `near_dup` (an exact-dup representative whose near-dup cluster
+    * keeps a smaller doc), with `canonical_id` = the kept document this
+    * one's content collapses to. Filtering to `status = 'kept'` (or
+    * `doc_id = canonical_id`) yields exactly one doc per content
+    * cluster; d01/d03/d11 DETECT, this DISPOSES.
+    *
+    * Composition (nothing new moves): exact stage = min doc_id per
+    * fingerprint over the scope's one signature pass (fixed-width fp
+    * shuffle keys — shingle-less docs participate here too, identical
+    * empty-ish texts are still exact dups); near-dup stage = the d11
+    * cluster labels over the capped rep-level pair graph; disposition =
+    * one rep-keyed left join of the corpus-size member table against
+    * the (pair-graph-bounded) label table. Canonical chase terminates
+    * in one step by construction: a cluster label IS the component's
+    * min doc, whose own label is itself. */
+  def dedupApply(docs: DataFrame): DataFrame =
+    withDisposition(docs, best = false)(_.materialize())
 
   /** d34: best-representative dedup — d25's disposition with the
     * canonical chosen by QUALITY, not by age: within each content group
@@ -1018,117 +992,101 @@ object DedupQueries {
     * group id. The -doc_id field makes lexicographic max realize
     * "quality DESC, doc_id ASC" in a single struct comparison (doc ids
     * are non-negative, so the negation cannot overflow). */
-  def dedupBest(docs: DataFrame): DataFrame = {
+  def dedupBest(docs: DataFrame): DataFrame =
+    withDisposition(docs, best = true)(_.materialize())
+
+  /** The d25 disposition ([[dedupApply]]), or under `best` the d34 one
+    * ([[dedupBest]]), handed lazy to `f` inside the one dedup scope that
+    * owns its caches. The contract checks run first, then one action
+    * fetches the pair graph for [[connectedComponents]]; `f`'s own
+    * action runs the rest of the plan off the scope's signature cache.
+    * The library entry points cut the frame (`_.materialize()`) so it
+    * outlives the scope; the `dedup` verb writes it inside `f` instead
+    * and counts its statuses with an observation on that write. `f`
+    * must finish every action over the frame before it returns: the
+    * scope's caches are released then. */
+  def withDisposition[A](docs: DataFrame, best: Boolean)(
+      f: DataFrame => A): A = {
     val s = docs.sparkSession
     import s.implicits._
-    val guarded = dispositionGuarded(docs, "dedupBest")
-    // quality rides the scope's ONE signature pass and the memberReps
-    // carry (r19) — the previous shape ran a SECOND full text scan
-    // (withQuality over the corpus) and a corpus-size doc_id join to
-    // attach it; same d09 expression, same rows, one scan and one join
-    // fewer.
-    withDedupScope(guarded, withQuality = true) { scope =>
-      val members = scope.members("quality")
+    val guarded =
+      dispositionGuarded(docs, if (best) "dedupBest" else "dedupApply")
+    // d34's quality rides the scope's one signature pass and the member
+    // carry (r19): no second text scan, no corpus-size doc_id join
+    withDedupScope(guarded, withQuality = best) { scope =>
       val clusters = scope.clusters.select($"doc_id".as("rep"), $"cluster_id")
-      val scored = members.join(clusters, Seq("rep"), "left")
-        .withColumn("group_id", coalesce($"cluster_id", $"rep"))
-        .select($"doc_id", $"quality", $"group_id")
-      val best = scored.groupBy($"group_id")
-        .agg(max(struct($"quality", (-$"doc_id").as("neg"),
-          $"doc_id".as("id"))).as("m"))
-        .select($"group_id", $"m.id".as("canonical_id"))
-      scored.join(best, Seq("group_id"))
-        .select($"doc_id", $"quality", $"canonical_id",
-          when($"doc_id" === $"canonical_id", "kept")
-            .otherwise("dup").as("status"))
-        .materialize()
+      val members = scope.members((if (best) Seq("quality") else Nil): _*)
+        .join(clusters, Seq("rep"), "left")
+      val group = coalesce($"cluster_id", $"rep")
+      f(if (best) {
+        val scored = members.select($"doc_id", $"quality", group.as("group_id"))
+        val canonical = scored.groupBy($"group_id")
+          .agg(max(struct($"quality", (-$"doc_id").as("neg"),
+            $"doc_id".as("id"))).as("m"))
+          .select($"group_id", $"m.id".as("canonical_id"))
+        scored.join(canonical, Seq("group_id"))
+          .select($"doc_id", $"quality", $"canonical_id",
+            when($"doc_id" === $"canonical_id", "kept")
+              .otherwise("dup").as("status"))
+      } else
+        members.select($"doc_id", group.as("canonical_id"),
+          when($"doc_id" === group, "kept")
+            .when($"doc_id" =!= $"rep", "exact_dup")
+            .otherwise("near_dup").as("status")))
     }
   }
 
   /** Connected components over an undirected pair graph (doc_a, doc_b):
-    * every node labeled with the min doc_id reachable from it. */
+    * every node labeled with the min doc_id reachable from it, as
+    * (doc_id, cluster_id: long), doc_id keeping the pair columns' type.
+    *
+    * Union-find on the driver. One action fetches the graph: each task
+    * packs its partition's edges into two primitive long arrays, so the
+    * driver holds 16 B per edge, not a boxed Row. The endpoint ids are
+    * sorted and deduplicated in place, each edge unions the positions of
+    * its two ids, and a union always hangs the larger root under the
+    * smaller one — so every root is its set's smallest position, which
+    * is its min doc_id. Path halving keeps the finds short; any graph
+    * finishes in one pass over the edges, whatever its diameter. The
+    * labels go back as a local table (the d29 re-injection pattern):
+    * they pin no checkpoint or cache, and a join reads them without
+    * re-running the pair plan. SCALE.md "Connected components on the
+    * driver" has the measured edge counts and the bytes per edge; above
+    * that bound Spark's own `spark.driver.maxResultSize` fails the fetch
+    * loudly. */
   def connectedComponents(pairFrame: DataFrame): DataFrame = {
     val s = pairFrame.sparkSession
     import s.implicits._
-    // Materialize the pair graph ONCE before the loop touches it. A lazy
-    // persist() here is not enough: the first action evaluates the edges
-    // union + init pass against the still-un-materialized plan, so an
-    // expensive upstream (the LSH band self-join when called from
-    // duplicateClusters) is partially re-triggered across its branches.
-    // An eager localCheckpoint runs the upstream exactly once and the
-    // loop then reads narrow materialized (doc_a, doc_b) blocks only.
-    val pairs = pairFrame.materialize()
-    // edges is a cheap narrow view over the checkpointed blocks (scan +
-    // column swap + union) — re-deriving it per round costs less than
-    // pinning a second copy of the graph in storage.
-    val edges = pairs
-      .union(pairs.select($"doc_b", $"doc_a"))
-      .toDF("src", "dst")
-    // init with one neighborhood-min pass (label = min(self, neighbors))
-    // instead of self-labels: LSH clusters are near-cliques, so most
-    // converge here and the loop is a single verification round.
-    // localCheckpoint (eager) rather than persist: the doubling step
-    // references `labels` three times per round, so the LOGICAL plan
-    // would grow ~4× per round and OOM the planner around round 8 even
-    // though execution reads the cache — checkpointing truncates lineage
-    // to the materialized partitions every round.
-    // lazyCut, not materialize (r19): the labelSum convergence aggregate
-    // right below is the action that computes (and caches) each round's
-    // labels — an eager checkpoint here paid a SECOND job per round for
-    // the same partitions. Lineage truncation is identical (LogicalRDD).
-    var labels = graft.Materialize.lazyCut(edges
-      .groupBy($"src").agg(min($"dst").as("nbr"))
-      .select($"src".as("doc_id"), least($"src", $"nbr").as("label")))
-    // convergence metric: labels only ever DECREASE, so the label sum is
-    // strictly monotone until fixpoint — comparing sums is exact and
-    // costs one single-stage aggregate over the just-materialized round
-    // (the previous merged-vs-old join cost a shuffle per round).
-    // decimal(38,0): exact at any row count × any doc_id magnitude.
-    // sum() over an EMPTY frame is SQL NULL — a pair-free corpus (no
-    // duplicates at all) must converge to an empty result on round one,
-    // not NPE on the null decimal.
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      Option(df.agg(sum($"label".cast("decimal(38,0)"))).head.getDecimal(0))
-        .getOrElse(java.math.BigDecimal.ZERO)
-    var prevSum = labelSum(labels)
-    var converged = false
-    var rounds = 0
-    while (!converged && rounds < 30) {
-      val nbrMin = edges
-        .join(labels.select($"doc_id".as("src"), $"label"), "src")
-        .groupBy($"dst".as("doc_id"))
-        .agg(min($"label").as("label"))
-      // pointer doubling (label ← label of my label): halves the
-      // remaining chain length every round, so convergence is
-      // O(log diameter) joins, not O(diameter) — a 30-round cap covers
-      // any graph a real corpus can produce (diameter 2^30). Deferred
-      // until a plain propagation round exists to double over: LSH
-      // clusters are near-cliques, so the common corpus finishes in one
-      // cheap verification round that never pays the label self-join.
-      val doubling =
-        if (rounds == 0) Nil
-        else Seq(labels.as("l1")
-          .join(labels.select($"doc_id".as("label"), $"label".as("ll")), "label")
-          .select($"doc_id", $"ll".as("label")))
-      // superseded rounds' checkpoint blocks are reclaimed by the
-      // ContextCleaner once the old frame is unreferenced — peak live
-      // storage is O(log diameter) narrow (doc_id,label) tables
-      val merged = graft.Materialize.lazyCut(
-        doubling.foldLeft(labels.union(nbrMin))(_ union _)
-          .groupBy($"doc_id").agg(min($"label").as("label")))
-      val mergedSum = labelSum(merged)
-      labels = merged
-      converged = mergedSum.compareTo(prevSum) == 0
-      prevSum = mergedSum
-      rounds += 1
+    val idType = pairFrame.select($"doc_a").union(pairFrame.select($"doc_b"))
+      .schema.head.dataType
+    val blocks = pairFrame.select($"doc_a".cast("long"), $"doc_b".cast("long"))
+      .as[(Long, Long)]
+      .mapPartitions { edges =>
+        val a, b = new scala.collection.mutable.ArrayBuilder.ofLong
+        edges.foreach { case (x, y) => a += x; b += y }
+        Iterator((a.result(), b.result()))
+      }
+      .collect()
+    val ids = Array.concat(blocks.flatMap { case (a, b) => Seq(a, b) }: _*)
+    java.util.Arrays.sort(ids)
+    var n = 0 // distinct ids, compacted to the front of `ids`
+    for (i <- ids.indices if n == 0 || ids(i) != ids(n - 1)) {
+      ids(n) = ids(i); n += 1
     }
-    if (!converged)
-      throw new IllegalStateException("label propagation did not converge")
-    // the result frame reads only the final round's checkpoint; the
-    // pair-graph checkpoint and superseded rounds become unreferenced
-    // here and the ContextCleaner reclaims their blocks — nothing stays
-    // registered in the catalog cache manager (the lifecycle contract)
-    labels.select($"doc_id", $"label".cast("long").as("cluster_id"))
+    val parent = Array.range(0, n)
+    def find(i: Int): Int = {
+      var x = i
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    def at(id: Long): Int = java.util.Arrays.binarySearch(ids, 0, n, id)
+    for ((a, b) <- blocks; k <- a.indices) {
+      val ra = find(at(a(k)))
+      val rb = find(at(b(k)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    (0 until n).map(i => (ids(i), ids(find(i)))).toDF("doc_id", "cluster_id")
+      .select($"doc_id".cast(idType).as("doc_id"), $"cluster_id")
   }
 
   /** DuckDB CTEs mirroring representatives() + cappedBands() exactly:

@@ -448,28 +448,6 @@ class EtlSpec extends SparkSpec {
 
   // ---- the fused single-pass sink ----------------------------------------
 
-  /** Every SQL action `body` runs, as (action name, executed plan). */
-  private def actionsOf(body: => Unit): Seq[(String, SparkPlan)] = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.execution.QueryExecution
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
-        seen.add(f -> qe.executedPlan)
-      override def onFailure(f: String, qe: QueryExecution,
-          e: Exception): Unit = ()
-    }
-    // the listener bus is async: deliver the events of earlier actions
-    // (a fixture write) before listening, and those of `body` after it
-    org.apache.spark.ListenerBusBridge.drain(spark.sparkContext)
-    spark.listenerManager.register(listener)
-    try {
-      body
-      org.apache.spark.ListenerBusBridge.drain(spark.sparkContext)
-    } finally spark.listenerManager.unregister(listener)
-    seen.asScala.toSeq
-  }
-
   /** All nodes of an executed plan, through AQE and its query stages. */
   private def planNodes(p: SparkPlan): Seq[SparkPlan] = {
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,

@@ -667,6 +667,74 @@ class MainSpec extends SparkSpec {
     assert(db(20L) == ((20L, "kept")), s"singleton: $db")
   }
 
+  /** A corpus with every disposition: three families of a 40-token
+    * text, each with a byte-identical copy and two drifted near copies,
+    * plus ten unique docs. */
+  private def writeDedupCorpus(dir: String): Unit = {
+    import spark.implicits._
+    def text(family: Int, drift: Int) =
+      ((0 until 40).map(t => s"f${family}t$t") ++ Seq.fill(drift)(s"pad$drift"))
+        .drop(drift).mkString(" ")
+    val families = (0 until 3).flatMap { f =>
+      Seq(0, 0, 2, 4).zipWithIndex.map { case (d, i) => (f * 10L + i, text(f, d)) }
+    }
+    val unique = (100L until 110L)
+      .map(i => (i, (0 until 30).map(t => s"u${i}w$t").mkString(" ")))
+    (families ++ unique).toDF("doc_id", "text").write.parquet(dir)
+  }
+
+  test("dedup: at most three SQL executions per policy, no lineage cut") {
+    val tmp = Files.createTempDirectory("graft-cli-dedup-actions").toString
+    writeDedupCorpus(s"$tmp/corpus")
+    Seq(Nil, Seq("--best")).zipWithIndex.foreach { case (flag, i) =>
+      val actions = actionsOf {
+        Main.run(spark, Seq("dedup", s"$tmp/corpus", s"$tmp/out$i") ++ flag,
+          Map.empty)
+      }
+      val names = actions.map(_._1).mkString(", ")
+      // the duplicate-id guard, the pair-graph fetch, the write
+      assert(actions.size <= 3, s"dedup ${flag.mkString}: $names")
+      assert(!actions.exists(_._1.toLowerCase.contains("checkpoint")),
+        s"dedup ${flag.mkString}: $names")
+    }
+  }
+
+  test("dedup: the printed census is the written artifact's status counts") {
+    val tmp = Files.createTempDirectory("graft-cli-dedup-census").toString
+    writeDedupCorpus(s"$tmp/corpus")
+    Seq(Nil, Seq("--best")).zipWithIndex.foreach { case (flag, i) =>
+      val out = Main.run(spark,
+        Seq("dedup", s"$tmp/corpus", s"$tmp/out$i") ++ flag, Map.empty)
+      val n = spark.read.parquet(s"$tmp/out$i").groupBy("status").count()
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        .withDefaultValue(0L)
+      val total = n.values.sum
+      assert(total == 22 && n("kept") == 13, s"statuses: $n")
+      val expected =
+        if (flag.isEmpty) s"dedup task ended, ${n("kept")} of $total docs " +
+          s"kept (${n("exact_dup")} exact, ${n("near_dup")} near duplicates dropped)"
+        else s"dedup task ended, ${n("kept")} of $total docs kept " +
+          s"(${n("dup")} duplicates dropped, best-quality canonicals)"
+      assert(out == Seq(expected))
+    }
+  }
+
+  test("dedup: a dup-free or empty corpus keeps every doc") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft-cli-dedup-unique").toString
+    (0L until 12L).map(i => (i, (0 until 25).map(t => s"u${i}w$t").mkString(" ")))
+      .toDF("doc_id", "text").write.parquet(s"$tmp/corpus")
+    assert(Main.run(spark, Seq("dedup", s"$tmp/corpus", s"$tmp/out"), Map.empty) ==
+      Seq("dedup task ended, 12 of 12 docs kept (0 exact, 0 near duplicates dropped)"))
+    assert(Main.run(spark, Seq("dedup", s"$tmp/corpus", s"$tmp/outBest", "--best"),
+      Map.empty) == Seq("dedup task ended, 12 of 12 docs kept " +
+      "(0 duplicates dropped, best-quality canonicals)"))
+    Seq.empty[(Long, String)].toDF("doc_id", "text").write.parquet(s"$tmp/empty")
+    assert(Main.run(spark, Seq("dedup", s"$tmp/empty", s"$tmp/outEmpty"), Map.empty) ==
+      Seq("dedup task ended, 0 of 0 docs kept (0 exact, 0 near duplicates dropped)"))
+    assert(spark.read.parquet(s"$tmp/outEmpty").count() == 0)
+  }
+
   test("spandedup: repeated paragraphs collapse to canonical, corpus rewritten") {
     import spark.implicits._
     val tmp = Files.createTempDirectory("graft-cli-spandedup").toString

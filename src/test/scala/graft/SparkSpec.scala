@@ -1,12 +1,34 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared one-session-per-JVM base for all suites (tests fork once). */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sfSmoke = "/root/testdata/sf0.001"
+
+  /** Every SQL action `body` runs, as (action name, executed plan). */
+  def actionsOf(body: => Unit): Seq[(String, SparkPlan)] = {
+    import scala.jdk.CollectionConverters._
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        seen.add(f -> qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    // the listener bus is async: deliver the events of earlier actions
+    // (a fixture write) before listening, and those of `body` after it
+    org.apache.spark.ListenerBusBridge.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.ListenerBusBridge.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    seen.asScala.toSeq
+  }
 
   /** The d13 content-hash split bucket, recomputed independently of the
     * engine (the oracle-side formula): rolling char hash mod 100. Shared
