@@ -12,7 +12,11 @@ scaladoc). When every differing cell is a float pair within 1e-6 relative
 error, the failure is annotated as a NEAR MISS (a rounding-discipline
 bug, not a logic bug).
 
-Usage: python3 scripts/selfcheck.py <sfDir> <outDir>
+Usage: python3 scripts/selfcheck.py <sfDir> <outDir> [name...]
+
+Names, as given to `graft.Verify <sfDir> <outDir> name...`, limit the check
+(oracle and skip lines alike) to those queries; with none, every query in
+oracle_sql.json is checked and a missing output is a FAIL.
 """
 import json
 import math
@@ -49,13 +53,16 @@ def near_miss_rel_err(bad):
     return worst
 
 
-def main(sf_dir, out_dir):
+def main(sf_dir, out_dir, names=()):
+    only = set(names)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.loads(Path(f"{out_dir}/oracle_sql.json").read_text())
     n_pass = n_fail = 0
     for name, sql in sorted(oracle.items()):
+        if only and name not in only:
+            continue
         pdir = Path(out_dir) / name
         if not pdir.exists():
             print(f"FAIL {name}: no spark output")
@@ -97,19 +104,25 @@ def main(sf_dir, out_dir):
     # no_oracle.json — surface them as SKIP lines (an UNDECLARED reason is
     # a gate gap and counts as a failure).
     skip_path = Path(f"{out_dir}/no_oracle.json")
+    skips = json.loads(skip_path.read_text()) if skip_path.exists() else {}
     n_skip = 0
-    if skip_path.exists():
-        for name, info in sorted(json.loads(skip_path.read_text()).items()):
-            reason = info.get("reason", "")
-            if reason.startswith("UNDECLARED"):
-                print(f"FAIL {name}: no oracle and no declared design reason")
-                n_fail += 1
-            else:
-                print(f"SKIP {name}: {info.get('skipped')} — {reason[:80]}")
-                n_skip += 1
+    for name, info in sorted(skips.items()):
+        if only and name not in only:
+            continue
+        reason = info.get("reason", "")
+        if reason.startswith("UNDECLARED"):
+            print(f"FAIL {name}: no oracle and no declared design reason")
+            n_fail += 1
+        else:
+            print(f"SKIP {name}: {info.get('skipped')} — {reason[:80]}")
+            n_skip += 1
+    # a requested name that is no query at all is a typo, not a pass
+    for name in sorted(only - set(oracle) - set(skips)):
+        print(f"FAIL {name}: no such query")
+        n_fail += 1
     print(f"\n{n_pass} pass / {n_fail} fail / {n_skip} skipped-by-design")
     return 1 if n_fail else 0
 
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    sys.exit(main(sys.argv[1], sys.argv[2], sys.argv[3:]))

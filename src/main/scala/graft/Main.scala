@@ -29,6 +29,8 @@ import graft.queries.{DedupQueries, DocumentQueries, EmbeddingQueries, QueryConf
   *       (each `--loop` iteration prints both). `--loop` re-runs on a timer
   *       over the age gate, moving processed files to `.processed/` —
   *       the scripts/transform.sh daemon shape; see [[transformLoop]].
+  *       It refuses, before its first iteration, any input that is not
+  *       an existing local file or directory.
   *   stream [--once] <landingDir> <outDir> <checkpointDir>
   *       the streaming mode (s3logd-stream analog): continuous
   *       [[StreamingTransform]] query over a landing directory; `--once`
@@ -78,9 +80,9 @@ import graft.queries.{DedupQueries, DocumentQueries, EmbeddingQueries, QueryConf
   *       exact n-gram benchmark decontamination, both directions:
   *       `<out>/eval_report` (d30) + `<out>/train_dispositions` (d32).
   *   bpetrain <corpusDir> <outDir> [--merges <k>] [--min-count <n>]
-  *       d29 tokenizer training on the production path (one distributed
-  *       corpus pass + driver-side merge loop over the Heaps-bounded
-  *       word table); writes the merge-table parquet d29b consumes.
+  *       d29 tokenizer training (one distributed corpus pass + a
+  *       driver-side merge loop over the Heaps-bounded word table);
+  *       writes the merge-table parquet d29b consumes.
   *   tokenize <corpusDir> <mergesDir> <outDir>
   *       d29b off the saved bpetrain artifact: per-doc BPE token counts
   *       under an already-trained merge table (no training runs).
@@ -208,7 +210,7 @@ object Main {
     val cfg = EtlConfig.fromEnv(env)
     // $GRAFT_CHECKPOINT_DIR: reliable-checkpoint knob (see [[Materialize]])
     // — on a real cluster the iterative/disposition commands (curate,
-    // the BPE and k-means loops) must survive executor loss, which
+    // the k-means loop) must survive executor loss, which
     // localCheckpoint's executor-resident blocks cannot. Setting the dir
     // routes every engine materialization through reliable checkpoint().
     env.get("GRAFT_CHECKPOINT_DIR").filter(_.trim.nonEmpty) match {
@@ -530,24 +532,22 @@ object Main {
           s"eval docs compromised; drop ${tr.getLong(1)} of " +
           s"${tr.getLong(0)} train docs to remediate")
       case "bpetrain" =>
-        // d29 as a pipeline command, on the PRODUCTION path
-        // (DocumentQueries.bpeMergesDriver): ONE distributed
-        // word-frequency pass over the corpus, then the merge loop in
-        // driver memory over the Heaps-bounded distinct-word table —
-        // the SCALE.md-measured shape for real merge counts (the
-        // relational loop's ~0.2 s/round scheduling floor × 32k rounds
-        // would be hours; the driver loop trains a full table in
-        // seconds). Writes the merge table parquet: the artifact d29b
-        // tokenization and any BPE runtime consume.
+        // d29 as a pipeline command (DocumentQueries.bpeMerges, the
+        // trainer the d29 gate checks): ONE distributed word-frequency
+        // pass over the corpus, then the merge loop in driver memory
+        // over the Heaps-bounded distinct-word table, so a full 32k
+        // table trains in under a minute (SCALE.md). Writes the merge table
+        // parquet: the artifact d29b tokenization and any BPE runtime
+        // consume.
         val Seq(corpus, out) = positional(verb, opts, "<corpusDir>", "<outDir>")
         guardOutputClash(spark, verb, out, "corpus" -> corpus)
         val kMerges = intFlag(verb, opts, "--merges").getOrElse(32000)
-        // --min-count: the web-scale collect floor (see bpeMergesDriver
+        // --min-count: the web-scale collect floor (see bpeMerges
         // scaladoc) — prune words rarer than this BEFORE the driver
         // collect; 1 (the default) collects everything
         val minCount = numFlag(verb, opts, "--min-count", "an integer",
           _.toLong, ">= 1")(_ >= 1).getOrElse(1L)
-        val table = DocumentQueries.bpeMergesDriver(corpusIn(corpus),
+        val table = DocumentQueries.bpeMerges(corpusIn(corpus),
           kMerges, minCount)
         // the merge table is a driver-local relation: count it directly
         // (near-free) rather than re-reading the written parquet
@@ -560,10 +560,11 @@ object Main {
       case "tokenize" =>
         // d29b off the saved bpetrain artifact: per-doc token counts
         // under an already-trained merge table — the apply side of the
-        // tokenizer pipeline (bpetrain writes the table, tokenize
-        // consumes it; no training runs here). One broadcast of the
-        // k-row merge table + one tokenize pass over the Heaps-bounded
-        // distinct-word table + one broadcast join over the term stream.
+        // tokenizer pipeline and the d29b gate's function (bpetrain
+        // writes the table, tokenize consumes it; no training runs
+        // here). One broadcast of the k-row merge table + one tokenize
+        // pass over the Heaps-bounded distinct-word table + one
+        // broadcast join over the term stream.
         val Seq(corpus, mergesDir, out) =
           positional(verb, opts, "<corpusDir>", "<mergesDir>", "<outDir>")
         guardOutputClash(spark, verb, out, "corpus" -> corpus,
@@ -952,6 +953,13 @@ object Main {
       out: String, cfg: EtlConfig, intervalSeconds: Long,
       maxIterations: Option[Int]): Seq[String] = {
     require(intervalSeconds >= 0, "--loop interval must be >= 0 seconds")
+    // the loop lists inputs with java.io.File (quietFiles), which sees
+    // neither a missing path nor a non-local URI: either would run as an
+    // empty batch forever, where plain `transform` fails on Spark's path
+    // check. An existing empty directory is a valid, idle staging dir.
+    val unseen = inputs.filterNot(in => new java.io.File(in).exists)
+    if (unseen.nonEmpty) fail("transform --loop reads existing local " +
+      s"files and directories only; not found: ${unseen.mkString(", ")}")
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
     val wake = new java.util.concurrent.CountDownLatch(1)
     // the hook must JOIN the loop thread, not just signal it: the JVM

@@ -5,8 +5,8 @@ import org.apache.spark.sql.DataFrame
 /** Checkpoint-backend selector for the engine's eager materializations.
   *
   * The iterative and disposition operators (the dedup scope's pair/verify
-  * results, bpeTrain's per-round vocab, dedupApply/dedupBest, s04's
-  * k-means rounds, CLI `curate`) all
+  * results, dedupApply/dedupBest, s04's k-means rounds, CLI `curate`)
+  * all
   * need an EAGER cut of lineage: either because a loop would otherwise
   * grow the logical plan exponentially, or because several consumers must
   * read one computed result. Two backends exist and the right one is a
@@ -91,11 +91,12 @@ object Materialize {
     * concurrent stages race block-by-block on uncomputed partitions and
     * measured 1.17 → 1.53 s (reverted; same revert on the
     * quality-quantile frames, the retrieval probe set, d41's fp table),
-    * while single-first-action sites (BPE rounds, sortedOnce kernels,
-    * d52's fp pass 1.33 → 1.08; connectedComponents' label rounds too,
-    * d11 2.14 → 1.80 s, before union-find on the driver replaced them)
-    * all won or tied. Do not flip a cut across this boundary without
-    * re-measuring (same-JVM `Probe` conf A/B + job counts).
+    * while single-first-action sites (sortedOnce kernels, d52's fp pass
+    * 1.33 → 1.08; the per-round cuts of two loops that have since moved
+    * to the driver, connectedComponents' labels, d11 2.14 → 1.80 s, and
+    * the BPE trainer's vocab) all won or tied. Do not flip a cut across
+    * this boundary without re-measuring (same-JVM `Probe` conf A/B + job
+    * counts).
     *
     * Mechanics: a lineage cut whose MATERIALIZATION rides the caller's
     * own next action instead of a dedicated eager job (r19). The
@@ -104,8 +105,9 @@ object Materialize {
     * when lazy, so iterative loops still cannot grow their plans — but
     * with the local backend the RDD computes (and its blocks cache)
     * under the FIRST action the caller runs over the returned frame,
-    * halving the job count of checkpoint-then-consume loops (bpeTrain's
-    * rounds: the next round's pair aggregate is that action). Reliable-checkpoint mode stays eager: RDD.checkpoint's
+    * halving the job count of checkpoint-then-consume loops (s04's
+    * k-means rounds: the next round's centroid broadcast build is that
+    * action). Reliable-checkpoint mode stays eager: RDD.checkpoint's
     * write job re-executes lineage unless the data is already cached
     * (see [[apply]]), so laziness buys nothing there and the deployment
     * semantics stay identical. */

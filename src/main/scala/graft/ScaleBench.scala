@@ -24,9 +24,10 @@ object ScaleBench {
   // measures the two-phase offset machinery, not a global sort); d28
   // because its df+canonical groupBy joins back a corpus-sized segment
   // table — the one post-round-11 dedup shape not already in the scope;
-  // d29 because its corpus-once/vocab-iterate separation is the scale
+  // d29 because its one-corpus-pass-then-driver-loop split is the scale
   // CLAIM (ScaleGen's 31-word vocab is constant while the corpus grows
-  // 100x, so the iterate phase should be scale-flat by construction);
+  // 100x, so only the word-frequency pass should grow, and the merge
+  // loop on the collected word table should be scale-flat);
   // d30 because its train-side pre-aggregation is the no-pair-expansion
   // CLAIM (ScaleGen's near-dup groups make hot cross-split n-grams) and
   // d31 because it composes a corpus-wide groupBy+join above the gates

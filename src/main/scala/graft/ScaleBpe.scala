@@ -1,17 +1,17 @@
 package graft
 
-/** Dev tool: the d29 merge-count sweep behind SCALE.md — where does the
-  * relational BPE loop stop being the right tool?
+/** Dev tool: the d29 merge-count sweep behind SCALE.md — what does the
+  * BPE trainer ([[graft.queries.DocumentQueries.bpeMerges]]) cost as k
+  * grows toward production merge counts?
   *
-  * The Spark loop's cost model is (corpus pass) + k × (per-round job
-  * latency over the Heaps-bounded word table); the driver trainer
-  * ([[graft.queries.DocumentQueries.bpeMergesDriver]]) pays the SAME
-  * corpus pass plus an in-memory loop. This main measures both at
-  * increasing k in one session (same-JVM, the SCALE.md discipline) so
-  * the crossover is a number, not an argument.
+  * The trainer pays one distributed corpus pass plus an in-memory merge
+  * loop over the collected word table, so its job count is flat in k and
+  * its wall grows with k only through the driver loop. This main runs it
+  * at increasing k in one session (same-JVM, the SCALE.md discipline)
+  * and prints the wall and job count of each.
   *
-  * Usage: runMain graft.ScaleBpe <corpusDir> <sparkKs> <driverKs>
-  *   e.g.  /tmp/graft-scale/n50k 10,50,100 10,100,1000,10000
+  * Usage: runMain graft.ScaleBpe <corpusDir> <ks>
+  *   e.g.  /tmp/graft-scale/n50k 10,100,1000,10000
   *
   * `<corpusDir>` may be `synth:<nDocs>:<vocabSize>` — an inline
   * deterministic corpus with a REALISTIC vocabulary size (the ScaleGen
@@ -22,7 +22,7 @@ object ScaleBpe {
   val knobs = DevKit.Knobs()
 
   def main(args: Array[String]): Unit = {
-    val Array(dir, sparkKs, driverKs) = args
+    val Array(dir, ks) = args
     val meter = DevKit.open("graft-scale-bpe", knobs)
     val spark = meter.spark
     import spark.implicits._
@@ -42,22 +42,16 @@ object ScaleBpe {
           (id, text)
         }.toDF("doc_id", "text")
       } else Tables(spark, dir, "documents").select("doc_id", "text")
-    def sweep(label: String, ks: String,
-        run: (org.apache.spark.sql.DataFrame, Int) => Long): Unit =
-      DevKit.grid(ks).foreach { k =>
-        // min-of-2 timed runs after one warmup at the smallest k only
-        // (a warmup per k would double the long cells for nothing)
-        val runs = DevKit.timedRuns(meter, 2)(_ => run(docs, k))
-        println(DevKit.json("path" -> label, "k" -> k, "wall_s" -> runs.min,
-          "rows" -> runs.last))
-      }
     // JIT/session warmup
     graft.queries.DocumentQueries.bpeMerges(docs, 5).count()
-    graft.queries.DocumentQueries.bpeMergesDriver(docs, 5).count()
-    sweep("spark", sparkKs,
-      (d, k) => graft.queries.DocumentQueries.bpeMerges(d, k).count())
-    sweep("driver", driverKs,
-      (d, k) => graft.queries.DocumentQueries.bpeMergesDriver(d, k).count())
+    DevKit.grid(ks).foreach { k =>
+      // min-of-2 timed runs after the one warmup above (a warmup per k
+      // would double the long cells for nothing)
+      val runs = DevKit.timedRuns(meter, 2)(_ =>
+        graft.queries.DocumentQueries.bpeMerges(docs, k).count())
+      println(DevKit.json("k" -> k, "wall_s" -> runs.min,
+        "rows" -> runs.last, "jobs" -> runs.meter.jobs))
+    }
     spark.stop()
   }
 }

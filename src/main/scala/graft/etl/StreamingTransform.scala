@@ -88,6 +88,25 @@ object StreamingTransform {
     else parsed
   }
 
+  /** Shared per-batch body for BOTH ST1 paths: resolve the batch's
+    * created objects from a (bucket, key) frame and run the full batch
+    * pipeline over them with the staging age gate OFF — a notification
+    * fires after the PUT completed, so the gate (a polling guard for
+    * files still being written) would skip fresh objects; on the queue
+    * path the ack would then DELETE their notifications unprocessed.
+    * Driver-side collect of NOTIFICATION records only (the SQS receive
+    * shape) — bounded by the per-trigger message cap. */
+  private def transformNotifiedObjects(
+      spark: SparkSession, keys: org.apache.spark.sql.Dataset[Row],
+      outDir: String, resolveKey: (String, String) => String,
+      cfg: EtlConfig): Unit = {
+    val objs = keys.select("bucket", "key").distinct().collect()
+      .map(r => resolveKey(r.getString(0), r.getString(1)))
+    if (objs.nonEmpty)
+      Transform.run(spark, objs.toSeq, outDir,
+        cfg.copy(jobIntervalSeconds = 0))
+  }
+
   /** The reference's whole streaming loop as ONE wired query (s3logd-
     * stream/src/main.rs:263-289 feeding output.rs:737-759): poll
     * notifications → F2 created-object gate → fetch the named objects →
@@ -116,25 +135,6 @@ object StreamingTransform {
     * deletes each message only after staging completes,
     * s3log-lambda-aggregator/src/main.rs:68-109); undeserializable
     * bodies drop with a warning (null Records → empty explode). */
-  /** Shared per-batch body for BOTH ST1 paths: resolve the batch's
-    * created objects from a (bucket, key) frame and run the full batch
-    * pipeline over them with the staging age gate OFF — a notification
-    * fires after the PUT completed, so the gate (a polling guard for
-    * files still being written) would skip fresh objects; on the queue
-    * path the ack would then DELETE their notifications unprocessed.
-    * Driver-side collect of NOTIFICATION records only (the SQS receive
-    * shape) — bounded by the per-trigger message cap. */
-  private def transformNotifiedObjects(
-      spark: SparkSession, keys: org.apache.spark.sql.Dataset[Row],
-      outDir: String, resolveKey: (String, String) => String,
-      cfg: EtlConfig): Unit = {
-    val objs = keys.select("bucket", "key").distinct().collect()
-      .map(r => resolveKey(r.getString(0), r.getString(1)))
-    if (objs.nonEmpty)
-      Transform.run(spark, objs.toSeq, outDir,
-        cfg.copy(jobIntervalSeconds = 0))
-  }
-
   def notificationPipeline(
       spark: SparkSession, notifDir: String, outDir: String,
       checkpointDir: String, resolveKey: (String, String) => String,

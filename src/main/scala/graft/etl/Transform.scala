@@ -121,9 +121,17 @@ object EtlConfig {
       mappedKeys -- passthroughKeys
     if (unknown.nonEmpty) throw new IllegalArgumentException(
       s"unknown S3LOGS_* config keys: ${unknown.toSeq.sorted.mkString(", ")}")
-    def num(k: String, d: Long) = env.get(k).map(_.trim.toLong).getOrElse(d)
+    // a bad value names its key: every verb builds this config, so a bare
+    // `For input string: "15m"` would point nowhere
+    def parsed[T](k: String, d: T, what: String)(f: String => T): T =
+      env.get(k).map { v =>
+        try f(v.trim) catch { case _: IllegalArgumentException =>
+          throw new IllegalArgumentException(s"$k must be $what, got: '$v'")
+        }
+      }.getOrElse(d)
+    def num(k: String, d: Long) = parsed(k, d, "an integer")(_.toLong)
     def bool(k: String, d: Boolean) =
-      env.get(k).map(_.trim.toBoolean).getOrElse(d)
+      parsed(k, d, "true or false")(_.toBoolean)
     // T3 vocabulary: UTC±HH[:MM] keeps the reference's fixed-offset
     // fast path; anything else must be a VALID IANA zone id (r17 — the
     // DST-rule surface: "America/New_York" buckets on zone rules). A

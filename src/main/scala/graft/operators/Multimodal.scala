@@ -189,6 +189,15 @@ object Multimodal {
     Decoded(w, h, phash, averageHash(w, h, rgb))
   }
 
+  /** Decode-size ceiling for the compressed formats (64M pixels ≈
+    * 8192×8192 ≈ 770 MB of decode buffers — generous for crawl media,
+    * far below an executor OOM). */
+  val MaxImagePixels: Long = 64L * 1000 * 1000
+
+  /** JVM-global ImageIO disk-cache off, set ONCE (lazy val, not a
+    * per-record write to static state from concurrent task threads). */
+  private lazy val imageIoInit: Unit = javax.imageio.ImageIO.setUseCache(false)
+
   /** Real JPEG/PNG/GIF decode via `javax.imageio` (JDK-standard, no
     * external codec library): the formats every real crawl contains. The
     * decoded pixels are repacked to the same top-down tightly-packed RGB
@@ -199,15 +208,6 @@ object Multimodal {
     * payload throws, never silently stubs (the dispatch contract above).
     * `ImageIO` disk caching is off — executors must not spool image
     * temp files per record. */
-  /** Decode-size ceiling for the compressed formats (64M pixels ≈
-    * 8192×8192 ≈ 770 MB of decode buffers — generous for crawl media,
-    * far below an executor OOM). */
-  val MaxImagePixels: Long = 64L * 1000 * 1000
-
-  /** JVM-global ImageIO disk-cache off, set ONCE (lazy val, not a
-    * per-record write to static state from concurrent task threads). */
-  private lazy val imageIoInit: Unit = javax.imageio.ImageIO.setUseCache(false)
-
   def decodeImageIO(bytes: Array[Byte]): Decoded = {
     imageIoInit
     try {
@@ -436,29 +436,6 @@ object Multimodal {
   private def fourCC(b: Array[Byte], i: Int): String =
     new String(b, i, 4, "US-ASCII")
 
-  /** Real RIFF/WAVE decode — PCM, unsigned 8-bit or signed 16-bit LE,
-    * mono or stereo (the formats that cover essentially all crawl WAV;
-    * real crawl audio is dominantly s16le). Walks the chunk list
-    * honoring the RIFF odd-size pad byte, validates the `fmt ` chunk
-    * (PCM format tag 1, 1–2 channels, 8/16 bits, positive rate, block
-    * align consistent with channels×bytes — a header whose fields
-    * disagree must not pick one silently), skips unknown chunks
-    * (LIST/INFO metadata is everywhere in crawl audio), and requires
-    * exactly one `fmt ` and exactly one `data` chunk whose declared
-    * size fits the payload and is frame-aligned. Malformed payloads are
-    * REJECTED loudly — the decodePpm/decodeBmp discipline: a corrupt
-    * header must never silently yield a plausible census.
-    *
-    * The census itself is one pass over the sample frames in exact
-    * integer arithmetic, at the u8-equivalent grain: stereo frames
-    * downmix by the floor channel average (`(l + r) >> 1`, arithmetic
-    * shift — defined for odd sums) at the NATIVE bit depth, 16-bit
-    * values then quantize by `(v + 32768) >> 8` into 0..255 — so every
-    * format feeds the same |v−128| deviation, ±2 silence band and
-    * 0/255 clip rails. The chunk-walk validation itself lives in
-    * [[parseWav]], shared with the m07 windowed census
-    * ([[decodeWavEnergy]]).
-    */
   /** Validated PCM geometry shared by the censuses ([[decodeWav]] /
     * [[decodeWavEnergy]]) — the header walk runs ONCE ([[parseWav]]) so
     * a validation fix cannot silently diverge the two consumers. */
@@ -486,6 +463,29 @@ object Multimodal {
     }
   }
 
+  /** Real RIFF/WAVE decode — PCM, unsigned 8-bit or signed 16-bit LE,
+    * mono or stereo (the formats that cover essentially all crawl WAV;
+    * real crawl audio is dominantly s16le). Walks the chunk list
+    * honoring the RIFF odd-size pad byte, validates the `fmt ` chunk
+    * (PCM format tag 1, 1–2 channels, 8/16 bits, positive rate, block
+    * align consistent with channels×bytes — a header whose fields
+    * disagree must not pick one silently), skips unknown chunks
+    * (LIST/INFO metadata is everywhere in crawl audio), and requires
+    * exactly one `fmt ` and exactly one `data` chunk whose declared
+    * size fits the payload and is frame-aligned. Malformed payloads are
+    * REJECTED loudly — the decodePpm/decodeBmp discipline: a corrupt
+    * header must never silently yield a plausible census.
+    *
+    * The census itself is one pass over the sample frames in exact
+    * integer arithmetic, at the u8-equivalent grain: stereo frames
+    * downmix by the floor channel average (`(l + r) >> 1`, arithmetic
+    * shift — defined for odd sums) at the NATIVE bit depth, 16-bit
+    * values then quantize by `(v + 32768) >> 8` into 0..255 — so every
+    * format feeds the same |v−128| deviation, ±2 silence band and
+    * 0/255 clip rails. The chunk-walk validation itself lives in
+    * [[parseWav]], shared with the m07 windowed census
+    * ([[decodeWavEnergy]]).
+    */
   def decodeWav(bytes: Array[Byte]): DecodedWav = {
     val h = parseWav(bytes)
     var sumAbs = 0L

@@ -1089,9 +1089,6 @@ object DedupQueries {
       .select($"doc_id".cast(idType).as("doc_id"), $"cluster_id")
   }
 
-  /** DuckDB CTEs mirroring representatives() + cappedBands() exactly:
-    * same fingerprint collapse, sentinel exclusion, and bucket cap, so
-    * the pair sets hash-match by construction. */
   /** The shared rep/banding CTE chain at an explicit bucket cap — the
     * oracle-side counterpart of guards 1–3 ([[duckReps]] is this at the
     * gate default; ConfReplay replays other caps via
@@ -1118,6 +1115,9 @@ object DedupQueries {
             FROM expl)
           WHERE bucket_n <= $cap)"""
 
+  /** DuckDB CTEs mirroring representatives() + cappedBands() exactly:
+    * same fingerprint collapse, sentinel exclusion, and bucket cap, so
+    * the pair sets hash-match by construction. */
   private val duckReps = duckRepsAt(MaxBandBucket)
 
   /** d03 oracle generator at an explicit bucket cap: the gate entry is

@@ -17,16 +17,6 @@ import graft.Materialize.Ops
   */
 object DocumentQueries {
 
-  /** d13 as a reusable operator over any (doc_id, text) frame:
-    * deterministic train/val/test split — hash-mod assignment over the
-    * document CONTENT (not doc_id: re-ingestion with new ids must not
-    * reshuffle the split). The rolling char hash is the cross-engine-exact
-    * TextHash family, so the oracle reproduces the buckets bit-for-bit;
-    * 80/10/10. One narrow codegen pass, no shuffle.
-    *
-    * A corollary the contamination check (d14) relies on: byte-identical
-    * texts always share a bucket, so EXACT duplicates can never straddle
-    * the train/test boundary — only near-duplicates can leak. */
   /** The shared rolling-char-hash bucket of a `text` column. The
     * cross-engine-exact expression lives HERE ONCE; [[splitBucketCol]]
     * (d13) and [[sampleBucketCol]] (d27) differ only in (seed, modulus)
@@ -63,6 +53,16 @@ object DocumentQueries {
       bucket: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
 
+  /** d13 as a reusable operator over any (doc_id, text) frame:
+    * deterministic train/val/test split — hash-mod assignment over the
+    * document CONTENT (not doc_id: re-ingestion with new ids must not
+    * reshuffle the split). The rolling char hash is the cross-engine-exact
+    * TextHash family, so the oracle reproduces the buckets bit-for-bit;
+    * 80/10/10. One narrow codegen pass, no shuffle.
+    *
+    * A corollary the contamination check (d14) relies on: byte-identical
+    * texts always share a bucket, so EXACT duplicates can never straddle
+    * the train/test boundary — only near-duplicates can leak. */
   def splitAssign(docs: DataFrame): DataFrame =
     docs
       .withColumn("bucket", splitBucketCol)
@@ -258,6 +258,43 @@ object DocumentQueries {
       .sortedOnce($"doc_id")
   }
 
+  /** The d56/d58 probe-side term derivation: DISTINCT (query_id, term)
+    * at the [[termStream]] grain — ONE definition so the inline and
+    * indexed paths cannot diverge on what a query term is. */
+  private def bm25QueryTerms(probes: DataFrame): DataFrame =
+    probes
+      .select(col("query_id"), explode(split(col("qtext"), " ")).as("term"))
+      .filter(col("term") =!= "").distinct()
+
+  /** The d56/d58 scorer over query-relevant postings: `hits` carries
+    * (doc_id, dl, term, tf, df, n_docs, sum_dl) — however those were
+    * produced (d56 censuses inline, d58 reads the stored artifact) —
+    * and the Okapi fixed-point micro-score sum + per-query top-k
+    * happen HERE ONCE, so a formula fix cannot split the two paths.
+    * Scale: the one corpus-proportional exchange is the (query, doc)
+    * BIGINT partial-agg sum; the rank is WindowGroupLimit-bounded. */
+  private def bm25Rank(hits: DataFrame, qt: DataFrame, k: Int): DataFrame = {
+    val s = hits.sparkSession
+    import s.implicits._
+    val scored = hits
+      .join(broadcast(qt), "term")
+      .withColumn("avgdl", $"sum_dl".cast("double") / $"n_docs")
+      .withColumn("idf",
+        log(lit(1.0) + ($"n_docs" - $"df" + 0.5) / ($"df" + 0.5)))
+      .withColumn("w",
+        $"tf" * 2.2 / ($"tf" +
+          lit(1.2) * (lit(0.25) + lit(0.75) * $"dl" / $"avgdl")))
+      .withColumn("sq", floor($"idf" * $"w" * 1000000).cast("long"))
+    val win = org.apache.spark.sql.expressions.Window
+      .partitionBy($"query_id").orderBy($"sq".desc, $"doc_id")
+    scored.groupBy($"query_id", $"doc_id").agg(sum($"sq").as("sq"))
+      .withColumn("rk", row_number().over(win).cast("long"))
+      .filter($"rk" <= k)
+      .withColumn("score", $"sq" / 1000000.0)
+      .select($"query_id", $"rk", $"doc_id", $"score")
+      .orderBy($"query_id", $"rk")
+  }
+
   /** d56 — BM25 top-k retrieval (Robertson/Sparck Jones Okapi BM25, the
     * probabilistic-IR workhorse): score every corpus document against a
     * small set of probe queries and keep each query's k best. The
@@ -302,43 +339,6 @@ object DocumentQueries {
     * corpus-proportional exchanges are the tf census and the final
     * per-query top-k (WindowGroupLimit-bounded rank over the matched
     * docs). Text never shuffles. */
-  /** The d56/d58 probe-side term derivation: DISTINCT (query_id, term)
-    * at the [[termStream]] grain — ONE definition so the inline and
-    * indexed paths cannot diverge on what a query term is. */
-  private def bm25QueryTerms(probes: DataFrame): DataFrame =
-    probes
-      .select(col("query_id"), explode(split(col("qtext"), " ")).as("term"))
-      .filter(col("term") =!= "").distinct()
-
-  /** The d56/d58 scorer over query-relevant postings: `hits` carries
-    * (doc_id, dl, term, tf, df, n_docs, sum_dl) — however those were
-    * produced (d56 censuses inline, d58 reads the stored artifact) —
-    * and the Okapi fixed-point micro-score sum + per-query top-k
-    * happen HERE ONCE, so a formula fix cannot split the two paths.
-    * Scale: the one corpus-proportional exchange is the (query, doc)
-    * BIGINT partial-agg sum; the rank is WindowGroupLimit-bounded. */
-  private def bm25Rank(hits: DataFrame, qt: DataFrame, k: Int): DataFrame = {
-    val s = hits.sparkSession
-    import s.implicits._
-    val scored = hits
-      .join(broadcast(qt), "term")
-      .withColumn("avgdl", $"sum_dl".cast("double") / $"n_docs")
-      .withColumn("idf",
-        log(lit(1.0) + ($"n_docs" - $"df" + 0.5) / ($"df" + 0.5)))
-      .withColumn("w",
-        $"tf" * 2.2 / ($"tf" +
-          lit(1.2) * (lit(0.25) + lit(0.75) * $"dl" / $"avgdl")))
-      .withColumn("sq", floor($"idf" * $"w" * 1000000).cast("long"))
-    val win = org.apache.spark.sql.expressions.Window
-      .partitionBy($"query_id").orderBy($"sq".desc, $"doc_id")
-    scored.groupBy($"query_id", $"doc_id").agg(sum($"sq").as("sq"))
-      .withColumn("rk", row_number().over(win).cast("long"))
-      .filter($"rk" <= k)
-      .withColumn("score", $"sq" / 1000000.0)
-      .select($"query_id", $"rk", $"doc_id", $"score")
-      .orderBy($"query_id", $"rk")
-  }
-
   def bm25TopK(corpus: DataFrame, probes: DataFrame,
       k: Int = QueryConf.DefaultBm25TopK): DataFrame = {
     val spark = corpus.sparkSession
@@ -533,30 +533,6 @@ object DocumentQueries {
   private[queries] def sampleBucketCol: org.apache.spark.sql.Column =
     hashBucketCol(seed = 13, modulus = 10000)
 
-  /** d26 as a reusable operator: concat-and-chunk sequence packing —
-    * documents are laid end to end in doc_id order (whitespace tokens,
-    * empty tokens dropped — the [[termStream]] grain) and the stream cut
-    * into fixed `seqLen`-token training sequences. Output is one row per
-    * (document, sequence) slice: `doc_start` = the slice's first token
-    * within the DOCUMENT, `seq_start` = its first position within the
-    * SEQUENCE, `n_toks` = slice length. Filtering to one seq_id and
-    * sorting by seq_start reassembles that training sequence with full
-    * provenance; docs straddling a boundary appear once per sequence.
-    * Zero-token docs occupy no positions and emit no rows.
-    *
-    * Scale shape — the global running offset is the whole difficulty: a
-    * bare `Window.orderBy(doc_id)` funnels the corpus through ONE task
-    * (the q30 hazard, spec-banned). Distributed two-phase prefix sum
-    * instead: (1) docs range-bucket by doc_id into `nBuckets` contiguous
-    * id ranges (integer DIV arithmetic off a broadcast min/max scalar —
-    * value-based, so recomputation is self-consistent, no checkpoint
-    * needed); (2) within-bucket running sums are PARTITIONED windows;
-    * (3) the nBuckets bucket totals — metadata, not data — take their
-    * own prefix sum under an explicit `limit(nBuckets)` bound and
-    * broadcast back as an equi-join. Wall-clock: two narrow passes over
-    * (doc_id, n) pairs, never the text; the result is provably
-    * independent of nBuckets (spec-pinned), so a 1000-executor run just
-    * raises the bucket count. */
   /** d40: epoch shuffle — the data-loader ordering step ABOVE d26: a
     * deterministic, per-epoch permutation of the packed sequences. Per
     * (epoch, seq_id) the shuffle key is md5("<epoch>:<seq_id>") — the
@@ -609,6 +585,30 @@ object DocumentQueries {
         ($"off" + $"rn").cast("long").as("position"), $"seq_id")
   }
 
+  /** d26 as a reusable operator: concat-and-chunk sequence packing —
+    * documents are laid end to end in doc_id order (whitespace tokens,
+    * empty tokens dropped — the [[termStream]] grain) and the stream cut
+    * into fixed `seqLen`-token training sequences. Output is one row per
+    * (document, sequence) slice: `doc_start` = the slice's first token
+    * within the DOCUMENT, `seq_start` = its first position within the
+    * SEQUENCE, `n_toks` = slice length. Filtering to one seq_id and
+    * sorting by seq_start reassembles that training sequence with full
+    * provenance; docs straddling a boundary appear once per sequence.
+    * Zero-token docs occupy no positions and emit no rows.
+    *
+    * Scale shape — the global running offset is the whole difficulty: a
+    * bare `Window.orderBy(doc_id)` funnels the corpus through ONE task
+    * (the q30 hazard, spec-banned). Distributed two-phase prefix sum
+    * instead: (1) docs range-bucket by doc_id into `nBuckets` contiguous
+    * id ranges (integer DIV arithmetic off a broadcast min/max scalar —
+    * value-based, so recomputation is self-consistent, no checkpoint
+    * needed); (2) within-bucket running sums are PARTITIONED windows;
+    * (3) the nBuckets bucket totals — metadata, not data — take their
+    * own prefix sum under an explicit `limit(nBuckets)` bound and
+    * broadcast back as an equi-join. Wall-clock: two narrow passes over
+    * (doc_id, n) pairs, never the text; the result is provably
+    * independent of nBuckets (spec-pinned), so a 1000-executor run just
+    * raises the bucket count. */
   def packSequences(docs: DataFrame, seqLen: Long,
       nBuckets: Int): DataFrame = {
     val s = docs.sparkSession
@@ -1114,8 +1114,8 @@ object DocumentQueries {
 
     // d29 BPE merge statistics: the first 10 byte-pair merges trained
     // on the corpus's word-frequency table (see bpeMerges for the
-    // algorithm, determinism, and the corpus-once/vocab-iterate scale
-    // shape).
+    // algorithm, determinism and the one-corpus-pass shape); the same
+    // trainer the `bpetrain` verb runs.
     "d29_bpe_merges" -> { (s, dir) =>
       import s.implicits._
       DocumentQueries.bpeMerges(Tables(s, dir, "documents"), k = 10)
@@ -1123,11 +1123,14 @@ object DocumentQueries {
     },
 
     // d29b the trained tokenizer applied: per-doc token counts under
-    // the k=10 merge table (see bpeTokenCounts — one broadcast lookup
-    // join over the term stream; the corpus is never rewritten).
+    // the k=10 merge table (see bpeTokenCountsFromMerges — one broadcast
+    // lookup join over the term stream; the corpus is never rewritten);
+    // the trainer and apply the `bpetrain` and `tokenize` verbs run.
     "d29b_bpe_tokenize" -> { (s, dir) =>
       import s.implicits._
-      DocumentQueries.bpeTokenCounts(Tables(s, dir, "documents"), k = 10)
+      val docs = Tables(s, dir, "documents")
+      DocumentQueries.bpeTokenCountsFromMerges(docs,
+          DocumentQueries.bpeMerges(docs, k = 10))
         .orderBy($"doc_id")
     },
 
@@ -1703,26 +1706,6 @@ object DocumentQueries {
            '0123456789abcdef') - 1) * ${scale}L"""
     }.mkString("(", " + ", ")")
 
-  /** d46 — DSIR importance weights (Xie et al. 2023, "Data Selection
-    * for Language Models via Importance Resampling"): score every RAW
-    * corpus doc by how much more likely its hashed-n-gram features are
-    * under the TARGET distribution than under the raw distribution —
-    * log w(x) = Σ_b c_b(x)·(ln p_b − ln q_b) with add-one smoothing on
-    * both bag-of-buckets models. The standard "make the crawl look
-    * like the high-quality corpus" selection signal; ranking by it +
-    * a budget cut (d42's machinery) is deterministic DSIR.
-    *
-    * Scale shape: features collapse to (doc, bucket, count) grain at
-    * map side — the only corpus-wide shuffle carries (doc_id, int
-    * bucket) pairs, never text. Both distributions are ≤`dsirBuckets`-
-    * row aggregates; the log-ratio table joins back by bucket equi-key
-    * (catalog-sized — AQE auto-broadcasts, no hint needed) and the two
-    * totals ride broadcast scalar aggregates (the d17/d23 pattern).
-    * Cross-engine exactness is the d23 discipline end to end: exact
-    * integer counts → bit-equal ln() doubles → DECIMAL(20,15)-cast
-    * summands scaled by exact DECIMAL(10,0) counts — order-independent
-    * sums, floor-scaled on output. Docs with no features (no tokens)
-    * emit no row, the termStream convention. */
   /** The hashed unigram+bigram feature stream (doc_id, fb, c) shared by
     * d46 (importance weights) and d48 (domain clustering) — one
     * definition of the feature space, so the two operators that reason
@@ -1745,6 +1728,26 @@ object DocumentQueries {
       .select($"doc_id", $"f.fb".as("fb"), $"f.c".as("c"))
   }
 
+  /** d46 — DSIR importance weights (Xie et al. 2023, "Data Selection
+    * for Language Models via Importance Resampling"): score every RAW
+    * corpus doc by how much more likely its hashed-n-gram features are
+    * under the TARGET distribution than under the raw distribution —
+    * log w(x) = Σ_b c_b(x)·(ln p_b − ln q_b) with add-one smoothing on
+    * both bag-of-buckets models. The standard "make the crawl look
+    * like the high-quality corpus" selection signal; ranking by it +
+    * a budget cut (d42's machinery) is deterministic DSIR.
+    *
+    * Scale shape: features collapse to (doc, bucket, count) grain at
+    * map side — the only corpus-wide shuffle carries (doc_id, int
+    * bucket) pairs, never text. Both distributions are ≤`dsirBuckets`-
+    * row aggregates; the log-ratio table joins back by bucket equi-key
+    * (catalog-sized — AQE auto-broadcasts, no hint needed) and the two
+    * totals ride broadcast scalar aggregates (the d17/d23 pattern).
+    * Cross-engine exactness is the d23 discipline end to end: exact
+    * integer counts → bit-equal ln() doubles → DECIMAL(20,15)-cast
+    * summands scaled by exact DECIMAL(10,0) counts — order-independent
+    * sums, floor-scaled on output. Docs with no features (no tokens)
+    * emit no row, the termStream convention. */
   def dsirWeights(raw: DataFrame, target: DataFrame): DataFrame = {
     val s = raw.sparkSession
     import s.implicits._
@@ -1898,241 +1901,55 @@ object DocumentQueries {
       .orderBy($"doc_id")
   }
 
-  /** d29 BPE merge statistics — the iterative pair-merge loop a
-    * tokenizer-training pipeline runs (d18 gives the unigram vocab;
-    * this is the byte-pair step above it). k rounds; each round counts
-    * adjacent symbol pairs over the word table (weighted by corpus word
-    * frequency), picks the argmax pair (count DESC, then lexicographic
-    * — fully deterministic), and greedily merges its non-overlapping
-    * occurrences left-to-right in every word. Output: one row per merge
-    * rank — the trained merge table.
+  /** d29 BPE merge statistics: the merge table a tokenizer-training
+    * pipeline trains (d18 gives the unigram vocab; this is the byte-pair
+    * step above it), and the artifact the `bpetrain` verb writes. k
+    * rounds; each round counts adjacent symbol pairs over the word table
+    * (weighted by corpus word frequency), picks the argmax pair (count
+    * DESC, then lhs, then rhs), and greedily merges its non-overlapping
+    * occurrences left-to-right in every word ("aaaa" + (a,a) ->
+    * [aa,aa], "aaa" -> [aa,a]). Output: one row per merge rank
+    * (merge_rank, lhs, rhs, merged, pair_count). Training stops early,
+    * with fewer than k rows, once no word has a pair left.
     *
-    * Scale shape: the CORPUS is touched exactly once (the word-frequency
-    * groupBy, map-side combined); every round after that runs on the
-    * distinct-word table, which Heaps' law keeps sublinear in corpus
-    * size — the same separation real BPE trainers exploit. Per round:
-    * one vocab-sized pair count + a TakeOrdered(1) argmax, broadcast
-    * back as a 1-row crossJoin (GlobalLimit-bounded — the audited
-    * form), then one codegen replace() projection. The word table is
-    * localCheckpoint'd each round (the d11 iterative discipline) so
-    * round i+1's plan doesn't re-derive rounds 1..i; the argmax row is
-    * collected at loop time and re-injected as a LocalRelation (r20),
-    * so the final union is a literal merge table — no per-round
-    * re-derivation at action time — and the crossJoin side stays
-    * provably bounded for the broadcast audit.
+    * Shape: the corpus is touched once (the word-frequency groupBy,
+    * map-side combined). The distinct-word table, which Heaps' law keeps
+    * at tokenizer-vocab scale (~10^5-10^7 rows) whatever the corpus
+    * size, is collected, and the merge loop runs in driver memory, as
+    * Sennrich et al.'s own trainer runs it over the word-frequency
+    * table. The job count does not depend on k (spec-pinned); SCALE.md
+    * "BPE at real merge counts" has the k sweep.
     *
-    * Symbol sequences ride as delimiter-wrapped strings
-    * ( sym  per symbol, no separator between symbols):
-    * merging pair (l, r) is then a plain string
-    * replace("<l><r>" -> "<lr>") whose left-to-right non-overlapping
-    * semantics are IDENTICAL in Spark and DuckDB — and identical to the
-    * reference BPE's regex-sub greedy pass ("aaaa" + (a,a) -> [aa,aa],
-    * "aaa" -> [aa, a]). The wrapping makes symbol boundaries explicit,
-    * so a merged symbol can never be half-matched by a later pattern.
-    * Divergence from Sennrich BPE, documented: no end-of-word marker
-    * symbol (</w>) — merges here may span what BPE would keep apart at
-    * word ends; the MERGE MECHANICS (count, argmax, greedy apply) are
-    * the algorithm's. Pair counts follow the standard overlapping
-    * convention ("aaa" counts (a,a) twice) — both engines count
-    * adjacent positions, not disjoint matches. */
-  def bpeMerges(docs: DataFrame, k: Int): DataFrame =
-    bpeTrain(docs, k)._2.reduce(_.union(_))
-
-  /** The trained tokenizer APPLIED (d29b): per-doc token counts under
-    * the k-merge BPE table — the number a data loader budgets sequences
-    * by, and the apply side of the d29 trainer. The final vocab table
-    * of the merge loop IS the tokenization lookup (word -> merged
-    * symbol count), so application is one broadcast equi-join from the
-    * term stream plus a counting projection — the corpus is never
-    * rewritten. The broadcast side is the distinct-word table: bounded
-    * by Heaps’ law at tokenizer-vocab scale (the same table every BPE
-    * tokenizer ships), not by corpus size. */
-  def bpeTokenCounts(docs: DataFrame, k: Int): DataFrame = {
+    * Determinism: initial symbols are code points (a surrogate pair is
+    * one symbol); pair counts follow the overlapping adjacent convention
+    * ("aaa" counts (a,a) twice); the tie-break compares strings as
+    * unsigned UTF-8 bytes, Spark's UTF8String order, which Java's UTF-16
+    * compareTo diverges from on supplementary characters. Divergence
+    * from Sennrich BPE, documented: no end-of-word marker symbol (</w>),
+    * so merges may span what BPE would keep apart at word ends; the
+    * merge mechanics (count, argmax, greedy apply) are the algorithm's.
+    *
+    * `minCount` prunes words rarer than the floor before the collect
+    * (`HAVING count >= minCount`). 1, the default, prunes nothing. At web
+    * scale the word table is dominated by hapax noise (typos, ids, junk
+    * tokens) the trainer never merges; 2, the usual tokenizer-trainer
+    * setting, changes the table only through the dropped hapax words.
+    *
+    * Limit: the filtered table is cached, counted and refused above
+    * `spark.graft.bpe.maxwords` (20M by default) before the collect,
+    * instead of dying inside it. A word table larger than that at
+    * `minCount = 1` is therefore refused, where a distributed round loop
+    * would have run at about 0.2 s of scheduling per merge (~2.4 h for
+    * k = 32000). The escape is a higher `minCount` (`bpetrain
+    * --min-count`) or a higher knob with more driver memory. The loop
+    * recounts all pairs per round (O(vocab) per merge); an incremental
+    * pair-count update would be a driver-side refinement. */
+  def bpeMerges(docs: DataFrame, k: Int, minCount: Long = 1L): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    val vocab = bpeTrain(docs, k)._1
-    val lookup = vocab.select($"term",
-      size(split(expr("substring(seq, 2, length(seq) - 2)"), SymC + SymO))
-        .cast("long").as("n_sym"))
-    termStream(docs).join(broadcast(lookup), Seq("term"))
-      .groupBy($"doc_id")
-      .agg(count(lit(1)).as("n_words"), sum($"n_sym").as("n_bpe_tokens"))
-  }
-
-  /** d29b off a SAVED merge table — the `bpetrain` artifact's consumer
-    * and the production tokenize path: no training runs here at all.
-    * The merge table (k rows, tokenizer-vocab bounded — the artifact
-    * every BPE runtime ships) is collected and broadcast; each DISTINCT
-    * word is tokenized once in a mapPartitions over the Heaps-bounded
-    * word table (repeatedly merge the lowest-rank pair present, one
-    * greedy left-to-right pass per selected rank); the (word → symbol
-    * count) lookup then broadcast-joins the term stream exactly like
-    * [[bpeTokenCounts]]. Corpus text is touched once and never
-    * rewritten.
-    *
-    * Rank-priority apply ≡ the trainer's round-by-round passes, exactly:
-    * a merge can only create adjacencies involving its OWN new symbol,
-    * and any merge consuming that symbol was necessarily created later
-    * (higher rank) — so pairs of rank below the current minimum can
-    * never appear, and processing ranks in ascending order reproduces
-    * training-time tokenization symbol-for-symbol (spec-pinned against
-    * [[bpeTokenCounts]]). */
-  def bpeTokenCountsFromMerges(docs: DataFrame, merges: DataFrame): DataFrame = {
-    val s = docs.sparkSession
-    import s.implicits._
-    val missing = Seq("merge_rank", "lhs", "rhs")
-      .filterNot(merges.columns.contains)
-    require(missing.isEmpty,
-      s"bpeTokenCountsFromMerges: merge table is missing column(s) " +
-        s"${missing.mkString(", ")} — not a bpetrain artifact")
-    val ranked: Array[(String, String)] = merges
-      .orderBy($"merge_rank")
-      .select($"lhs", $"rhs")
-      .collect().map(r => (r.getString(0), r.getString(1)))
-    val bc = s.sparkContext.broadcast(ranked)
-    val lookup = termStream(docs).select($"term").distinct()
-      .as[String]
-      .mapPartitions { it =>
-        val ms = bc.value
-        val rankOf = ms.zipWithIndex.toMap
-        it.map { term =>
-          var syms: Array[String] = term.codePoints().toArray
-            .map(cp => new String(Character.toChars(cp)))
-          var done = false
-          while (!done && syms.length > 1) {
-            // lowest-rank adjacent pair present
-            var best = Int.MaxValue
-            var i = 0
-            while (i < syms.length - 1) {
-              rankOf.get((syms(i), syms(i + 1)))
-                .foreach(r => if (r < best) best = r)
-              i += 1
-            }
-            if (best == Int.MaxValue) done = true
-            else {
-              val (l, r) = ms(best)
-              val out = Array.newBuilder[String]
-              var j = 0
-              while (j < syms.length) {
-                if (j < syms.length - 1 && syms(j) == l && syms(j + 1) == r) {
-                  out += l + r; j += 2
-                } else { out += syms(j); j += 1 }
-              }
-              syms = out.result()
-            }
-          }
-          (term, syms.length.toLong)
-        }
-      }
-      .toDF("term", "n_sym")
-    termStream(docs).join(broadcast(lookup), Seq("term"))
-      .groupBy($"doc_id")
-      .agg(count(lit(1)).as("n_words"), sum($"n_sym").as("n_bpe_tokens"))
-  }
-
-  // d29’s symbol delimiters (ASCII unit/record separators — cannot
-  // occur in whitespace-tokenized words, so boundaries are unambiguous)
-  private val SymO = "" // symbol open
-  private val SymC = "" // symbol close
-
-  /** The d29 trainer loop: returns (final vocab as (term, c, seq),
-    * per-round merge rows). See bpeMerges’ gate scaladoc above for the
-    * algorithm, determinism, checkpoint discipline, and scale shape. */
-  private def bpeTrain(docs: DataFrame, k: Int): (DataFrame, Seq[DataFrame]) = {
-    val s = docs.sparkSession
-    import s.implicits._
-    require(k >= 1, s"bpeTrain: k must be >= 1 (got $k)")
-    val O = SymO
-    val C = SymC
-    var vocab = termStream(docs)
-      .groupBy($"term").agg(count(lit(1)).as("c"))
-      .withColumn("seq", concat(lit(O),
-        array_join(expr("transform(sequence(1, length(term)), i -> substring(term, i, 1))"), C + O),
-        lit(C)))
-      .select($"term", $"c", $"seq")
-      // lazyCut (r19): each round's vocab blocks compute under the NEXT
-      // round's broadcast(best) build (a pairs aggregate over this very
-      // frame) — the eager checkpoint paid a second job per round for
-      // the same partitions; lineage truncation is identical.
-      .pipe(graft.Materialize.lazyCut)
-    val merges = (1 to k).map { rank =>
-      val pairs = vocab
-        .select($"c", split(expr("substring(seq, 2, length(seq) - 2)"), C + O).as("sa"))
-        .select($"c", explode(expr(
-          """zip_with(slice(sa, 1, size(sa) - 1), slice(sa, 2, size(sa) - 1),
-             (a, b) -> struct(a AS lhs, b AS rhs))""")).as("p"))
-        .groupBy($"p.lhs".as("lhs"), $"p.rhs".as("rhs"))
-        .agg(sum($"c").as("pair_count"))
-      // the 1-row argmax is COLLECTED at loop time (r20) and re-injected
-      // as a literal table: the per-round broadcast build executed this
-      // pair aggregate anyway, so the collect costs the same one job —
-      // but the final merge-table union then reads k LocalRelations
-      // instead of RE-DERIVING each round's pair aggregate at action
-      // time (one extra job per round, the r19 "not yet optimized" #2).
-      // A 1-row bounded collect, not a driver data loop; the
-      // LocalRelation is also the broadcast-audit's structural bound.
-      val bestRows = pairs
-        .orderBy($"pair_count".desc, $"lhs", $"rhs").limit(1).collect()
-      val best = s.createDataFrame(
-        java.util.Arrays.asList(bestRows: _*), pairs.schema)
-      vocab = vocab.crossJoin(broadcast(best))
-        .withColumn("pat",
-          concat(lit(O), $"lhs", lit(C + O), $"rhs", lit(C)))
-        .withColumn("rep", concat(lit(O), $"lhs", $"rhs", lit(C)))
-        .select($"term", $"c", expr("replace(seq, pat, rep)").as("seq"))
-        .pipe(graft.Materialize.lazyCut)
-      best.select(lit(rank.toLong).as("merge_rank"), $"lhs", $"rhs",
-        concat($"lhs", $"rhs").as("merged"), $"pair_count")
-    }
-    (vocab, merges)
-  }
-
-  /** d29 at PRODUCTION merge counts: the same trainer with the merge
-    * loop run DRIVER-side over the collected distinct-word table.
-    *
-    * Why this exists (the honest scale boundary): the Spark loop's
-    * per-round cost is two scheduled jobs over the vocab table — right
-    * when the corpus pass dominates (small k), pure scheduling latency
-    * when it doesn't. A real tokenizer trains 32k–100k merges, where
-    * round latency × k is the whole wall clock; meanwhile the state the
-    * loop iterates on is the DISTINCT-WORD table, which Heaps' law
-    * keeps at tokenizer-vocab scale (~10^5-10^7 rows) regardless of
-    * corpus size — it fits on the driver at 100 TB by the same argument
-    * that makes it broadcastable in d29b. So the production shape is:
-    * ONE distributed corpus pass (the word-frequency groupBy,
-    * map-side combined — identical to [[bpeMerges]]' first stage),
-    * collect the word table, run the merge loop in memory. SCALE.md
-    * carries the measured crossover; the relational loop remains the
-    * oracle-checkable reference (outputs are IDENTICAL — spec-pinned —
-    * because both implement the same count/argmax/greedy-merge rounds).
-    *
-    * Determinism parity details: pair counts use the overlapping
-    * adjacent convention ("aaa" counts (a,a) twice); the argmax
-    * tie-break (count DESC, lhs, rhs) compares strings as UNSIGNED
-    * UTF-8 BYTES — Spark's UTF8String binary order, which Java's
-    * UTF-16 compareTo diverges from on supplementary characters; the
-    * merge applies left-to-right non-overlapping, exactly the
-    * replace() semantics of the relational form.
-    *
-    * `minCount` is the 100 TB escape valve on the collect: Heaps' law
-    * bounds the distinct-word table, but at web scale the constant is
-    * large (~10^7 rows and up, dominated by hapax noise — typos, ids,
-    * junk tokens), and the driver should not hold what the trainer
-    * will never merge. A frequency floor (`HAVING count >= minCount`)
-    * prunes BEFORE the collect, map-side combined; `minCount = 2` is
-    * the standard tokenizer-trainer setting (SentencePiece/HF default
-    * family) and is semantics-preserving in practice: a pair seen only
-    * inside singleton words can win a merge round only in a corpus
-    * small enough that the floor is unnecessary. Floor 1 (the default)
-    * collects everything — spec-pinned identical to the relational
-    * trainer. */
-  def bpeMergesDriver(docs: DataFrame, k: Int,
-      minCount: Long = 1L): DataFrame = {
-    val s = docs.sparkSession
-    import s.implicits._
-    require(k >= 1, s"bpeMergesDriver: k must be >= 1 (got $k)")
+    require(k >= 1, s"bpeMerges: k must be >= 1 (got $k)")
     require(minCount >= 1,
-      s"bpeMergesDriver: minCount must be >= 1 (got $minCount)")
+      s"bpeMerges: minCount must be >= 1 (got $minCount)")
     val utf8 = new Ordering[String] {
       def compare(a: String, b: String): Int = {
         val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -2140,18 +1957,8 @@ object DocumentQueries {
         java.util.Arrays.compareUnsigned(x, y)
       }
     }
-    // the ONE corpus-touching pass (identical to bpeTrain's)
-    // initial symbols are CODE POINTS (Spark's substring(term, i, 1)
-    // counts characters, not UTF-16 code units — a surrogate pair is
-    // one symbol on both paths)
-    //
-    // Collect ceiling (r17, the ScaleBench heap-guard discipline):
-    // Heaps' law bounds this table for prose, but a noisy crawl's
-    // distinct-"word" set (URLs, base64, hash-mangled junk) can exceed
-    // driver heap, and dying inside collect() loses the diagnosis. The
-    // filtered table is CACHED, counted, and refused loudly above
-    // spark.graft.bpe.maxwords — the cache means the guard costs no
-    // second corpus pass (count fills it, collect reads it).
+    // the cache means the maxwords guard costs no second corpus pass
+    // (count fills it, collect reads it)
     val wordTable = termStream(docs)
       .groupBy($"term").agg(count(lit(1)).as("c"))
       .filter($"c" >= minCount)
@@ -2161,18 +1968,13 @@ object DocumentQueries {
         val nWords = wordTable.count()
         val maxWords = QueryConf.bpeMaxWords(s)
         require(nWords <= maxWords,
-          s"bpeMergesDriver: $nWords distinct words (after minCount=" +
+          s"bpeMerges: $nWords distinct words (after minCount=" +
             s"$minCount) exceed ${QueryConf.BpeMaxWordsKey}=$maxWords — " +
             "the driver-side merge loop would collect past driver heap. " +
             "Raise --min-count (2 prunes the hapax noise that dominates " +
             "web-scale word tables), raise the knob with more driver " +
             "memory, or train on a curated sample.")
-        wordTable.collect()
-          .map { r =>
-            val syms = r.getString(0).codePoints().toArray
-              .map(cp => new String(Character.toChars(cp)))
-            (syms, r.getLong(1))
-          }
+        wordTable.collect().map(r => (bpeSymbols(r.getString(0)), r.getLong(1)))
       } finally wordTable.unpersist(blocking = false)
     val merges = Seq.newBuilder[(Long, String, String, String, Long)]
     var vocab = words
@@ -2203,23 +2005,91 @@ object DocumentQueries {
           if (better) best = (p, c)
         }
         val ((lhs, rhs), pc) = best
-        vocab = vocab.map { case (syms, c) =>
-          // greedy left-to-right non-overlapping merge
-          val out = Array.newBuilder[String]
-          var i = 0
-          while (i < syms.length) {
-            if (i < syms.length - 1 && syms(i) == lhs && syms(i + 1) == rhs) {
-              out += lhs + rhs; i += 2
-            } else { out += syms(i); i += 1 }
-          }
-          (out.result(), c)
-        }
+        vocab = vocab.map { case (syms, c) => (bpeMerge(syms, lhs, rhs), c) }
         merges += ((rank.toLong, lhs, rhs, lhs + rhs, pc))
       }
       rank += 1
     }
     merges.result()
       .toDF("merge_rank", "lhs", "rhs", "merged", "pair_count")
+  }
+
+  /** d29b, the trained tokenizer applied: per-doc token counts
+    * (doc_id, n_words, n_bpe_tokens) under a merge table, either a
+    * [[bpeMerges]] result or the saved artifact the `tokenize` verb
+    * reads; no training runs here. The merge table (k rows) is collected
+    * and broadcast; each DISTINCT word is tokenized once in a
+    * mapPartitions over the Heaps-bounded word table (repeatedly merge
+    * the lowest-rank pair present, one greedy left-to-right pass per
+    * selected rank); the (word → symbol count) lookup then
+    * broadcast-joins the term stream. Corpus text is touched once and
+    * never rewritten.
+    *
+    * Rank-priority apply ≡ the trainer's round-by-round passes, exactly:
+    * a merge can only create adjacencies involving its OWN new symbol,
+    * and any merge consuming that symbol was necessarily created later
+    * (higher rank) — so pairs of rank below the current minimum can
+    * never appear, and processing ranks in ascending order reproduces
+    * training-time tokenization symbol-for-symbol (the d29b oracle
+    * tokenizes with the trainer's own round passes). */
+  def bpeTokenCountsFromMerges(docs: DataFrame, merges: DataFrame): DataFrame = {
+    val s = docs.sparkSession
+    import s.implicits._
+    val missing = Seq("merge_rank", "lhs", "rhs")
+      .filterNot(merges.columns.contains)
+    require(missing.isEmpty,
+      s"bpeTokenCountsFromMerges: merge table is missing column(s) " +
+        s"${missing.mkString(", ")} — not a bpetrain artifact")
+    val ranked: Array[(String, String)] = merges
+      .orderBy($"merge_rank")
+      .select($"lhs", $"rhs")
+      .collect().map(r => (r.getString(0), r.getString(1)))
+    val bc = s.sparkContext.broadcast(ranked)
+    val lookup = termStream(docs).select($"term").distinct()
+      .as[String]
+      .mapPartitions { it =>
+        val ms = bc.value
+        val rankOf = ms.zipWithIndex.toMap
+        it.map { term =>
+          var syms = bpeSymbols(term)
+          var done = false
+          while (!done && syms.length > 1) {
+            // lowest-rank adjacent pair present
+            var best = Int.MaxValue
+            var i = 0
+            while (i < syms.length - 1) {
+              rankOf.get((syms(i), syms(i + 1)))
+                .foreach(r => if (r < best) best = r)
+              i += 1
+            }
+            if (best == Int.MaxValue) done = true
+            else syms = bpeMerge(syms, ms(best)._1, ms(best)._2)
+          }
+          (term, syms.length.toLong)
+        }
+      }
+      .toDF("term", "n_sym")
+    termStream(docs).join(broadcast(lookup), Seq("term"))
+      .groupBy($"doc_id")
+      .agg(count(lit(1)).as("n_words"), sum($"n_sym").as("n_bpe_tokens"))
+  }
+
+  /** A word's BPE start state: one symbol per code point. */
+  private def bpeSymbols(word: String): Array[String] =
+    word.codePoints().toArray.map(cp => new String(Character.toChars(cp)))
+
+  /** One greedy left-to-right pass merging the non-overlapping
+    * occurrences of the pair (l, r): the step both training and apply
+    * take. */
+  private def bpeMerge(syms: Array[String], l: String, r: String): Array[String] = {
+    val out = Array.newBuilder[String]
+    var i = 0
+    while (i < syms.length) {
+      if (i < syms.length - 1 && syms(i) == l && syms(i + 1) == r) {
+        out += l + r; i += 2
+      } else { out += syms(i); i += 1 }
+    }
+    out.result()
   }
 
   /** The d28/d36 gate fixture: each document split into paragraphs
@@ -2241,13 +2111,6 @@ object DocumentQueries {
       .select(col("doc_id"),
         posexplode(split(col("augmented"), " \\| ")).as(Seq("pos", "para")))
 
-  /** d36's persistable artifact: the per-span signature table an
-    * incremental span dedup maintains — one fixed-width row per
-    * DISTINCT paragraph (md5 fingerprint, distinct-doc df, canonical
-    * (doc, pos) = the globally minimal occurrence). Paragraph TEXT is
-    * not in the artifact: disposition of future batches never re-reads
-    * the corpus (the d16 discipline at paragraph grain). Built with
-    * the same one-groupBy shape as [[spanDispositions]]' stats pass. */
   /** The span-family md5 key with the loud null refusal: md5(NULL) is
     * NULL, and a NULL key never equi-joins — a null paragraph would
     * otherwise silently vanish from every disposition instead of
@@ -2260,6 +2123,13 @@ object DocumentQueries {
         "the paragraph frame first")))
       .otherwise(md5(col("para")))
 
+  /** d36's persistable artifact: the per-span signature table an
+    * incremental span dedup maintains — one fixed-width row per
+    * DISTINCT paragraph (md5 fingerprint, distinct-doc df, canonical
+    * (doc, pos) = the globally minimal occurrence). Paragraph TEXT is
+    * not in the artifact: disposition of future batches never re-reads
+    * the corpus (the d16 discipline at paragraph grain). Built with
+    * the same one-groupBy shape as [[spanDispositions]]' stats pass. */
   def spanSignatures(paras: DataFrame): DataFrame = {
     val s = paras.sparkSession
     import s.implicits._
@@ -2752,12 +2622,6 @@ object DocumentQueries {
       .orderBy($"df".desc, $"gram")
   }
 
-  /** The d30/d32 shared n-gram pass: per-doc DISTINCT word-n-gram md5
-    * fingerprints with the d13 split riding the same projection (null
-    * text refused loudly inside splitBucketCol). ONE definition so the
-    * report (d30) and the remediation (d32) can never disagree on what
-    * an n-gram is. Docs under n tokens emit no rows; the size guard
-    * also keeps sequence() ascending (the sequence(1, 0) trap). */
   /** The distinct per-doc n-gram fingerprint stream (doc_id [, carry],
     * fp) — ONE definition of the n-gram grain shared by the
     * decontamination family (d30/d32/d39 via [[splitNgramFps]]) and the
@@ -2785,6 +2649,12 @@ object DocumentQueries {
       explode(expr(s"graft_ngram_fps(text, $n)")).as("fp"): _*)
   }
 
+  /** The d30/d32 shared n-gram pass: per-doc DISTINCT word-n-gram md5
+    * fingerprints with the d13 split riding the same projection (null
+    * text refused loudly inside splitBucketCol). ONE definition so the
+    * report (d30) and the remediation (d32) can never disagree on what
+    * an n-gram is. Docs under n tokens emit no rows; the size guard
+    * also keeps sequence() ascending (the sequence(1, 0) trap). */
   private[graft] def splitNgramFps(docs: DataFrame, n: Int): DataFrame =
     ngramFps(docs.withColumn("split", splitOfBucket(splitBucketCol)), n,
       Seq(col("split")))
@@ -3423,12 +3293,18 @@ object DocumentQueries {
            - (length(s1) - length(replace(s1, '[IP]', '')))) / 4 AS BIGINT)"""))
       .select(col("doc_id"), col("scrubbed"), col("n_emails"), col("n_ips"))
 
-  /** The d29 oracle, generated: round i reads v{i-1}, counts adjacent
-    * pairs (u/p), picks the argmax (b), and rewrites the vocab (v). */
-  /** Shared CTE chain for the d29/d29b oracles: w = word frequencies,
-    * v0 = char-split symbol strings, then k rounds of (s u p b v) —
-    * pair grain, argmax, rewrite — carrying `term` through so the
-    * final vocab doubles as the d29b tokenization lookup. */
+  /** The d29/d29b oracles' shared CTE chain, generated: the relational
+    * form of the [[bpeMerges]] rounds, kept as the independent
+    * reference. w = word frequencies, v0 = char-split symbol strings,
+    * then k rounds of (s u p b v): round i reads v{i-1}, counts adjacent
+    * pairs (u/p), picks the argmax (b) and rewrites the vocab (v),
+    * carrying `term` through so the final vocab doubles as the d29b
+    * tokenization lookup. Each symbol rides as chr(31) sym chr(30)
+    * (ASCII unit/record separators, which cannot occur in
+    * whitespace-split words), so merging (l, r) is a plain replace() of
+    * the wrapped pair: its left-to-right non-overlapping semantics are
+    * BPE's greedy pass, and a merged symbol is never half-matched by a
+    * later pattern. */
   private def bpeOracleCtes(k: Int): String = {
     val rounds = (1 to k).map { i =>
       s"""s$i AS (SELECT c, string_split(substr(seq, 2, length(seq) - 2),
@@ -3517,15 +3393,6 @@ object DocumentQueries {
               SELECT doc_id, toks, unnest(range(1, len(toks) - 6)) AS i
               FROM tk WHERE len(toks) >= 8))"""
 
-  /** d56 oracle generator at an explicit top-k: the full BM25 replay —
-    * split CTE, probe derivation (50 lowest-id test docs, first-5-token
-    * probes), the shared token grain, the fixed-point micro-score
-    * terms. EVERY fractional literal is CAST(… AS DOUBLE) — a bare
-    * DuckDB `2.2` is DECIMAL(2,1), and DECIMAL·BIGINT is exact-decimal
-    * arithmetic that rounds to double DIFFERENTLY than the engine's
-    * double·long (6.6 vs 2.2·3 differ in the last ulp). The gate entry
-    * is this at [[QueryConf.DefaultBm25TopK]]; ConfReplay dumps other
-    * operating points through the same text. */
   /** The d56 CTE chain up to the ranked scores (`r`) — shared verbatim
     * by the d56/d58 oracle and d59's lexical half so the three gates
     * cannot drift on what a BM25 rank is. `k` applies only in the
@@ -3587,6 +3454,15 @@ object DocumentQueries {
                ORDER BY sq DESC, doc_id) AS BIGINT) AS rk
            FROM agg)"""
 
+  /** d56 oracle generator at an explicit top-k: the full BM25 replay —
+    * split CTE, probe derivation (50 lowest-id test docs, first-5-token
+    * probes), the shared token grain, the fixed-point micro-score
+    * terms. EVERY fractional literal is CAST(… AS DOUBLE) — a bare
+    * DuckDB `2.2` is DECIMAL(2,1), and DECIMAL·BIGINT is exact-decimal
+    * arithmetic that rounds to double DIFFERENTLY than the engine's
+    * double·long (6.6 vs 2.2·3 differ in the last ulp). The gate entry
+    * is this at [[QueryConf.DefaultBm25TopK]]; ConfReplay dumps other
+    * operating points through the same text. */
   def d56OracleSqlAt(k: Int): String =
     s"""WITH $d56OracleCtes
          SELECT query_id, rk, doc_id, CAST(sq AS BIGINT) / 1000000.0 AS score

@@ -598,29 +598,6 @@ object EmbeddingQueries {
     * disposition is non-trivial on the test corpora. */
   private[queries] val semTau = 0.45
 
-  /** s09 as a reusable operator over any (vec_id, v: array<double>)
-    * frame: SemDeDup-style semantic deduplication (Abbas et al. 2023's
-    * shape — k-means-cluster the corpus, compare pairs only WITHIN a
-    * cluster, keep one member per redundant pair). Clustering is s04's
-    * trained coarse quantizer (fixed sign-seed init + one decimal-exact
-    * spherical Lloyd round — shared machinery, bit-equal on any
-    * engine), so the whole disposition is deterministic and fully
-    * SQL-oracle-checkable.
-    *
-    * Keep policy (the paper's): of a similar pair, KEEP the member
-    * FARTHER from its cell centroid — pruning toward diversity keeps
-    * the cluster's periphery, dropping redundant mass near the center;
-    * ties (equal centroid cosine) keep the lower vec_id. A dropped
-    * member records `canon` = the lowest-id neighbor it lost to and
-    * `n_sim` = how many similar neighbors beat it.
-    *
-    * Scale shape: the within-cell pair join is SemDeDup's own stated
-    * cost — n²/k per cell, held linear in practice by training k ∝
-    * corpus size (the paper runs 50k clusters on LAION; here k=16 on
-    * 500–5k vectors keeps the same cells-×-pairs balance). Spark-side
-    * it is a cell equi-join: vectors shuffle ONCE on the int cell key,
-    * each cell's pairs compute independently, and the ≤16-row centroid
-    * table is a broadcast. Nothing corpus-wide ever cross-joins. */
   /** s14 — k-NN GRAPH construction over the trained IVF cells: per
     * vector, its `k` most-cosine-similar neighbors WITHIN its home
     * cell. The graph is the input artifact of a whole family of
@@ -803,6 +780,29 @@ object EmbeddingQueries {
       .orderBy($"vec_id")
   }
 
+  /** s09 as a reusable operator over any (vec_id, v: array<double>)
+    * frame: SemDeDup-style semantic deduplication (Abbas et al. 2023's
+    * shape — k-means-cluster the corpus, compare pairs only WITHIN a
+    * cluster, keep one member per redundant pair). Clustering is s04's
+    * trained coarse quantizer (fixed sign-seed init + one decimal-exact
+    * spherical Lloyd round — shared machinery, bit-equal on any
+    * engine), so the whole disposition is deterministic and fully
+    * SQL-oracle-checkable.
+    *
+    * Keep policy (the paper's): of a similar pair, KEEP the member
+    * FARTHER from its cell centroid — pruning toward diversity keeps
+    * the cluster's periphery, dropping redundant mass near the center;
+    * ties (equal centroid cosine) keep the lower vec_id. A dropped
+    * member records `canon` = the lowest-id neighbor it lost to and
+    * `n_sim` = how many similar neighbors beat it.
+    *
+    * Scale shape: the within-cell pair join is SemDeDup's own stated
+    * cost — n²/k per cell, held linear in practice by training k ∝
+    * corpus size (the paper runs 50k clusters on LAION; here k=16 on
+    * 500–5k vectors keeps the same cells-×-pairs balance). Spark-side
+    * it is a cell equi-join: vectors shuffle ONCE on the int cell key,
+    * each cell's pairs compute independently, and the ≤16-row centroid
+    * table is a broadcast. Nothing corpus-wide ever cross-joins. */
   def semDedup(emb: DataFrame, tau: Double = semTau): DataFrame = {
     val s = emb.sparkSession
     import s.implicits._
@@ -1720,9 +1720,6 @@ object EmbeddingQueries {
          FROM corpus c LEFT JOIN lo ON c.vec_id = lo.vec_id
          ORDER BY c.vec_id"""
 
-  /** s14 oracle generator: the shared IVF prelude's trained cells +
-    * the symmetric within-cell pair scan + the per-vector rank — the
-    * s01 rounded-sim + id-tie discipline. */
   /** The s14 CTE chain up to the ranked within-cell pairs (`r`, plus the
     * full-universe `corpus`) — shared by the s14 oracle and s15's
     * graph-consuming oracle so the two gates cannot drift on what a
@@ -1746,6 +1743,9 @@ object EmbeddingQueries {
                ORDER BY cos_sim DESC, nbr) AS BIGINT) AS rk
            FROM p)"""
 
+  /** s14 oracle generator: the shared IVF prelude's trained cells +
+    * the symmetric within-cell pair scan + the per-vector rank — the
+    * s01 rounded-sim + id-tie discipline. */
   private[graft] def s14OracleSqlAt(cells: Int, rounds: Int, k: Int,
       nprobe: Int = QueryConf.DefaultKnnNprobe): String =
     s"""WITH ${s14OracleCtes(cells, rounds, nprobe)}

@@ -170,8 +170,9 @@ object QueryConf {
   def knnNprobe(s: SparkSession): Int =
     posInt(s, KnnNprobeKey, DefaultKnnNprobe, max = 65536)
 
-  /** d29 driver-trainer collect ceiling: the most distinct words
-    * [[DocumentQueries.bpeMergesDriver]] will collect to the driver.
+  /** d29 trainer collect ceiling: the most distinct words
+    * [[DocumentQueries.bpeMerges]] will collect to the driver (the d29
+    * gate, d29b and the `bpetrain` verb all train there).
     * Heaps' law bounds the distinct-word table for prose, but a noisy
     * web crawl's "words" (URLs, base64, hash-mangled tokens) can push
     * the constant past driver heap — the trainer counts the (cached)

@@ -118,8 +118,9 @@ object DocumentIngest {
     * .spanSignatures]] rows; disposition readers fold them with
     * `foldSpanSignatures` (df sums exactly under the unique-doc_id
     * ingest contract). Both sidecars ride the one pinned computation
-    * of the dedup exchange above. */
-  /** `qualityMin`: the ingest-time quality gate — the d09 composite
+    * of the dedup exchange above.
+    *
+    * `qualityMin`: the ingest-time quality gate — the d09 composite
     * (the SAME shared formula the d31 funnel and `curate` threshold,
     * so a doc the batch pipeline would cut never lands in the first
     * place) computed per micro-batch; docs below the bar are dropped

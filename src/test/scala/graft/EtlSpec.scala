@@ -327,6 +327,22 @@ class EtlSpec extends SparkSpec {
     assert(cfg.staggingSeconds == 900 && cfg.dedup && cfg.hourlyPartitions)
   }
 
+  test("fromEnv names the key and the value of a malformed number or boolean (C1)") {
+    val badNum = intercept[IllegalArgumentException] {
+      EtlConfig.fromEnv(Map("S3LOGS_TRANSFORM_JOB_INTERVAL" -> "15m"))
+    }
+    assert(badNum.getMessage.contains("S3LOGS_TRANSFORM_JOB_INTERVAL") &&
+      badNum.getMessage.contains("'15m'"), badNum.getMessage)
+    val badBool = intercept[IllegalArgumentException] {
+      EtlConfig.fromEnv(Map("S3LOGS_TRANSFORM_LOG_DEDUPLICATION" -> "yes"))
+    }
+    assert(badBool.getMessage.contains("S3LOGS_TRANSFORM_LOG_DEDUPLICATION") &&
+      badBool.getMessage.contains("'yes'"), badBool.getMessage)
+    // well-formed values still parse, surrounding blanks trimmed
+    assert(EtlConfig.fromEnv(Map("S3LOGS_TRANSFORM_JOB_INTERVAL" -> " 15 "))
+      .jobIntervalSeconds == 15L)
+  }
+
   test("fromEnv rejects unknown S3LOGS_* keys loudly (C1)") {
     val e = intercept[IllegalArgumentException] {
       EtlConfig.fromEnv(Map("S3LOGS_TRANSFORM_DEDUP" -> "true",

@@ -605,6 +605,36 @@ class MainSpec extends SparkSpec {
     assert(spark.read.parquet(s"$tmp/lake").count() == 65)
   }
 
+  test("transform --loop refuses inputs it cannot list, before any output exists") {
+    val tmp = Files.createTempDirectory("graft-cli-loop-in").toString
+    val env = Map("S3LOGS_TRANSFORM_JOB_INTERVAL" -> "0")
+    Files.createDirectories(java.nio.file.Paths.get(s"$tmp/stage"))
+    // a missing dir and a non-local URI both used to run as an empty
+    // batch on every iteration, printing "0 lines processed" forever
+    Seq(Seq(s"$tmp/missing"), Seq(s"$tmp/stage", "s3a://b/k")).foreach { ins =>
+      val e = intercept[IllegalArgumentException] {
+        Main.run(spark, Seq("transform", "-o", s"$tmp/lake", "--loop", "0",
+          "--iterations", "1") ++ ins, env)
+      }
+      assert(e.getMessage.contains(ins.last) &&
+        !e.getMessage.contains(s"$tmp/stage"), e.getMessage)
+      assert(!Files.exists(java.nio.file.Paths.get(s"$tmp/lake")),
+        s"refused loop over $ins wrote output")
+    }
+    // the staging-root env var is an input like a positional one
+    val viaEnv = intercept[IllegalArgumentException] {
+      Main.run(spark, Seq("transform", "-o", s"$tmp/lake", "--loop", "0",
+        "--iterations", "1"),
+        env + ("S3LOGS_STAGGING_ROOT_PATH" -> "s3a://b/k"))
+    }
+    assert(viaEnv.getMessage.contains("s3a://b/k"), viaEnv.getMessage)
+    assert(!Files.exists(java.nio.file.Paths.get(s"$tmp/lake")))
+    // an existing empty staging dir is valid: an idle iteration
+    val idle = Main.run(spark, Seq("transform", "-o", s"$tmp/lake",
+      "--loop", "0", "--iterations", "1", s"$tmp/stage"), env)
+    assert(idle.head == "transform task ended, 0 lines processed", idle)
+  }
+
   test("dedup: disposition artifact written, decision counts printed") {
     import spark.implicits._
     val tmp = Files.createTempDirectory("graft-cli-dedup").toString

@@ -1156,42 +1156,45 @@ class OperatorsSpec extends SparkSpec {
       (3L, "c", "d", "cd", 3L),
       (4L, "aa", "ab", "aaab", 2L)),
       s"merge table diverges: ${got.mkString(", ")}")
-    // the per-round broadcast side is an explicit LIMIT 1 — the bound
-    // the gate plan audits can't see through the checkpointed rounds
-    // (asserted here at the source instead; see QueriesSpec note)
+    // k = 1 trains exactly the round-1 merge
     val best = DocumentQueries.bpeMerges(docs, k = 1)
     assert(best.count() == 1L)
     // d29b apply: after 2 merges (aa, then ab) the vocab tokenizes
     // aaab->[aa,ab]=2, ab->[ab]=1, cd->[c,d]=2 — counts per doc are
     // hand-checkable sums over the SAME term stream
-    val toks = DocumentQueries.bpeTokenCounts(docs, k = 2).collect()
+    val toks = DocumentQueries.bpeTokenCountsFromMerges(docs,
+        DocumentQueries.bpeMerges(docs, k = 2)).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(toks(1L) == (3L, 5L), s"doc 1 tokenized to ${toks(1L)}") // aaab ab cd
     assert(toks(2L) == (3L, 6L), s"doc 2 tokenized to ${toks(2L)}") // aaab cd cd
-    // the driver-side production trainer (bpeMergesDriver — one
-    // distributed corpus pass, merge loop in memory) is round-for-round
-    // IDENTICAL: on the hand-computed fixture including the exhausted
-    // tail, and on a real corpus slice at a k deep enough to exercise
-    // ties and multi-symbol merges
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2),
         r.getString(3), r.getLong(4))).sortBy(_._1).toSeq
-    assert(rows(DocumentQueries.bpeMergesDriver(docs, k = 6)) == got.toSeq,
-      "driver trainer diverges from the relational loop on the fixture")
+    // on a real corpus slice, at a k deep enough for ties and
+    // multi-symbol merges, the table keeps the invariants of any correct
+    // trainer: ranks 1..n with no gaps, merged = lhs ++ rhs, and
+    // pair_count never rising from one rank to the next (a merge only
+    // removes old adjacencies, and every new pair contains the new
+    // symbol, which occurs at most that round's count times)
     val corpus = Tables(spark, sfSmoke, "documents").limit(80)
       .select("doc_id", "text")
-    assert(rows(DocumentQueries.bpeMergesDriver(corpus, k = 25)) ==
-      rows(DocumentQueries.bpeMerges(corpus, k = 25)),
-      "driver trainer diverges from the relational loop on the corpus")
+    val table = rows(DocumentQueries.bpeMerges(corpus, k = 25))
+    assert(table.size == 25, table)
+    assert(table.map(_._1) == (1L to 25L), table)
+    table.foreach { case (_, l, r, m, _) =>
+      assert(m == l + r, s"merged $m is not $l ++ $r")
+    }
+    table.map(_._5).sliding(2).foreach { case Seq(a, b) =>
+      assert(a >= b, s"pair_count rose from $a to $b: $table")
+    }
     // the web-scale collect floor: minCount=1 (the default) is the
     // identity — explicit floor 1 must train the EXACT same table on
     // fixture and corpus
-    assert(rows(DocumentQueries.bpeMergesDriver(docs, k = 6,
+    assert(rows(DocumentQueries.bpeMerges(docs, k = 6,
         minCount = 1L)) == got.toSeq,
       "minCount=1 must be the identity floor (fixture)")
-    assert(rows(DocumentQueries.bpeMergesDriver(corpus, k = 25,
-        minCount = 1L)) ==
-      rows(DocumentQueries.bpeMergesDriver(corpus, k = 25)),
+    assert(rows(DocumentQueries.bpeMerges(corpus, k = 25,
+        minCount = 1L)) == table,
       "minCount=1 must be the identity floor (corpus)")
     // minCount=2 drops the fixture's ONE hapax word ("ab" — frequencies
     // aaab:2, ab:1, cd:3), so training sees aaab:2 + cd:3 only; the
@@ -1201,7 +1204,7 @@ class OperatorsSpec extends SparkSpec {
     // UTF-8 lhs order, and (aa,ab):2 completes aaab. The floor changes
     // the trained table ONLY through the dropped hapax — exactly the
     // documented trade
-    assert(rows(DocumentQueries.bpeMergesDriver(docs, k = 6,
+    assert(rows(DocumentQueries.bpeMerges(docs, k = 6,
         minCount = 2L)) == Seq(
       (1L, "a", "a", "aa", 4L),
       (2L, "c", "d", "cd", 3L),
@@ -1212,36 +1215,66 @@ class OperatorsSpec extends SparkSpec {
     // semantics-preserving-in-practice claim at its exact boundary
     val noHapax = Seq((1L, "aaab ab cd"), (2L, "aaab cd cd"), (3L, "ab"))
       .toDF("doc_id", "text")
-    assert(rows(DocumentQueries.bpeMergesDriver(noHapax, k = 6,
+    assert(rows(DocumentQueries.bpeMerges(noHapax, k = 6,
         minCount = 2L)) ==
-      rows(DocumentQueries.bpeMergesDriver(noHapax, k = 6)),
+      rows(DocumentQueries.bpeMerges(noHapax, k = 6)),
       "minCount=2 must be the identity on a hapax-free corpus")
     // a floor above every frequency trains nothing rather than
     // inventing merges from an empty table; floor 0 refuses loudly
-    assert(DocumentQueries.bpeMergesDriver(docs, k = 6,
+    assert(DocumentQueries.bpeMerges(docs, k = 6,
       minCount = 100L).count() == 0L)
     intercept[IllegalArgumentException] {
-      DocumentQueries.bpeMergesDriver(docs, k = 6, minCount = 0L)
+      DocumentQueries.bpeMerges(docs, k = 6, minCount = 0L)
     }
-    // apply off the SAVED artifact (rank-priority tokenize) must equal
-    // training-time tokenization symbol-for-symbol — on the fixture and
-    // on the corpus slice, at a k deep enough for multi-symbol merges
+    // the rank-priority apply equals training-time tokenization on the
+    // corpus slice: each word run through the k=25 table's rounds in
+    // order, one greedy left-to-right pass per round, in plain Scala
+    def roundPasses(word: String): Int = table.foldLeft(
+        word.codePoints().toArray.toSeq
+          .map(cp => new String(Character.toChars(cp)))) {
+      case (syms, (_, l, r, _, _)) =>
+        val out = Seq.newBuilder[String]
+        var i = 0
+        while (i < syms.length) {
+          if (i < syms.length - 1 && syms(i) == l && syms(i + 1) == r) {
+            out += l + r; i += 2
+          } else { out += syms(i); i += 1 }
+        }
+        out.result()
+    }.length
+    val expected = corpus.collect().map { r =>
+      val words = r.getString(1).split(" ").filter(_.nonEmpty)
+      r.getLong(0) -> ((words.length.toLong, words.map(roundPasses(_).toLong).sum))
+    }.filter(_._2._1 > 0).toMap
     def tokRows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    assert(tokRows(DocumentQueries.bpeTokenCountsFromMerges(docs,
-        DocumentQueries.bpeMergesDriver(docs, k = 2))) ==
-      tokRows(DocumentQueries.bpeTokenCounts(docs, k = 2)),
-      "artifact apply diverges from training-time tokenization (fixture)")
     assert(tokRows(DocumentQueries.bpeTokenCountsFromMerges(corpus,
-        DocumentQueries.bpeMergesDriver(corpus, k = 25))) ==
-      tokRows(DocumentQueries.bpeTokenCounts(corpus, k = 25)),
-      "artifact apply diverges from training-time tokenization (corpus)")
+        DocumentQueries.bpeMerges(corpus, k = 25))) == expected,
+      "rank-priority apply diverges from training-time tokenization (corpus)")
     // a non-artifact table is refused loudly
     val eTok = intercept[IllegalArgumentException] {
       DocumentQueries.bpeTokenCountsFromMerges(docs,
-        DocumentQueries.bpeMergesDriver(docs, k = 2).drop("rhs"))
+        DocumentQueries.bpeMerges(docs, k = 2).drop("rhs"))
     }
     assert(eTok.getMessage.contains("rhs"), eTok.getMessage)
+  }
+
+  test("BPE trainer: the same Spark jobs at k = 1 and k = 25 (d29)") {
+    // clock-free pin of the one-corpus-pass shape: every merge round runs
+    // in driver memory, so a deeper table schedules no extra job
+    val corpus = Tables(spark, sfSmoke, "documents").limit(80)
+      .select("doc_id", "text")
+    val m = new DevKit.Meter(spark)
+    try {
+      def jobs(k: Int): Int = {
+        m.drain() // let earlier suites' trailing events pass first
+        m.reset()
+        assert(DocumentQueries.bpeMerges(corpus, k).collect().length == k)
+        m.drain().jobs
+      }
+      val (one, deep) = (jobs(1), jobs(25))
+      assert(one >= 1 && deep == one, s"jobs at k=1: $one, at k=25: $deep")
+    } finally spark.sparkContext.removeSparkListener(m)
   }
 
   test("temperature sampling refuses null lang and null text loudly (d27)") {

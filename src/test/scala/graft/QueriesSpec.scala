@@ -71,11 +71,8 @@ class QueriesSpec extends SparkSpec {
     // an explicit limit(1)) cross-joined onto the bucketed corpus
     // d27/d31: the c_min scalar cross-joined onto the #langs-row rate
     // table (d31 builds the same rate table over its survivor corpus)
-    // (d29's per-round crossJoin(broadcast(LIMIT 1)) never reaches these
-    // audits: the rounds are eagerly localCheckpoint'd at construction,
-    // so the returned plan is joins-free truncated lineage — the d06/d14
-    // situation. Its bound is asserted at the source instead: see
-    // OperatorsSpec "BPE merge loop".)
+    // (d29 has no cross join: its merge rounds run in driver memory and
+    // the returned merge table is a local relation.)
     // s08: s04's cross-join assignment scan (<=16-row centroid side)
     // reused for the PQ build + probe assignment
     // s09: the same <=16-row trained-centroid assignment scan (SemDeDup
@@ -84,7 +81,7 @@ class QueriesSpec extends SparkSpec {
     // train corpus and the eval probe side; the hit scan is a cell
     // equi-join
     // (s11's assignment scan is the SAME cross-join, but the frame is
-    // eagerly Materialize()d at construction, so — like d06/d14/d29 —
+    // eagerly Materialize()d at construction, so — like d06/d14 —
     // the optimized plan this audit sees is truncated lineage with no
     // join left. Its hint is audited at the source instead: see the
     // assignTo analyzed-plan check in the hinted-side audit below.)
