@@ -3,6 +3,7 @@ package graft
 import java.util.Locale
 import java.util.concurrent.ConcurrentHashMap
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
@@ -23,18 +24,20 @@ object DevKit {
     * `time` fields, not a clock read in the callback: the listener bus is
     * async and backlogs exactly when a query fires many jobs in quick
     * succession. The storage census is taken before the run's storage is
-    * released. */
+    * released. `compiles` counts the generated classes the JVM compiled
+    * (Spark's codegen compile histogram), so a query that recompiles code
+    * it ran before shows as a count, not as a slower wall. */
   final case class Reading(jobs: Int = 0, jobSec: Double = 0.0,
       stages: Int = 0, maxTaskMs: Long = 0L, shuffleBytes: Long = 0L,
       shuffleRecords: Long = 0L,
       jobLog: Vector[(Int, Double, String)] = Vector.empty,
       cachedRdds: Int = 0, cachedMemBytes: Long = 0L,
-      cachedDiskBytes: Long = 0L)
+      cachedDiskBytes: Long = 0L, compiles: Long = 0L)
 
   /** The one listener, attached to `spark` on construction: jobs (with a
     * per-job log of id, seconds and first stage name), summed job seconds,
-    * completed stages, the longest task and the shuffle-write bytes and
-    * records since the last [[reset]]. */
+    * completed stages, the longest task, the shuffle-write bytes and
+    * records and the codegen compiles since the last [[reset]]. */
   final class Meter(val spark: SparkSession) extends SparkListener {
     // Values are references, deliberately: remove() on a missing key
     // returns null, which skips the job. A Scala Long value would unbox
@@ -44,7 +47,11 @@ object DevKit {
     private val starts = new ConcurrentHashMap[Int, (java.lang.Long, String)]()
     private var events = 0L
     private var now = Reading()
+    private var compiledAtReset = compiledNow()
     spark.sparkContext.addSparkListener(this)
+
+    // JVM-wide and updated by the compiling thread itself, not the bus
+    private def compiledNow(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
     private def tally(f: Reading => Reading): Unit =
       synchronized { events += 1; now = f(now) }
@@ -71,7 +78,10 @@ object DevKit {
     override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
       tally(r => r.copy(maxTaskMs = math.max(r.maxTaskMs, t.taskInfo.duration)))
 
-    def reset(): Unit = synchronized { now = Reading() }
+    def reset(): Unit = synchronized {
+      now = Reading()
+      compiledAtReset = compiledNow()
+    }
 
     /** Wait for the async listener bus to go quiet (no event across three
       * 100 ms polls, capped at 5 s; its own drain API is private), then
@@ -85,7 +95,8 @@ object DevKit {
         if (seen == last) quiet += 1 else { quiet = 0; last = seen }
       }
       val infos = spark.sparkContext.getRDDStorageInfo
-      synchronized(now).copy(cachedRdds = infos.length,
+      synchronized(now.copy(compiles = compiledNow() - compiledAtReset))
+        .copy(cachedRdds = infos.length,
         cachedMemBytes = infos.map(_.memSize).sum,
         cachedDiskBytes = infos.map(_.diskSize).sum)
     }

@@ -7,7 +7,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Local mode is a single JVM; shuffle partitions are sized to the core
   * count instead of the 200 default (SURVEY.md §4 "parallelism").
   * AQE stays on so skewed shuffles re-plan at runtime — the behaviour we
-  * rely on at cluster scale.
+  * rely on at cluster scale. Session-artifact isolation is off, so a
+  * cloned session (a streaming query, a scoped-conf materialization)
+  * reuses the classes its parent already compiled instead of generating
+  * them again under a classloader of its own.
   */
 object GraftSession {
   /** Default core count: env override, else the machine's actual cores
@@ -64,6 +67,17 @@ object GraftSession {
       // by Spark 4; read as long and convert in Tables().
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // One code cache for every cloned session. Spark caches compiled
+      // classes by (classloader, source); with session-artifact isolation
+      // on, each clone (every streaming query start, every
+      // QueryConf.materializeWithConf scope) gets its own artifact
+      // classloader and recompiles byte-identical generated code (16
+      // classes for a warm drain in CodegenCacheSpec). Isolation exists to
+      // keep one user's added jars and classes away from another's (Spark
+      // Connect); this engine adds no artifacts, so every session shares
+      // the one loader. Spark Connect, or jars added per session, would
+      // need it back on.
+      .config("spark.sql.artifact.isolation.enabled", "false")
     // `file://` goes through the in-process local FS (graft.LocalFs)
     val spark = (LocalFs.conf ++ extraConf).foldLeft(builder) {
       case (b, (k, v)) => b.config(k, v)

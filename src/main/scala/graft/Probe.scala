@@ -15,7 +15,11 @@ import org.apache.spark.sql.SparkSession
   *  - `[probe-storage]`: the persistent-RDD census before the run's
   *    storage is released (a query whose cuts outlive their consumers
   *    shows up here). Every run releases its storage after the clock
-  *    stops, like the bench.
+  *    stops, like the bench;
+  *  - `[probe-codegen]`: the generated classes compiled during the timed
+  *    run. After a warm run this should read 0; more means the query
+  *    recompiles code it already ran (a per-run literal in generated
+  *    code, or a session whose classloader misses the code cache).
   *
   * `SPARK_GRAFT_CONF` is a `;`-separated list of conf variants, each
   * `k=v,k2=v2` layered on the canonical session (a `graft.exp.<name>` key
@@ -73,6 +77,7 @@ object Probe {
         System.err.println(f"[probe-storage] ${m.cachedRdds}%3d cached RDDs, " +
           f"${m.cachedMemBytes / 1e6}%8.1f MB mem, " +
           f"${m.cachedDiskBytes / 1e6}%8.1f MB disk")
+        System.err.println(f"[probe-codegen] ${m.compiles}%5d classes compiled")
       }
       spark.stop()
       SparkSession.clearActiveSession()

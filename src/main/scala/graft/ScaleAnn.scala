@@ -81,10 +81,7 @@ object ScaleAnn {
         got.getOrElse(qid, Set.empty[Long]).intersect(s).size.toDouble /
           s.size }.sum / ex.size
     }
-    def once[T](body: => T): (Double, T) = {
-      val run = DevKit.timedRuns(meter, 1)(_ => body)
-      (run.min, run.last)
-    }
+    def once[T](body: => T): DevKit.Runs[T] = DevKit.timedRuns(meter, 1)(_ => body)
 
     val queries = Tables(spark, dir, "embeddings").filter($"vec_id" < nQ)
 
@@ -93,7 +90,7 @@ object ScaleAnn {
       spark.conf.set(QueryConf.LloydRoundsKey, rounds.toString)
       val cDir = s"$work/cent_c${cells}_r$rounds"
       val iDir = s"$work/idx_c${cells}_r$rounds"
-      val (buildSec, _) = once {
+      val build = once {
         Main.run(spark, Seq("ivftrain", s"$dir/embeddings.parquet", cDir),
           Map.empty)
         Main.run(spark, Seq("ivfindex", s"$dir/embeddings.parquet", cDir,
@@ -102,7 +99,7 @@ object ScaleAnn {
       val cent = spark.read.parquet(cDir)
       for (probes <- probesGrid) {
         spark.conf.set(QueryConf.IvfProbesKey, probes.toString)
-        val (querySec, ranks) = once {
+        val query = once {
           EmbeddingQueries.annRankTableIndexed(
               spark.read.parquet(iDir), queries, cent, k = kMax)
             .select($"query_id", $"rk", $"doc_id")
@@ -111,9 +108,11 @@ object ScaleAnn {
         for (k <- kGrid) {
           println(DevKit.json("mode" -> "recall", "cells" -> cells,
             "rounds" -> rounds, "probes" -> probes, "k" -> k,
-            "recall" -> Num(recallOf(ranks, k), 4),
-            "build_sec" -> Num(buildSec, 4),
-            "query_sec" -> Num(querySec, 4)))
+            "recall" -> Num(recallOf(query.last, k), 4),
+            "build_sec" -> Num(build.min, 4),
+            "query_sec" -> Num(query.min, 4),
+            "build_compiles" -> build.meter.compiles,
+            "query_compiles" -> query.meter.compiles))
         }
       }
       spark.conf.unset(QueryConf.IvfProbesKey)
@@ -139,10 +138,10 @@ object ScaleAnn {
     // is a property of the benchmark batch, not of the layout
     val nQab = 10L
     val queriesAb = Tables(spark, dir, "embeddings").filter($"vec_id" < nQab)
-    def probeOnce(idxDir: String): Double = once {
+    def probeOnce(idxDir: String): DevKit.Runs[Long] = once {
       BenchExec.run(EmbeddingQueries.annRankTableIndexed(
         spark.read.parquet(idxDir), queriesAb, cent, k = kMax))
-    }._1
+    }
     // the plan claim, checked on the partitioned layout
     val plan = EmbeddingQueries.annRankTableIndexed(
       spark.read.parquet(iPart), queriesAb, cent, k = kMax)
@@ -167,7 +166,9 @@ object ScaleAnn {
       .drop(1).unzip
     println(DevKit.json("mode" -> "prune_ab", "cells" -> abCells,
       "probes" -> abProbes, "k" -> kMax, "queries" -> nQab,
-      "cellpart_sec" -> Num(ps.min, 4), "flat_sec" -> Num(fs.min, 4),
+      "cellpart_sec" -> Num(ps.map(_.min).min, 4),
+      "flat_sec" -> Num(fs.map(_.min).min, 4),
+      "compiles" -> (ps ++ fs).map(_.meter.compiles).sum,
       "dpp_fired" -> dpp, "probed_cells" -> probedCells.size,
       "files_scanned" -> probed.size, "files_total" -> all.size,
       "bytes_scanned" -> probed.map(_.length()).sum,

@@ -187,9 +187,9 @@ object ScaleBench {
       System.err.println(f"[scale] $label%-6s $q%-26s min=${run.min}%7.2f s" +
         f"  jobs=${m.jobs}%3d jobSec=${m.jobSec}%7.2f" +
         f"  (${DevKit.wallsText(run.walls)})")
-      DevKit.csv(label, q, run.min, m.jobs, m.jobSec, nDocs)
+      DevKit.csv(label, q, run.min, m.jobs, m.jobSec, m.compiles, nDocs)
     }
-    println("scale,query,min_wall_s,jobs,job_sum_s,n_docs")
+    println("scale,query,min_wall_s,jobs,job_sum_s,compiles,n_docs")
     rows.foreach(println)
     spark.stop()
   }

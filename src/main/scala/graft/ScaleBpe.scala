@@ -50,7 +50,8 @@ object ScaleBpe {
       val runs = DevKit.timedRuns(meter, 2)(_ =>
         graft.queries.DocumentQueries.bpeMerges(docs, k).count())
       println(DevKit.json("k" -> k, "wall_s" -> runs.min,
-        "rows" -> runs.last, "jobs" -> runs.meter.jobs))
+        "rows" -> runs.last, "jobs" -> runs.meter.jobs,
+        "compiles" -> runs.meter.compiles))
     }
     spark.stop()
   }

@@ -66,9 +66,9 @@ object ScaleEtl {
       System.err.println(f"[scale-etl] $label%-6s n=$n%9d min=${run.min}%7.2f s" +
         f"  jobs=${m.jobs}%3d jobSec=${m.jobSec}%7.2f files=$nFiles%4d" +
         f"  out=$out%9d  (${DevKit.wallsText(run.walls)})")
-      DevKit.csv(label, n, run.min, m.jobs, m.jobSec, out, nFiles)
+      DevKit.csv(label, n, run.min, m.jobs, m.jobSec, m.compiles, out, nFiles)
     }
-    println("scale,n_lines,min_wall_s,jobs,job_sum_s,output_rows,n_files")
+    println("scale,n_lines,min_wall_s,jobs,job_sum_s,compiles,output_rows,n_files")
     rows.foreach(println)
     spark.stop()
   }

@@ -90,7 +90,7 @@ object ScaleFold {
       acc(label) = (dt, mt) :: acc(label)
       System.err.println(
         f"[fold] round $r $label%-24s wall $dt%7.2f s  maxTask $mt%7.2f s" +
-          f" (chk ${run.last})")
+          f"  compiles ${run.meter.compiles}%3d (chk ${run.last})")
     }
     shapes.foreach { case (label, _) =>
       val ts = acc(label)

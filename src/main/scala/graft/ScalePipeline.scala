@@ -67,14 +67,15 @@ object ScalePipeline {
     // the two non-Main stages (prep, joinback) never materialize.
     val env = knobs.get("GRAFT_CHECKPOINT_DIR")
       .map("GRAFT_CHECKPOINT_DIR" -> _).toMap
-    // per-stage (label, wall, jobs) so the summary can separate the SIX
+    // per-stage (label, wall, reading) so the summary can separate the SIX
     // pipeline stages from prep and from the bookkeeping counts below —
-    // "pipeline_total"/"jobs" must describe the pipeline alone
-    def timed(label: String)(body: => Any): (String, Double, Int) = {
+    // "pipeline_total"/"jobs"/"compiles" must describe the pipeline alone
+    def timed(label: String)(body: => Any): (String, Double, DevKit.Reading) = {
       val run = DevKit.timedRuns(meter, 1)(_ => body)
-      val (dt, dj) = (run.min, run.meter.jobs)
-      System.err.println(f"[pipeline] $label%-10s $dt%8.2f s ($dj%3d jobs)")
-      (label, dt, dj)
+      val (dt, m) = (run.min, run.meter)
+      System.err.println(f"[pipeline] $label%-10s $dt%8.2f s (${m.jobs}%3d jobs," +
+        f" ${m.compiles}%4d compiles)")
+      (label, dt, m)
     }
     // prep: parquet corpus → JSON-lines crawl drop (32 files → the
     // ingest source drains them in maxFilesPerTrigger batches). One
@@ -187,13 +188,14 @@ object ScalePipeline {
     // (its wall rides in its own field) and the nIn/nKept/nSeqs
     // bookkeeping counts are measurement overhead, not pipeline work
     val total = stages.map(_._2).sum
-    val pipelineJobs = stages.map(_._3).sum
+    val pipelineJobs = stages.map(_._3.jobs).sum
     val outcome =
       if (hybrid) Seq("fused_rows" -> nKept)
       else Seq("docs_kept" -> nKept, "sequences" -> nSeqs)
     println(DevKit.json(Seq("metric" -> "pipeline_total", "value" -> total,
       "unit" -> "sec", "docs_in" -> nIn) ++ outcome ++ Seq(
-      "jobs" -> pipelineJobs, "sidecars" -> sidecars, "hybrid" -> hybrid) ++
+      "jobs" -> pipelineJobs, "compiles" -> stages.map(_._3.compiles).sum,
+      "sidecars" -> sidecars, "hybrid" -> hybrid) ++
       (prep +: stages).map { case (l, s, _) => l -> s }: _*))
     spark.stop()
   }

@@ -91,9 +91,9 @@ object ScaleQueue {
         f"min=$wall%7.2f s  ${n / wall}%9.0f lines/s  batches=$batches%3d " +
         f"out=$outRows%9d drained=$drained  (${DevKit.wallsText(run.walls)})")
       DevKit.csv(label, n, k, wall, (n / wall).toLong, outRows, batches,
-        drained)
+        drained, run.meter.compiles)
     }
-    println("scale,n_lines,n_objects,min_wall_s,lines_per_s,output_rows,batches,queue_drained")
+    println("scale,n_lines,n_objects,min_wall_s,lines_per_s,output_rows,batches,queue_drained,compiles")
     rows.foreach(println)
     spark.stop()
   }

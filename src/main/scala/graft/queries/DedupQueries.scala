@@ -905,6 +905,18 @@ object DedupQueries {
   def duplicateClusters(docs: DataFrame): DataFrame =
     withDedupScope(docs)(_.clusters)
 
+  /** Refuse a corpus whose `doc_id` column repeats a value, with
+    * `message` of the first repeated id seen: one `head(1)` over an
+    * id-only aggregate (fixed-width keys, column-pruned scan). The
+    * disposition operators and [[DocumentQueries.packSequences]] share
+    * it; each names its own operation in the message. */
+  private[queries] def requireUniqueDocIds(docs: DataFrame)(
+      message: Any => String): Unit = {
+    val dup = docs.groupBy("doc_id").count()
+      .filter(col("count") > 1).select("doc_id").head(1)
+    if (dup.nonEmpty) throw new IllegalArgumentException(message(dup.head.get(0)))
+  }
+
   /** The disposition operators' shared contract checks (loud — these
     * are CLI-reachable over arbitrary user parquet, where a schema
     * deviation must fail, not silently disposition wrong):
@@ -932,11 +944,8 @@ object DedupQueries {
           "re-key the corpus (e.g. monotonically increasing ids) before " +
           "disposition")
     }
-    val dup = docs.groupBy("doc_id").count()
-      .filter($"count" > 1).select("doc_id").head(1)
-    if (dup.nonEmpty) throw new IllegalArgumentException(
-      s"$op: duplicate doc_id ${dup.head.get(0)} — doc ids must " +
-        "be unique; re-key or compact the corpus before disposition")
+    requireUniqueDocIds(docs)(id => s"$op: duplicate doc_id $id — doc " +
+      "ids must be unique; re-key or compact the corpus before disposition")
     docs
       .withColumn("doc_id", when($"doc_id".isNull,
         raise_error(lit(s"$op: null doc_id in the corpus")))

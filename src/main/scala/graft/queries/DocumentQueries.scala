@@ -622,11 +622,9 @@ object DocumentQueries {
     // differs run to run, and both emit slices with colliding doc_start
     // under one id, so provenance reassembly is garbage. One id-only
     // shuffle (fixed-width keys, column-pruned scan) before the pipeline.
-    val dup = docs.groupBy("doc_id").count()
-      .filter($"count" > 1).select("doc_id").head(1)
-    if (dup.nonEmpty) throw new IllegalArgumentException(
-      s"packSequences: duplicate doc_id ${dup.head.get(0)} — doc ids " +
-        "must be unique; re-key or compact the corpus before packing")
+    DedupQueries.requireUniqueDocIds(docs)(id => s"packSequences: " +
+      s"duplicate doc_id $id — doc ids must be unique; re-key or compact " +
+      "the corpus before packing")
     val counts = docs
       .withColumn("n",
         expr("size(filter(split(text, ' '), t -> t <> ''))").cast("long"))
@@ -1935,9 +1933,10 @@ object DocumentQueries {
     * tokens) the trainer never merges; 2, the usual tokenizer-trainer
     * setting, changes the table only through the dropped hapax words.
     *
-    * Limit: the filtered table is cached, counted and refused above
-    * `spark.graft.bpe.maxwords` (20M by default) before the collect,
-    * instead of dying inside it. A word table larger than that at
+    * Limit: the filtered table is collected under a limit of one row
+    * past `spark.graft.bpe.maxwords` (20M by default), in one action with
+    * no cache, and refused when that row arrives, instead of dying inside
+    * an unbounded collect. A word table larger than that at
     * `minCount = 1` is therefore refused, where a distributed round loop
     * would have run at about 0.2 s of scheduling per merge (~2.4 h for
     * k = 32000). The escape is a higher `minCount` (`bpetrain
@@ -1957,25 +1956,24 @@ object DocumentQueries {
         java.util.Arrays.compareUnsigned(x, y)
       }
     }
-    // the cache means the maxwords guard costs no second corpus pass
-    // (count fills it, collect reads it)
-    val wordTable = termStream(docs)
+    // one bounded action: a table with one row past the bound is too big,
+    // and collecting that row is how the guard sees it (at the Int.MaxValue
+    // bound there is no room for the extra row, and no JVM array for it)
+    val maxWords = QueryConf.bpeMaxWords(s)
+    val table = termStream(docs)
       .groupBy($"term").agg(count(lit(1)).as("c"))
       .filter($"c" >= minCount)
-      .persist()
+      .limit(if (maxWords == Int.MaxValue) maxWords else maxWords + 1)
+      .collect()
+    require(table.length <= maxWords,
+      s"bpeMerges: more than $maxWords distinct words (after minCount=" +
+        s"$minCount) exceed ${QueryConf.BpeMaxWordsKey}=$maxWords — " +
+        "the driver-side merge loop would collect past driver heap. " +
+        "Raise --min-count (2 prunes the hapax noise that dominates " +
+        "web-scale word tables), raise the knob with more driver " +
+        "memory, or train on a curated sample.")
     val words: Array[(Array[String], Long)] =
-      try {
-        val nWords = wordTable.count()
-        val maxWords = QueryConf.bpeMaxWords(s)
-        require(nWords <= maxWords,
-          s"bpeMerges: $nWords distinct words (after minCount=" +
-            s"$minCount) exceed ${QueryConf.BpeMaxWordsKey}=$maxWords — " +
-            "the driver-side merge loop would collect past driver heap. " +
-            "Raise --min-count (2 prunes the hapax noise that dominates " +
-            "web-scale word tables), raise the knob with more driver " +
-            "memory, or train on a curated sample.")
-        wordTable.collect().map(r => (bpeSymbols(r.getString(0)), r.getLong(1)))
-      } finally wordTable.unpersist(blocking = false)
+      table.map(r => (bpeSymbols(r.getString(0)), r.getLong(1)))
     val merges = Seq.newBuilder[(Long, String, String, String, Long)]
     var vocab = words
     var rank = 1

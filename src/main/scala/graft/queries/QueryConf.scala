@@ -175,9 +175,10 @@ object QueryConf {
     * gate, d29b and the `bpetrain` verb all train there).
     * Heaps' law bounds the distinct-word table for prose, but a noisy
     * web crawl's "words" (URLs, base64, hash-mangled tokens) can push
-    * the constant past driver heap — the trainer counts the (cached)
-    * filtered table first and refuses loudly above this bound instead
-    * of dying in collect() (the ScaleBench heap-guard discipline).
+    * the constant past driver heap — the trainer collects the filtered
+    * table under a limit of this bound plus one row and refuses loudly
+    * when that row arrives, instead of dying in an unbounded collect()
+    * (the ScaleBench heap-guard discipline).
     * ~20M rows ≈ a few GiB of driver heap at typical word lengths. */
   val BpeMaxWordsKey = "spark.graft.bpe.maxwords"
   val DefaultBpeMaxWords = 20000000
@@ -205,7 +206,13 @@ object QueryConf {
     * clones privately; nothing shared is written, so there is nothing to
     * restore). Cloning (not `newSession()`) matters: the clone COPIES
     * runtime conf — an embedding application's runtime-set knobs (e.g.
-    * [[graft.Materialize.DirKey]]) stay in force inside the scope. */
+    * [[graft.Materialize.DirKey]]) stay in force inside the scope.
+    *
+    * A clone does not recompile the plan's generated code: the session
+    * runs with artifact isolation off ([[graft.GraftSession.local]]), so
+    * the clone resolves classes through its parent's classloader and hits
+    * the JVM's one code cache. A second scope over the same plan compiles
+    * nothing (CodegenCacheSpec). */
   def materializeWithConf(df: org.apache.spark.sql.DataFrame,
       key: String, value: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.GraftSqlBridge

@@ -12,7 +12,10 @@ package org.apache.spark.sql
   *     substitute: it resets runtime conf to the builder's initial
   *     options, so an embedding application's runtime-set knobs (e.g.
   *     `spark.graft.checkpoint.dir`) would silently vanish inside the
-  *     scope.
+  *     scope. The clone shares its parent's classloader (session-artifact
+  *     isolation is off in [[graft.GraftSession.local]]), so it reuses the
+  *     classes already compiled for the same plans instead of compiling
+  *     them again.
   *   - `Dataset.ofRows` — re-binds a logical plan onto the clone so the
   *     scoped frame plans/executes under the clone's conf, with no
   *     temp-view round-trip through the parent's (shared, mutable)

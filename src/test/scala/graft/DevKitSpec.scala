@@ -29,6 +29,24 @@ class DevKitSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(m)
   }
 
+  test("Meter: codegen compiles per run, none for a repeated plan") {
+    val m = new DevKit.Meter(spark)
+    // codegen inlines a primitive literal, so a literal no earlier plan
+    // in this JVM used makes a class that must be compiled
+    val nonce = System.nanoTime()
+    try {
+      def run(): DevKit.Reading = {
+        m.reset()
+        assert(spark.range(0, 100, 1, 2).selectExpr(s"id * ${nonce}L AS x")
+          .filter("x >= 0").count() == 100)
+        m.drain()
+      }
+      val (first, second) = (run(), run())
+      assert(first.compiles >= 1, first)
+      assert(second.compiles == 0, second)
+    } finally spark.sparkContext.removeSparkListener(m)
+  }
+
   test("knob reader: k=v and label=value grammars, unknown keys refused") {
     val k = DevKit.Knobs(keys = Set("cells", "rounds"))
     assert(k.kv(Seq("cells=80", "rounds=3")) == Map("cells" -> 80, "rounds" -> 3))
